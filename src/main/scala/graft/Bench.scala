@@ -176,6 +176,26 @@ object Bench {
     (sb.toString, sorted.length - included)
   }
 
+  /** Times one run of a query into `samples`, or records the query in
+    * `failed` when the run throws: a failed run yields no sample, so it
+    * can never enter the min as a fast one. */
+  private[graft] def sample(name: String, run: => Any,
+      samples: scala.collection.mutable.Map[String, List[Double]],
+      failed: scala.collection.mutable.Set[String]): Option[Double] = {
+    val t = System.nanoTime()
+    try {
+      run
+      val sec = (System.nanoTime() - t) / 1e9
+      samples(name) = sec :: samples.getOrElse(name, Nil)
+      Some(sec)
+    } catch { case _: Throwable => failed += name; None }
+  }
+
+  /** `"failed_queries":[…],` for the result lines, names sorted. */
+  private[graft] def failedQueriesField(failed: Iterable[String]): String =
+    failed.toSeq.sorted.map("\"" + _ + "\"")
+      .mkString("\"failed_queries\":[", ",", "],")
+
   /** `calibration_sec` headline of a previous bench artifact (this
     * program's own compact line, or the driver's re-serialized round
     * wrap — both spacings), or None when absent (pre-r16 artifacts)
@@ -440,6 +460,7 @@ object Bench {
     if (!isSubset) System.err.println(
       f"[bench] calibration probe (before): $calBefore%.2f s")
     val samples = scala.collection.mutable.Map[String, List[Double]]()
+    val failed = scala.collection.mutable.Set[String]()
     def inBudget: Boolean = (System.nanoTime() - t0) / 1e9 < budgetSec
     // Spread = second-smallest / smallest sample: "is the min
     // reproducible?" — the question that decides whether the reported
@@ -470,9 +491,10 @@ object Bench {
       // (budget cut pass 2 short) or spread > SpreadThresh — so the
       // remaining budget buys variance where variance exists instead
       // of a third sample of a stable 0.2 s query.
+      val failedBefore = failed.size
       val pass = names.filter { case (n, _) =>
-        round <= 2 || samples.getOrElse(n, Nil).size < 2 ||
-          spreadOf(n) > SpreadThresh
+        !failed.contains(n) && (round <= 2 ||
+          samples.getOrElse(n, Nil).size < 2 || spreadOf(n) > SpreadThresh)
       }
       if (pass.isEmpty) { round = 7 } // all stable — stop early
       else {
@@ -482,13 +504,14 @@ object Bench {
         while (it.hasNext && (round == 1 || inBudget)) {
           val (name, fn) = it.next()
           dropCheckpoints(spark) // session hygiene OUTSIDE the timed window
-          val t = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          val sec = (System.nanoTime() - t) / 1e9
-          samples(name) = sec :: samples.getOrElse(name, Nil)
-          System.err.println(f"[bench] r$round $name: $sec%.1f s")
+          sample(name, fn(spark, sfDir).count(), samples, failed) match {
+            case Some(sec) =>
+              System.err.println(f"[bench] r$round $name: $sec%.1f s")
+            case None => System.err.println(s"[bench] r$round $name: FAILED")
+          }
         }
-        if (!it.hasNext && pass.size == names.size) fullPasses += 1
+        if (!it.hasNext && pass.size + failedBefore == names.size)
+          fullPasses += 1
         round += 1
       }
     }
@@ -503,7 +526,7 @@ object Bench {
       case s => Some(s.min)
     }
     val hostLoadAfter = HostLoad.loadavg()
-    val results = names.map { case (name, _) =>
+    val results = names.collect { case (name, _) if !failed.contains(name) =>
       val runs = samples(name).reverse
       System.err.println(f"[bench] $name: ${runs.min}%.1f s (runs: " +
         runs.map(s => f"$s%.1f").mkString(", ") + ")")
@@ -600,7 +623,8 @@ object Bench {
     // either way. Derived, not separately measured: the builds are
     // already surfaced per artifact in memo_build_sec.
     val coldTotal = total + memoByArtifact.values.sum
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"warmup_sf0001_sec":${r3(warmupSec)},"timed_runs":$fullPasses,"samples_min":${if (sampleCounts.isEmpty) 0 else sampleCounts.min},"samples_max":${if (sampleCounts.isEmpty) 0 else sampleCounts.max},"noisy_spread_gt_${SpreadThresh}":$residualNoisy,"memo_build_sec":$memoSec,"memo_build_by_query":$memoByQuery,"cold_total_sec":${r3(coldTotal)}$totalDelta$subsetField,"sha":"${GitStamp.sha}",$hostFields,"agg":"min","interleaved":true,"adaptive_passes":true,"sf":"$sfDir"}"""
+    val failedField = failedQueriesField(failed)
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,$failedField"warmup_sf0001_sec":${r3(warmupSec)},"timed_runs":$fullPasses,"samples_min":${if (sampleCounts.isEmpty) 0 else sampleCounts.min},"samples_max":${if (sampleCounts.isEmpty) 0 else sampleCounts.max},"noisy_spread_gt_${SpreadThresh}":$residualNoisy,"memo_build_sec":$memoSec,"memo_build_by_query":$memoByQuery,"cold_total_sec":${r3(coldTotal)}$totalDelta$subsetField,"sha":"${GitStamp.sha}",$hostFields,"agg":"min","interleaved":true,"adaptive_passes":true,"sf":"$sfDir"}"""
     // The driver's tail capture clipped the FRONT of the full line in
     // round 6 (17 of 85 per-query timings lost) — persist the complete
     // per-query map as its own artifact so it survives any stdout
@@ -648,11 +672,12 @@ object Bench {
     val pre =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":"""
     def post(omitted: Int) =
-      s""","queries_omitted":$omitted,"n_queries":${results.size},"cold_total_sec":${r3(coldTotal)}$compactDelta$subsetField,"sha":"${GitStamp.sha}",$hostFields,"sf":"$sfDir"}"""
+      s""","queries_omitted":$omitted,"n_queries":${results.size},$failedField"cold_total_sec":${r3(coldTotal)}$compactDelta$subsetField,"sha":"${GitStamp.sha}",$hostFields,"sf":"$sfDir"}"""
     // reserve 3 digits for the omitted count before fitting
     val qBudget = MaxFinalLineChars - pre.length - post(999).length
     val (qFit, omitted) = fitQueries(results.toSeq, qBudget)
     println(pre + qFit + post(omitted))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

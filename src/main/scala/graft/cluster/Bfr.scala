@@ -1,9 +1,8 @@
 package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoder, Encoders}
+import scala.collection.mutable
 
 /** BFR (Bradley–Fayyad–Reina) chunked clustering — the reference's
   * Assignment5/bfr.py DS/CS/RS loop on Spark.
@@ -17,13 +16,15 @@ import org.apache.spark.sql.{Encoder, Encoders}
   *  - final outliers are the surviving RS points, labeled −1
   *    (bfr.py:443-444).
   *
-  * Spark shape: the data never lands on the driver — each chunk is
-  * assigned map-side against broadcast summaries ([[StatsAgg]], a typed
-  * `Aggregator`, reduces per-cluster deltas in one shuffle); only
-  * summaries (k×d stats) and the RS set (bounded by construction: RS
-  * holds only points no summary absorbs, re-clustered every chunk) reach
-  * the driver. Chunking emulates the reference's one-file-per-round scan
-  * (S4) via vec_id ranges.
+  * Spark shape: the data never lands on the driver, and every step is
+  * ONE job with no Exchange — a `mapPartitions` that folds its
+  * partition into per-cluster partial summaries (plus, in a chunk
+  * round, the bounded smallest-id RS buffer), collected and merged on
+  * the driver in partition-index order. Only summaries (k×d stats) and
+  * the RS set (bounded by [[RsCap]]) reach the driver. Chunking
+  * emulates the reference's one-file-per-round scan (S4) via vec_id
+  * ranges; the final labels are one more map over the points, which
+  * replays each round's frozen decisions ([[Fit]]).
   */
 object Bfr {
 
@@ -34,28 +35,24 @@ object Bfr {
   val CsIdOffset = 100
 
   case class CStats(n: Long, sum: Array[Double], sumsq: Array[Double]) {
-    def add(p: Array[Double]): CStats = {
-      val s2 = sum.clone(); val q2 = sumsq.clone()
-      var i = 0
-      while (i < p.length) { s2(i) += p(i); q2(i) += p(i) * p(i); i += 1 }
-      CStats(n + 1, s2, q2)
-    }
     def merge(o: CStats): CStats =
       CStats(n + o.n,
         sum.zip(o.sum).map { case (a, b) => a + b },
         sumsq.zip(o.sumsq).map { case (a, b) => a + b })
-    def centroid: Array[Double] = sum.map(_ / n)
-    /** Per-dim stddev; σ = 0 (or negative variance from fp noise) → 1,
-      * the reference's divide-by-1 quirk. */
-    def sigma: Array[Double] = {
-      val c = centroid
-      sumsq.indices.map { i =>
+    /** (centroid, σ), computed once per summary per round for the
+      * per-point Mahalanobis loops. σ = 0 (or negative variance from
+      * fp noise) → 1, the reference's divide-by-1 quirk. */
+    def frozen: Frozen = {
+      val c = sum.map(_ / n)
+      Frozen(c, sumsq.indices.map { i =>
         val v = sumsq(i) / n - c(i) * c(i)
         if (v <= 0) 1.0 else math.sqrt(v)
-      }.toArray
+      }.toArray)
     }
+  }
+
+  case class Frozen(c: Array[Double], sg: Array[Double]) {
     def mahalanobis(p: Array[Double]): Double = {
-      val c = centroid; val sg = sigma
       var acc = 0.0; var i = 0
       while (i < p.length) {
         val z = (p(i) - c(i)) / sg(i); acc += z * z; i += 1
@@ -64,68 +61,40 @@ object Bfr {
     }
   }
 
-  /** Typed Aggregator producing N/SUM/SUMSQ per group (SURVEY A10) —
-    * partial aggregation + commutative merge, so stats never require
-    * materializing member lists (the reference's reduceByKey list-concat
-    * anti-pattern, bfr.py:70-73). */
-  object StatsAgg extends Aggregator[Array[Double], CStats, CStats] {
-    def zero: CStats =
-      CStats(0L, Array.fill(Dim)(0.0), Array.fill(Dim)(0.0))
-    def reduce(b: CStats, a: Array[Double]): CStats = b.add(a)
-    def merge(b1: CStats, b2: CStats): CStats = b1.merge(b2)
-    def finish(r: CStats): CStats = r
-    def bufferEncoder: Encoder[CStats] = Encoders.product[CStats]
-    def outputEncoder: Encoder[CStats] = Encoders.product[CStats]
+  /** Mutable N/SUM/SUMSQ — one per cluster per partition, folded in
+    * place (no per-row array copies). */
+  private final class Acc(dim: Int) {
+    var n = 0L
+    val sum, sumsq = new Array[Double](dim)
+    def add(p: Array[Double]): Unit = {
+      var i = 0
+      while (i < p.length) { sum(i) += p(i); sumsq(i) += p(i) * p(i); i += 1 }
+      n += 1
+    }
+    def result: CStats = CStats(n, sum, sumsq)
   }
 
-  /** Per-cluster stats PLUS the bounded smallest-id retained points in
-    * ONE pass (VERDICT r16 item 5 — the chunk loop ran a stats
-    * aggregate and then a SECOND full pass over the tagged chunk just
-    * to fetch the unassigned points, two cluster barriers per chunk at
-    * any scale). The value carries its own cluster id so the −1
-    * (unassigned) group also accumulates its points, bounded to the
-    * `cap` smallest ids (the only ids any RS decision can ever use:
-    * the caller keeps at most `budget ≤ cap` smallest, and the
-    * overflow cutoff is the budget-th smallest — both inside the
-    * buffer by construction). Assigned groups contribute stats only —
-    * their point list stays empty, so per-group buffers stay k×d-
-    * sized. The 2×cap append-then-compact keeps reduce amortized
-    * O(log cap) per retained row. */
-  private[cluster] class StatsRsAgg(cap: Int)
-    extends Aggregator[(Int, Long, Array[Double]),
-      (CStats, Seq[(Long, Array[Double])]),
-      (CStats, Seq[(Long, Array[Double])])] {
-    private def shrink(v: Seq[(Long, Array[Double])], hard: Boolean)
-    : Seq[(Long, Array[Double])] =
-      if (v.length >= (if (hard) cap + 1 else 2 * math.max(cap, 1)))
-        v.sortBy(_._1).take(cap)
-      else v
-    def zero: (CStats, Seq[(Long, Array[Double])]) =
-      (StatsAgg.zero, Vector.empty)
-    def reduce(b: (CStats, Seq[(Long, Array[Double])]),
-        a: (Int, Long, Array[Double]))
-    : (CStats, Seq[(Long, Array[Double])]) =
-      (b._1.add(a._3),
-        if (a._1 != -1 || cap == 0) b._2
-        else shrink(b._2 :+ ((a._2, a._3)), hard = false))
-    def merge(x: (CStats, Seq[(Long, Array[Double])]),
-        y: (CStats, Seq[(Long, Array[Double])]))
-    : (CStats, Seq[(Long, Array[Double])]) =
-      (x._1.merge(y._1), shrink(x._2 ++ y._2, hard = true))
-    def finish(r: (CStats, Seq[(Long, Array[Double])]))
-    : (CStats, Seq[(Long, Array[Double])]) =
-      (r._1, r._2.sortBy(_._1).take(cap))
-    def bufferEncoder
-    : Encoder[(CStats, Seq[(Long, Array[Double])])] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(CStats, Seq[(Long, Array[Double])])]()
-    def outputEncoder
-    : Encoder[(CStats, Seq[(Long, Array[Double])])] = bufferEncoder
+  /** One partition's per-key summaries (SURVEY A10: stats never
+    * materialize member lists — the reference's reduceByKey
+    * list-concat anti-pattern, bfr.py:70-73). */
+  private[graft] def foldBy[K](rows: Iterator[(K, Array[Double])])
+  : Seq[(K, CStats)] = {
+    val accs = mutable.LinkedHashMap.empty[K, Acc]
+    rows.foreach { case (k, p) =>
+      accs.getOrElseUpdate(k, new Acc(p.length)).add(p) }
+    accs.iterator.map { case (k, a) => (k, a.result) }.toSeq
   }
+
+  /** Per-key merge of partition partials in the order given — collect's
+    * partition-index order, so the float sums are reproducible. */
+  private[graft] def mergeInOrder[K](parts: Seq[(K, CStats)]): Map[K, CStats] =
+    parts.foldLeft(Map.empty[K, CStats]) { case (m, (k, st)) =>
+      m.updated(k, m.get(k).fold(st)(_.merge(st)))
+    }
 
   private val thresh = Alpha * math.sqrt(Dim)
 
-  private def d2(a: Array[Double], b: Array[Double]): Double = {
+  private[cluster] def d2(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
     while (i < a.length) { val dd = a(i) - b(i); acc += dd * dd; i += 1 }
     acc
@@ -155,29 +124,21 @@ object Bfr {
   private def localKMeans(pts: Seq[(Long, Array[Double])], k: Int,
       iters: Int = 5): (Map[Long, Int], Seq[(Int, Array[Double])]) = {
     if (pts.isEmpty) return (Map.empty, Seq.empty)
-    var cents: Seq[Array[Double]] = farthestFirstSeeds(pts, k)
-    def nearest(p: Array[Double]): Int =
-      cents.indices.minBy { i =>
-        var acc = 0.0; var j = 0
-        while (j < p.length) {
-          val dd = p(j) - cents(i)(j); acc += dd * dd; j += 1
-        }
-        (acc, i)
-      }
+    var cents = farthestFirstSeeds(pts, k).zipWithIndex.map(_.swap).toArray
     for (_ <- 1 to iters) {
-      val asg = pts.map { case (id, p) => (nearest(p), p) }
-      cents = cents.indices.map { i =>
+      val asg = pts.map { case (_, p) => (KMeans.nearest(p, cents), p) }
+      cents = cents.map { case (i, c) =>
         val mine = asg.filter(_._1 == i).map(_._2)
-        if (mine.isEmpty) cents(i)
+        if (mine.isEmpty) (i, c)
         else {
           val m = new Array[Double](Dim)
           mine.foreach(p => (0 until Dim).foreach(j => m(j) += p(j)))
-          m.map(_ / mine.size)
+          (i, m.map(_ / mine.size))
         }
-      }.toSeq
+      }
     }
-    (pts.map { case (id, p) => id -> nearest(p) }.toMap,
-      cents.zipWithIndex.map { case (c, i) => (i, c) })
+    (pts.map { case (id, p) => id -> KMeans.nearest(p, cents) }.toMap,
+      cents.toSeq)
   }
 
   /** Seed sample size for round-1 init: bounded, so the driver never
@@ -199,19 +160,6 @@ object Bfr {
     * regime end to end. */
   val RsCap = 4 * InitSampleCap
 
-  /** Per-cluster N/SUM/SUMSQ from an assignment frame — one typed-
-    * Aggregator shuffle; only k stats rows reach the driver. */
-  private def clusterStats(ptsDf: DataFrame, asg: DataFrame)
-  : Map[Int, CStats] = {
-    val s = ptsDf.sparkSession
-    import s.implicits._
-    ptsDf.join(asg, "vec_id")
-      .select(col("cluster"), col("vd")).as[(Int, Array[Double])]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(StatsAgg.toColumn.name("st"))
-      .collect().toMap
-  }
-
   /** One reference-format intermediate row: state AFTER a round
     * (Assignment5/bfr.py:427-432 header). */
   private[cluster] case class RoundStats(
@@ -219,110 +167,142 @@ object Bfr {
       nof_cluster_compression: Int, nof_point_compression: Long,
       nof_point_retained: Long)
 
-  /** Run BFR; returns assignments DataFrame (vec_id, cluster).
-    * Clusters: 0..K-1 = DS, ≥ 100 = CS, −1 = outlier. When
-    * `intermediateOut` is set, writes the reference's per-round
-    * DS/CS/RS stats CSV there (one row per chunk round,
-    * Assignment5/bfr.py:427-432). */
-  def run(s: SparkSession, d: String,
-      intermediateOut: Option[String] = None,
-      rsCap: Int = RsCap): DataFrame = {
-    import s.implicits._
-    val pts = KMeans.points(s, d)
-      .select(col("vec_id"), col("vd")).as[(Long, Array[Double])]
-      .localCheckpoint()
-    val total = pts.count()
-    val chunkSz = math.max(1L, (total + NumChunks - 1) / NumChunks)
+  /** Primary/secondary assignment: the closest DS summary, else the
+    * closest CS summary, each only within α·√d; −1 = unassigned. */
+  private def tag(p: Array[Double], ds: Array[(Int, Frozen)],
+      cs: Array[(Int, Frozen)]): Int =
+    Iterator(ds, cs).flatMap(_.map { case (c, f) => (f.mahalanobis(p), c) }
+      .minOption).find(_._1 < thresh).fold(-1)(_._2)
 
-    // Round 1, fully distributed: seed centroids come from a BOUNDED
-    // deterministic sample (InitSampleCap rows, hash-ordered top-k —
-    // farthest-first + local Lloyd on the sample, the reference's 20%
-    // sampling intent, bfr.py:255-259), then InitIters distributed
-    // Lloyd iterations over the whole chunk refine them. Only k×d
-    // centroids and k stats rows ever cross the driver — no data-sized
-    // collect anywhere in this loop.
-    // checkpointed: consumed by the sample scan, then once per init
-    // Lloyd iteration — without it each pass re-filters pts.
-    val chunk0 = pts.filter(col("vec_id") < chunkSz).toDF()
-      .localCheckpoint()
-    val sample = chunk0
+  private def frozenOf(m: Map[Int, CStats]): Array[(Int, Frozen)] =
+    m.toArray.sortBy(_._1).map { case (c, st) => (c, st.frozen) }
+
+  /** One partition's share of a chunk round: per-tag summaries (tag −1
+    * = unassigned) and the `cap` smallest-id unassigned points — every
+    * id an RS decision can use (it keeps at most `budget ≤ cap`). */
+  private[graft] case class Partial(stats: Seq[(Int, CStats)],
+      rs: Seq[(Long, Array[Double])])
+
+  private[graft] def foldChunk(rows: Iterator[(Long, Array[Double], Int)],
+      cap: Int): Partial = {
+    // max-heap on id: evicting the largest keeps the cap smallest
+    val rs = mutable.PriorityQueue.empty[(Long, Array[Double])](
+      Ordering.by[(Long, Array[Double]), Long](_._1))
+    val stats = foldBy(rows.map { case (id, p, c) =>
+      if (c == -1 && cap > 0) {
+        rs.enqueue((id, p)); if (rs.size > cap) rs.dequeue()
+      }
+      (c, p)
+    })
+    Partial(stats, rs.toSeq)
+  }
+
+  /** Driver-side merge of a round's partitions: per-tag summaries, and
+    * the `cap` smallest unassigned ids, ascending. */
+  private[graft] def mergeRound(parts: Seq[Partial], cap: Int)
+  : (Map[Int, CStats], Seq[(Long, Array[Double])]) =
+    (mergeInOrder(parts.flatMap(_.stats)),
+      parts.flatMap(_.rs).sortBy(_._1).take(cap))
+
+  /** One chunk round as ONE job: tag each point of [lo, hi) against the
+    * broadcast frozen DS/CS summaries and fold, in one pass. */
+  private[graft] def chunkRound(pts: DataFrame, lo: Long, hi: Long,
+      ds: Array[(Int, Frozen)], cs: Array[(Int, Frozen)], cap: Int)
+  : Seq[Partial] = {
+    val s = pts.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast((ds, cs))
+    pts.filter(col("vec_id") >= lo && col("vec_id") < hi)
+      .select(col("vec_id"), col("vd")).as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val (d, c) = bc.value
+        Iterator.single(foldChunk(
+          it.map { case (id, p) => (id, p, tag(p, d, c)) }, cap))
+      }
+      .collect().toSeq
+  }
+
+  /** A chunk round's decisions: the frozen summaries its points were
+    * tagged against, then its CS merges (j into i, in order). */
+  private[graft] case class Round(ds: Array[(Int, Frozen)],
+      cs: Array[(Int, Frozen)], merges: Seq[(Int, Int)])
+
+  /** A fitted BFR run: labels any point of the fitted frame in one map.
+    * Chunk 0 goes to its nearest final init-Lloyd centroid; a point of
+    * chunk r ≥ 1 is re-tagged against round r's frozen summaries, a CS
+    * tag then follows the merges of rounds r.. in order, and an
+    * unassigned point is −1 (RS survivor or overflow) unless `created`
+    * moved it from RS into CS `c` in round r. Ids ≥ `total` belong to no
+    * chunk and get no label. */
+  private[graft] case class Fit(chunkSz: Long, total: Long,
+      cents0: Array[(Int, Array[Double])], rounds: Seq[Round],
+      created: Map[Long, (Int, Int)], stats: Seq[RoundStats]) {
+    /** CS id `c` as tagged or issued in round `r` → its final id. The
+      * remap is composed round by round, never global: a merge frees an
+      * id and a later round may issue it again to a new cluster. */
+    private val mergesFrom =
+      rounds.indices.map(k => rounds.drop(k).flatMap(_.merges))
+    private def settle(r: Int, c: Int): Int =
+      mergesFrom(r - 1).foldLeft(c) { case (l, (j, i)) =>
+        if (l == j) i else l }
+
+    def label(id: Long, p: Array[Double]): Option[Int] =
+      if (id < chunkSz) Some(KMeans.nearest(p, cents0))
+      else if (id >= total) None
+      else {
+        val r = (id / chunkSz).toInt; val rd = rounds(r - 1)
+        Some(tag(p, rd.ds, rd.cs) match {
+          case -1 => created.get(id).fold(-1) { case (rr, c) => settle(rr, c) }
+          case c if c >= CsIdOffset => settle(r, c)
+          case c => c
+        })
+      }
+  }
+
+  /** Fit BFR over a (vec_id, vd, …) frame; returns the frame
+    * checkpointed, for the final labelling map, and the fit. */
+  private def fit(points: DataFrame, rsCap: Int): (DataFrame, Fit) = {
+    val s = points.sparkSession
+    import s.implicits._
+    // checkpoint and count in ONE job: a lazy local checkpoint
+    // materializes in the first job that reads it
+    val pts = points.localCheckpoint(eager = false)
+    val total = pts.queryExecution.toRdd.count()
+    val chunkSz = math.max(1L, (total + NumChunks - 1) / NumChunks)
+    // Round 1: seed centroids come from a BOUNDED deterministic sample
+    // (InitSampleCap rows, hash-ordered top-k — farthest-first + local
+    // Lloyd on the sample, the reference's 20% sampling intent,
+    // bfr.py:255-259), then InitIters distributed Lloyd iterations over
+    // the whole chunk refine them. Only k×d centroids and k stats rows
+    // ever cross the driver — no data-sized collect anywhere.
+    val chunk0 = pts.filter(col("vec_id") < chunkSz)
+    val sample = chunk0.select(col("vec_id"), col("vd"))
       .orderBy(hash(col("vec_id")), col("vec_id"))
       .limit(InitSampleCap)
       .as[(Long, Array[Double])].collect().toSeq
-    val seeds = localKMeans(sample, K)._2
-    val asg0 = KMeans.lloydOn(chunk0, K, InitIters, Some(seeds))
-      .localCheckpoint()
-    var ds: Map[Int, CStats] = clusterStats(chunk0, asg0)
+    val cents0 = KMeans.lloydCentroids(chunk0, K, InitIters,
+      Some(localKMeans(sample, K)._2)).toArray
+    var ds: Map[Int, CStats] = KMeans.foldNearest(chunk0, cents0.toSeq)
     var cs: Map[Int, CStats] = Map.empty
     var rs: Seq[(Long, Array[Double])] = Seq.empty
-    var assignments: DataFrame = asg0
-    val rounds = scala.collection.mutable.ArrayBuffer(
-      roundStats(1, ds, cs, rs))
-
+    val rounds = mutable.ArrayBuffer.empty[Round]
+    val created = mutable.Map.empty[Long, (Int, Int)]
+    val stats = mutable.ArrayBuffer(roundStats(1, ds, cs, rs))
     for (chunk <- 1 until NumChunks) {
       val lo = chunk * chunkSz; val hi = math.min(total, lo + chunkSz)
-      val part = pts.filter(col("vec_id") >= lo && col("vec_id") < hi)
-      val bcDs = s.sparkContext.broadcast(ds)
-      val bcCs = s.sparkContext.broadcast(cs)
-      // Map-side primary/secondary assignment (DS first, then CS).
-      val tagged = part.map { case (id, p) =>
-        val dsBest = bcDs.value.map { case (c, st) =>
-          (st.mahalanobis(p), c) }.minOption.getOrElse((Double.MaxValue, -1))
-        if (dsBest._1 < thresh) (id, p, dsBest._2)
-        else {
-          val csBest = bcCs.value.map { case (c, st) =>
-            (st.mahalanobis(p), c) }.minOption.getOrElse((Double.MaxValue, -1))
-          if (csBest._1 < thresh) (id, p, csBest._2) else (id, p, -1)
-        }
-      }.localCheckpoint()
-      // Stats deltas AND the bounded RS candidate points via ONE typed
-      // aggregate — one shuffle, one pass over the tagged chunk
-      // (VERDICT r16 item 5: the previous loop ran this stats pass and
-      // then re-scanned tagged with a collect — or an orderBy+limit —
-      // just to fetch the unassigned points: a second chunk-sized pass
-      // and driver barrier per chunk). The −1 group's stats N is the
-      // overflow count; its bounded buffer holds the ≤ rsCap smallest
-      // ids, which is every id the RS decision below can use.
-      val deltas = tagged
-        .map { case (id, p, c) => (c, id, p) }
-        .groupByKey(_._1)
-        .agg(new StatsRsAgg(rsCap).toColumn.name("st"))
-        .collect()
-      deltas.filter(_._1 >= 0).foreach { case (c, (st, _)) =>
+      val fDs = frozenOf(ds); val fCs = frozenOf(cs)
+      val (deltas, unPts) =
+        mergeRound(chunkRound(pts, lo, hi, fDs, fCs, rsCap), rsCap)
+      deltas.foreach { case (c, st) =>
         if (c >= CsIdOffset) cs = cs.updated(c, cs(c).merge(st))
-        else ds = ds.updated(c, ds(c).merge(st))
+        else if (c >= 0) ds = ds.updated(c, ds(c).merge(st))
       }
-      val un = deltas.collectFirst { case (-1, v) => v }
-      val unCount = un.map(_._1.n).getOrElse(0L)
-      // smallest-id unassigned points, ascending (deterministic — the
-      // old collect path appended them in partition order; RS order
-      // only feeds the driver Lloyd, which re-sorts by id)
-      val unPts = un.map(_._2).getOrElse(Seq.empty)
-      assignments = assignments.unionByName(
-        tagged.filter(_._3 >= 0).map { case (id, _, c) => (id, c) }
-          .toDF("vec_id", "cluster"))
       // RS grows by the unassigned, but the driver buffer is hard-
-      // bounded at RsCap: normal data never comes close (RS shrinks
-      // every round via re-clustering), and when an adversarial chunk
-      // would overflow it we keep the `budget` smallest ids
-      // (deterministic) and tag the rest outliers immediately —
-      // RS stays O(1) w.r.t. input size, matching the file's
-      // no-data-sized-collect contract. The outlier arm is LAZY: it
-      // reads the tagged checkpoint when assignments is finally
-      // evaluated, costing no job here.
-      val budget = rsCap - rs.size
-      if (unCount == 0L) ()
-      else if (unCount <= budget)
-        rs = rs ++ unPts // complete: unCount ≤ budget ≤ rsCap = cap
-      else {
-        val kept = if (budget > 0) unPts.take(budget) else Seq.empty
-        val cutoff = kept.lastOption.map(_._1).getOrElse(Long.MinValue)
-        rs = rs ++ kept
-        assignments = assignments.unionByName(
-          tagged.filter(t => t._3 == -1 && t._1 > cutoff)
-            .map { case (id, _, _) => (id, -1) }
-            .toDF("vec_id", "cluster"))
-      }
+      // bounded at rsCap: when a chunk would overflow it, the `budget`
+      // smallest ids stay (deterministic) and the rest are outliers
+      // at once — RS stays O(1) w.r.t. input size. unPts holds every
+      // unassigned point whenever they all fit (count ≤ budget ≤ cap).
+      rs = rs ++ unPts.take(rsCap - rs.size)
       if (rs.size > 2 * K) {
         val asg = localKMeans(rs, math.max(K, rs.size / 2))._1
         val groups = rs.groupBy { case (id, _) => asg(id) }
@@ -330,49 +310,55 @@ object Bfr {
         val nextCsId = (cs.keys ++ Seq(CsIdOffset - 1)).max + 1
         multi.values.zipWithIndex.foreach { case (ps, i) =>
           cs = cs.updated(nextCsId + i,
-            ps.foldLeft(StatsAgg.zero)((b, p) => b.add(p._2)))
-          assignments = assignments.unionByName(
-            ps.map { case (id, _) => (id, nextCsId + i) }
-              .toDF("vec_id", "cluster"))
+            foldBy(ps.iterator.map(p => (i, p._2))).head._2)
+          ps.foreach { case (id, _) => created(id) = (chunk, nextCsId + i) }
         }
         rs = single.values.flatten.toSeq
       }
       // Merge CS clusters whose centroids fall within each other's
-      // Mahalanobis threshold.
-      var merged = true
-      while (merged && cs.size > 1) {
-        merged = false
+      // Mahalanobis threshold, one pair at a time, smallest ids first.
+      val merges = mutable.ArrayBuffer.empty[(Int, Int)]
+      Iterator.continually {
+        val fz = cs.map { case (c, st) => c -> st.frozen }
         val ids = cs.keys.toSeq.sorted
-        val pairs = for (i <- ids; j <- ids if i < j) yield (i, j)
-        pairs.find { case (i, j) =>
-          cs(i).mahalanobis(cs(j).centroid) < thresh ||
-            cs(j).mahalanobis(cs(i).centroid) < thresh
-        } match {
-          case Some((i, j)) =>
-            cs = cs.updated(i, cs(i).merge(cs(j))) - j
-            assignments = assignments.withColumn("cluster",
-              when(col("cluster") === j, i).otherwise(col("cluster")))
-            merged = true
-          case None => ()
-        }
+        (for (i <- ids.iterator; j <- ids.iterator if i < j) yield (i, j))
+          .find { case (i, j) => fz(i).mahalanobis(fz(j).c) < thresh ||
+            fz(j).mahalanobis(fz(i).c) < thresh }
+      }.takeWhile(_.isDefined).flatten.foreach { case (i, j) =>
+        cs = cs.updated(i, cs(i).merge(cs(j))) - j
+        merges += (j -> i)
       }
-      // no per-chunk checkpoint: assignments is a LINEAR accumulation
-      // (single consumer, never re-read inside the loop) whose union
-      // arms are all checkpointed `tagged` derivatives, so the plan is
-      // bounded by NumChunks and the one final evaluation reads
-      // checkpoint blocks — checkpointing here only added a job per
-      // chunk.
-      rounds += roundStats(chunk + 1, ds, cs, rs)
+      rounds += Round(fDs, fCs, merges.toSeq)
+      stats += roundStats(chunk + 1, ds, cs, rs)
     }
+    (pts, Fit(chunkSz, total, cents0, rounds.toSeq, created.toMap, stats.toSeq))
+  }
+
+  /** Run BFR over a (vec_id, vd) frame; returns assignments (vec_id,
+    * cluster). Clusters: 0..K-1 = DS, ≥ 100 = CS, −1 = outlier. When
+    * `intermediateOut` is set, writes the reference's per-round
+    * DS/CS/RS stats CSV there (one row per chunk round,
+    * Assignment5/bfr.py:427-432). */
+  def runOn(points: DataFrame, intermediateOut: Option[String] = None,
+      rsCap: Int = RsCap): DataFrame = {
+    val s = points.sparkSession
+    import s.implicits._
+    val (pts, f) = fit(points.select(col("vec_id"), col("vd")), rsCap)
     intermediateOut.foreach { path =>
       graft.sources.Sinks.csvWithHeader(
-        s.createDataFrame(rounds.toSeq).coalesce(1), path)
+        s.createDataFrame(f.stats).coalesce(1), path)
     }
-    // Final: surviving RS points are outliers (−1).
-    val outliers = rs.map { case (id, _) => (id, -1) }
+    val bc = s.sparkContext.broadcast(f)
+    pts.as[(Long, Array[Double])]
+      .flatMap { case (id, p) => bc.value.label(id, p).map((id, _)) }
       .toDF("vec_id", "cluster")
-    assignments.unionByName(outliers)
   }
+
+  /** [[runOn]] over `embeddings`. */
+  def run(s: SparkSession, d: String,
+      intermediateOut: Option[String] = None,
+      rsCap: Int = RsCap): DataFrame =
+    runOn(KMeans.points(s, d), intermediateOut, rsCap)
 
   private def roundStats(round: Int, ds: Map[Int, CStats],
       cs: Map[Int, CStats], rs: Seq[(Long, Array[Double])]): RoundStats =
@@ -401,21 +387,17 @@ object Bfr {
   }
 
   /** Variance fraction a cluster assignment explains
-    * (R² = 1 − SSE_within/SSE_total) from one summary-sized
-    * sufficient-statistics aggregate — k stats rows to the driver,
-    * never data. */
-  private def r2Of(pts: DataFrame, asg: DataFrame): Double = {
-    val stats = clusterStats(pts, asg)
+    * (R² = 1 − SSE_within/SSE_total) from its per-cluster summaries. */
+  private def r2(stats: Seq[CStats]): Double =
     if (stats.isEmpty) 0.0
     else {
       def sse(st: CStats): Double =
         st.sum.indices.map { i =>
           st.sumsq(i) - st.sum(i) * st.sum(i) / st.n }.sum
-      val within = stats.values.map(sse).sum
-      val total = sse(stats.values.reduce(_ merge _))
+      val within = stats.map(sse).sum
+      val total = sse(stats.reduce(_ merge _))
       if (total <= 0) 0.0 else 1.0 - within / total
     }
-  }
 
   /** q41's accuracy gate: BFR must retain at least this fraction of
     * the variance-explained (R²) that the HASH-VERIFIED q40 Lloyd
@@ -448,27 +430,29 @@ object Bfr {
     * labels (the reference autograder's metric, visibility only —
     * see [[BfrR2RatioFloor]] for why it would gate on noise here). */
   def bfrClusters(s: SparkSession, d: String): DataFrame = {
-    val asg = run(s, d).localCheckpoint() // feeds sizes + both audits
-    val counts = asg
-      .join(graft.Tables.embeddings(s, d).select(col("vec_id"), col("label")),
-        "vec_id")
-      .groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-    val nmi = nmiFromCounts(counts)
-    val pts = KMeans.points(s, d).localCheckpoint() // both R² passes
-    val r2 = r2Of(pts, asg.filter(col("cluster") =!= -1))
-    val r2Base = r2Of(pts, KMeans.lloydOn(pts, K, KMeans.LloydIters))
-    require(r2 >= BfrR2RatioFloor * r2Base,
-      f"q41 accuracy gate: BFR explains R² = $r2%.4f, below " +
+    import s.implicits._
+    // one checkpoint feeds BFR, both audits and the baseline Lloyd
+    val (pts, f) = fit(KMeans.points(s, d, "label"), RsCap)
+    val bc = s.sparkContext.broadcast(f)
+    // sizes, NMI counts and BFR's R² from ONE (cluster, label) fold
+    val cells = mergeInOrder(pts.as[(Long, Array[Double], Int)]
+      .mapPartitions(it => foldBy(it.flatMap { case (id, p, l) =>
+        bc.value.label(id, p).map(c => ((c, l), p)) }).iterator)
+      .collect().toSeq).toSeq.sortBy(_._1)
+    val nmi = nmiFromCounts(cells.map { case ((c, l), st) => (c, l, st.n) })
+    val byCluster = mergeInOrder(cells.map { case ((c, _), st) => (c, st) })
+      .toSeq.sortBy(_._1)
+    val r2Bfr = r2(byCluster.collect { case (c, st) if c != -1 => st })
+    val r2Base = r2(KMeans.foldNearest(pts,
+      KMeans.lloydCentroids(pts, K, KMeans.LloydIters)).toSeq.sortBy(_._1)
+      .map(_._2))
+    require(r2Bfr >= BfrR2RatioFloor * r2Base,
+      f"q41 accuracy gate: BFR explains R² = $r2Bfr%.4f, below " +
         f"$BfrR2RatioFloor × the verified-Lloyd baseline $r2Base%.4f " +
         "— BFR lost its cluster structure")
-    asg
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("csize"))
-      .withColumn("r2", lit(math.floor(r2 * 1e4 + 0.5) / 1e4))
-      .withColumn("r2_kmeans", lit(math.floor(r2Base * 1e4 + 0.5) / 1e4))
-      .withColumn("nmi", lit(math.floor(nmi * 1e4 + 0.5) / 1e4))
-      .orderBy(col("cluster"))
+    def r4(v: Double) = math.floor(v * 1e4 + 0.5) / 1e4
+    byCluster.map { case (c, st) => (c, st.n, r4(r2Bfr), r4(r2Base), r4(nmi)) }
+      .toDF("cluster", "csize", "r2", "r2_kmeans", "nmi")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

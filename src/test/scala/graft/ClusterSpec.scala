@@ -28,20 +28,54 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("bfr recovers well-separated 64-d clusters (NMI > 0.8)") {
-    // BFR reads through KMeans.points/embeddings, so exercise its
-    // kernel pieces directly: stats merge + mahalanobis behavior.
+    import spark.implicits._
+    val data = blobs(1000, Bfr.K, Bfr.Dim)
+    val pts = data.map { case (id, v, _) => (id, v) }.toDF("vec_id", "vd")
+    val out = Bfr.runOn(pts).collect().map(r => r.getLong(0) -> r.getInt(1))
+    assert(out.length == data.size, "every vector labeled")
+    assert(out.map(_._1).distinct.length == out.length, "exactly once")
+    val byId = out.toMap
+    val nmi = TestUtil.nmi(data.map { case (id, _, _) => byId(id) },
+      data.map(_._3))
+    assert(nmi > 0.8, s"NMI $nmi")
+  }
+
+  test("bfr summary kernel: centroid, σ, Mahalanobis, σ = 0 quirk") {
     val p1 = Array.fill(64)(1.0)
     val p2 = Array.fill(64)(3.0)
-    val st = Bfr.StatsAgg.zero.add(p1).add(p2)
+    val st = Bfr.foldBy(Iterator(0 -> p1, 0 -> p2)).head._2
     assert(st.n == 2)
-    assert(st.centroid.forall(_ == 2.0))
+    val fz = st.frozen
+    assert(fz.c.forall(_ == 2.0))
     // variance = (1+9)/2 - 4 = 1 → σ = 1 per dim
-    assert(st.sigma.forall(s => math.abs(s - 1.0) < 1e-9))
+    assert(fz.sg.forall(s => math.abs(s - 1.0) < 1e-9))
     // distance of p1 from centroid: z = 1 per dim → sqrt(64) = 8
-    assert(math.abs(st.mahalanobis(p1) - 8.0) < 1e-9)
+    assert(math.abs(fz.mahalanobis(p1) - 8.0) < 1e-9)
     // σ = 0 → divide-by-1 quirk (reference bfr.py:144-147)
-    val degenerate = Bfr.StatsAgg.zero.add(p1).add(p1)
-    assert(degenerate.sigma.forall(_ == 1.0))
+    val degenerate = Bfr.foldBy(Iterator(0 -> p1, 0 -> p1)).head._2
+    assert(degenerate.frozen.sg.forall(_ == 1.0))
+  }
+
+  test("bfr labels follow CS merges round by round when an id is reissued") {
+    // round 1 tags a point into CS 101, then merges 101 into 100 —
+    // freeing the top id; round 2 reissues 101 to a new cluster built
+    // from an RS point. A single global 101 → 100 remap would relabel
+    // the new cluster too.
+    def fz(v: Double) = Bfr.Frozen(Array(v, v), Array(1.0, 1.0))
+    val fit = Bfr.Fit(chunkSz = 10, total = 30,
+      cents0 = Array(0 -> Array(0.0, 0.0)),
+      rounds = Seq(
+        Bfr.Round(Array.empty, Array(100 -> fz(0), 101 -> fz(100)),
+          Seq(101 -> 100)),
+        Bfr.Round(Array.empty, Array.empty, Seq.empty)),
+      created = Map(25L -> (2, 101)), stats = Seq.empty)
+    val far = Array(500.0, 500.0)
+    assert(fit.label(3L, far).contains(0), "chunk 0: nearest centroid")
+    assert(fit.label(15L, Array(100.0, 100.0)).contains(100),
+      "round-1 CS 101 follows the round-1 merge")
+    assert(fit.label(25L, far).contains(101), "the reissued id stays")
+    assert(fit.label(26L, far).contains(-1), "unassigned → outlier")
+    assert(fit.label(30L, far).isEmpty, "past the last chunk")
   }
 
   test("bfr end-to-end on embeddings: full coverage, DS ids 0..9, round stats") {
@@ -102,5 +136,27 @@ class ClusterSpec extends AnyFunSuite {
     }
     val w1 = wcss(1); val w5 = wcss(5)
     assert(w5 <= w1 * 1.0001, s"WCSS got worse: 1 iter $w1 → 5 iters $w5")
+  }
+
+  test("job budget: q40 builds in <= 7 jobs, q41 runs in <= 25, a BFR " +
+      "chunk round is 1 job") {
+    val q40 = SparkEntry.queries("q40_kmeans")
+    val q41 = SparkEntry.queries("q41_bfr")
+    val out = java.nio.file.Files.createTempDirectory("q41-jobs").toString
+    def q41Run(): Unit =
+      q41(spark, sfDir).write.mode("overwrite").parquet(out)
+    q41Run() // warm: cached table schemas, loaded classes
+    val (_, q40Jobs) = TestUtil.countJobs(spark)(q40(spark, sfDir))
+    assert(q40Jobs.size <= 7, q40Jobs.mkString("\n"))
+    val (_, q41Jobs) = TestUtil.countJobs(spark)(q41Run())
+    assert(q41Jobs.size <= 25, q41Jobs.mkString("\n"))
+    val pts = KMeans.points(spark, sfDir).localCheckpoint()
+    val ds = Bfr.foldBy(pts.collect().iterator.take(40).map(r =>
+      (r.getLong(0).toInt % 2, r.getSeq[Double](1).toArray)))
+      .map { case (c, st) => (c, st.frozen) }.toArray
+    val (parts, roundJobs) = TestUtil.countJobs(spark)(
+      Bfr.chunkRound(pts, 100L, 200L, ds, Array.empty, Bfr.RsCap))
+    assert(roundJobs.size == 1, roundJobs.mkString("\n"))
+    assert(parts.flatMap(_.stats).map(_._2.n).sum == 100L)
   }
 }

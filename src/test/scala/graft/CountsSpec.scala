@@ -330,6 +330,21 @@ class CountsSpec extends AnyFunSuite {
       None, "othersha0000").isEmpty)
   }
 
+  test("Bench.sample: a throwing query yields no sample, is named in " +
+      "failed_queries and stays out of the min") {
+    val samples = scala.collection.mutable.Map[String, List[Double]]()
+    val failed = scala.collection.mutable.Set[String]()
+    def stub: Long = throw new IllegalStateException("stub query failed")
+    assert(Bench.sample("q_ok", 7L, samples, failed).isDefined)
+    assert(Bench.sample("q_bad", stub, samples, failed).isEmpty)
+    assert(Bench.sample("q_ok", 7L, samples, failed).isDefined)
+    assert(samples.keySet == Set("q_ok") && samples("q_ok").size == 2)
+    assert(failed == Set("q_bad"))
+    assert(Bench.failedQueriesField(failed) ==
+      "\"failed_queries\":[\"q_bad\"],")
+    assert(Bench.failedQueriesField(Nil) == "\"failed_queries\":[],")
+  }
+
   test("Bench.parseCalibration reads only the headline probe field") {
     assert(Bench.parseCalibration(
       """{"calibration_sec":2.135,"calibration_sec_before":2.135,""" +

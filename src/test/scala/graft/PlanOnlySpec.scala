@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r14 item 2: plan-only construction (`spark.graft.planOnly`
@@ -18,30 +15,20 @@ class PlanOnlySpec extends AnyFunSuite {
 
   test("q87–q93 construction under planOnly runs zero Spark jobs " +
       "and keeps the checkpoint plan shape") {
-    val jobs = new AtomicInteger(0)
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        // the callsite-bearing stage names say WHAT ran; the optional
-        // description is usually absent for library-triggered jobs
-        seen.add(s"job ${j.jobId}: " +
-          j.stageInfos.map(_.name).mkString(" ~ "))
-      }
-    }
     // fresh memo state: a warm artifact would make q87/q89/q92
     // trivially jobless without exercising the planOnly build path
     Memo.clear(spark)
     spark.conf.set("spark.graft.planOnly", "true")
-    spark.sparkContext.addSparkListener(listener)
     try {
       val family = Seq("q87_item_cf", "q88_lm_quality",
         "q89_content_rec", "q90_delta_screen", "q91_ppr",
         "q92_hybrid_rec", "q93_cf_eval")
-      val plans = family.map { n =>
-        n -> SparkEntry.queries(n)(spark, sfDir).queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode)
-      }.toMap
+      val (plans, seen) = TestUtil.countJobs(spark) {
+        family.map { n =>
+          n -> SparkEntry.queries(n)(spark, sfDir).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode)
+        }.toMap
+      }
       // the memoized entries keep the materialized-artifact plan
       // shape: a lazy checkpoint dumps the same Scan ExistingRDD an
       // eager one does — only materialization is deferred
@@ -49,19 +36,12 @@ class PlanOnlySpec extends AnyFunSuite {
         n => assert(plans(n).contains("Scan ExistingRDD"),
           s"$n lost its checkpoint plan shape:\n${plans(n)}")
       }
-      // listener delivery is async, but any job was SUBMITTED
-      // synchronously during construction (first/collect/eager-cp all
-      // block), so its onJobStart is already queued — drain the bus
-      // deterministically before reading the counter
-      org.apache.spark.GraftSparkInternals
-        .waitUntilListenerBusEmpty(spark.sparkContext)
       // parquet SCHEMA INFERENCE is the one permitted job class: Spark
       // 4 reads footers in a tiny job per spark.read.parquet — the
       // irreducible metadata cost of knowing a source's schema, paid
       // before a plan can even name its columns. Estimates,
       // checkpoints, index collects, broadcast futures: all zero.
-      val offending = seen.toArray.map(_.toString)
-        .filterNot(_.contains("parquet at Tables.scala"))
+      val offending = seen.filterNot(_.contains("parquet at Tables.scala"))
       assert(offending.isEmpty,
         s"plan-only construction ran ${offending.length} non-schema " +
           s"Spark job(s): ${offending.mkString("; ")}")
@@ -71,7 +51,6 @@ class PlanOnlySpec extends AnyFunSuite {
       assert(Memo.buildSeconds(spark).isEmpty,
         "planOnly builds must bypass the memo cache")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.planOnly")
       // drop the planOnly-built artifacts: rec_cn's broadcast class
       // index is EMPTY under planOnly (a dump never executes it) and
@@ -83,26 +62,18 @@ class PlanOnlySpec extends AnyFunSuite {
   test("every ExplainDump-dumpable id constructs joblessly under " +
       "planOnly (VERDICT r15 item 7: the guarantee held on the " +
       "recommender family by pin and on the rest by convention)") {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.add(j.stageInfos.map(_.name).mkString(" ~ "))
-    }
     Memo.clear(spark)
     spark.conf.set("spark.graft.planOnly", "true")
-    spark.sparkContext.addSparkListener(listener)
     try {
-      // per-id accounting: one listener, the bus drained after each
-      // construction, so an offending job names the query that ran it
-      // instead of a 33-way "someone did"
+      // per-id accounting: the bus drained after each construction,
+      // so an offending job names the query that ran it instead of a
+      // 33-way "someone did"
       val offenders = ExplainDump.picks.map(_._1).flatMap { id =>
-        seen.clear()
-        ExplainDump.frameFor(id, spark, sfDir).queryExecution
-          .executedPlan // force full planning, same depth as a dump
-        org.apache.spark.GraftSparkInternals
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-        val jobs = seen.toArray.map(_.toString)
-          .filterNot(_.contains("parquet at Tables.scala"))
+        val (_, seen) = TestUtil.countJobs(spark) {
+          ExplainDump.frameFor(id, spark, sfDir).queryExecution
+            .executedPlan // force full planning, same depth as a dump
+        }
+        val jobs = seen.filterNot(_.contains("parquet at Tables.scala"))
         if (jobs.isEmpty) None
         else Some(s"$id -> ${jobs.mkString("; ")}")
       }
@@ -112,7 +83,6 @@ class PlanOnlySpec extends AnyFunSuite {
       assert(Memo.buildSeconds(spark).isEmpty,
         "planOnly builds must bypass the memo cache")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.graft.planOnly")
       Memo.clear(spark)
     }

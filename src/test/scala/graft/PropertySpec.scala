@@ -222,4 +222,37 @@ class PropertySpec extends AnyFunSuite {
       got == want
     })
   }
+
+  test("BFR chunk-round merge over any partitioning == brute force: " +
+      "RS buffer = the cap smallest unassigned ids, N = true counts") {
+    import graft.cluster.Bfr
+    // (distinct ids, a tag per id: −1 unassigned, DS 0/1, CS 100)
+    val rowsGen: Gen[Seq[(Long, Int)]] = for {
+      n <- Gen.choose(0, 60)
+      ids <- Gen.listOfN(n, Gen.chooseNum(0L, 10000L)).map(_.distinct)
+      allUnassigned <- Gen.oneOf(true, false)
+      tags <- Gen.listOfN(ids.size,
+        if (allUnassigned) Gen.const(-1) else Gen.oneOf(-1, 0, 1, 100))
+    } yield ids.zip(tags)
+    val gen = for {
+      rows <- rowsGen
+      nParts <- Gen.choose(1, 6) // partitions may come out empty
+      part <- Gen.listOfN(rows.size, Gen.choose(0, nParts - 1))
+      cap <- Gen.oneOf(Gen.const(0), Gen.const(1), Gen.choose(2, 12),
+        Gen.const(1000))
+    } yield (rows, nParts, part, cap)
+    check(Prop.forAll(gen) { case (rows, nParts, part, cap) =>
+      def vec(id: Long) = Array(id.toDouble, -id.toDouble)
+      val parts = (0 until nParts).map { k =>
+        Bfr.foldChunk(rows.zip(part).collect {
+          case ((id, t), `k`) => (id, vec(id), t) }.iterator, cap)
+      }
+      val (stats, rs) = Bfr.mergeRound(parts, cap)
+      val wantRs = rows.collect { case (id, -1) => id }.sorted.take(cap)
+      val wantN = rows.groupBy(_._2).map { case (t, v) => t -> v.size.toLong }
+      rs.map(_._1) == wantRs &&
+        rs.forall { case (id, p) => p.sameElements(vec(id)) } &&
+        stats.map { case (t, st) => t -> st.n } == wantN
+    })
+  }
 }

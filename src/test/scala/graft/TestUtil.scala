@@ -1,7 +1,34 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
 /** Shared test helpers. */
 object TestUtil {
+
+  /** Runs `body` under one `onJobStart` listener and returns its result
+    * with one line per Spark job it started: "job <id>: <stage names>"
+    * (the callsite-bearing stage names say WHAT ran; the optional
+    * description is usually absent for library-triggered jobs). Any
+    * job was SUBMITTED synchronously inside `body`, so its event is
+    * already queued: the bus is drained before the list is read. */
+  def countJobs[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(s"job ${j.jobId}: " +
+          j.stageInfos.map(_.name).mkString(" ~ "))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftSparkInternals
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      (out, seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** Normalized mutual information between two labelings (the
     * reference's grading metric for clustering, Assignment5 PDF §4.3). */
