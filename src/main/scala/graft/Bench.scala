@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Rows for the calibration probe (one partition per core) — sized
     * so the probe runs ~2 s at local[32] (measured 0.9 s/4G hashes on
@@ -7,25 +6,6 @@ object Bench {
     * long enough to average over scheduler jitter, short enough that
     * two probes cost <1% of the bench budget. */
   private val CalibrationRows = 8000000000L
-
-  /** Drop leaked localCheckpoint blocks: the iterative queries
-    * (LPA/CC/K-Means/BFR/IVF) localCheckpoint per round and nothing
-    * unpersists those RDDs, so over ~150 query executions the block
-    * manager fills and later queries degrade 3–8× (q33 measured 40 s
-    * polluted vs 6 s clean). Unpersisting between queries keeps each
-    * timing independent of session history. Memo-owned blocks are
-    * EXCLUDED: they back the shared recommender artifacts (bounded,
-    * dimension-sized), and localCheckpoint cut their lineage — an
-    * unpersisted memo block would be unrecoverable, and re-measuring
-    * the shared-artifact build per query would mis-state what a real
-    * session pays (the artifact reuse IS the design; the first
-    * querying pass pays the build). */
-  private def dropCheckpoints(spark: SparkSession): Unit = {
-    val keep = Memo.liveIds(spark)
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !keep(id) }
-      .values.foreach(_.unpersist(blocking = false))
-  }
 
   /** Previous round's headline total from a `bench_queries.json` body,
     * or None when it can't serve as a baseline: different SF (a local
@@ -213,10 +193,10 @@ object Bench {
     * self-comparison that trivially passes. Returns
     * (total, calibration if stamped, filename, generating sha if
     * stamped — the prev-side key for [[attributionFor]]'s
-    * committed-receipt tier). */
+    * committed-receipt tier — and `host_cpus` if stamped). */
   private[graft] def roundBaseline(root: java.nio.file.Path,
       sfDir: String, selfSha: String)
-  : Option[(Double, Option[Double], String, Option[String])] = {
+  : Option[(Double, Option[Double], String, Option[String], Option[Int])] = {
     import scala.jdk.CollectionConverters._
     val roundNum = "BENCH_r(\\d+)\\.json".r
     val rounds = try {
@@ -244,7 +224,9 @@ object Bench {
             "older rounds")
           None
         } else parsePrevTotal(txt, sfDir)
-          .map((_, parseCalibration(txt), p.getFileName.toString, sha))
+          .map((_, parseCalibration(txt), p.getFileName.toString, sha,
+            "\"host_cpus\":\\s*(\\d+)".r.findFirstMatchIn(txt)
+              .map(_.group(1).toInt)))
       } catch { case _: Throwable => None }
     }.headOption
   }
@@ -263,15 +245,25 @@ object Bench {
     * cancels the host term, so a raw move that normalizes to quiet
     * labels itself host drift instead of costing an interleaved
     * binary A/B (the StreamBench r14 trick, ported per VERDICT r15
-    * item 2). Returns a fragment with a leading comma, or "" when no
-    * usable prior round exists. Unit-tested (CountsSpec). */
+    * item 2). A baseline from a host with a different (or unstamped)
+    * core count is labelled `cross_host`: calibration scales with
+    * cores and the queries do not, so no normalization bridges it.
+    * Returns a fragment with a leading comma, or "" when no usable
+    * prior round exists. Unit-tested (CountsSpec). */
   private[graft] def roundDeltaFields(root: java.nio.file.Path,
       sfDir: String, total: Double, cal: Option[Double],
-      selfSha: String): String =
+      selfSha: String, hostCpus: Int = HostLoad.cpus): String =
     roundBaseline(root, sfDir, selfSha)
-      .map { case (pt, pCal, src, baseSha) =>
+      .map { case (pt, pCal, src, baseSha, baseCpus) =>
       val pct = (total - pt) / pt * 100.0
       val moved = math.abs(pct) >= 10.0
+      val crossHost = if (baseCpus.contains(hostCpus)) "" else {
+        val n = baseCpus.fold("null")(_.toString)
+        System.err.println(s"[bench] CROSS-HOST comparison: baseline " +
+          s"$src has host_cpus $n, this host has $hostCpus — the round " +
+          "delta compares hosts, not binaries")
+        s""","baseline_host_cpus":$n,"cross_host":true"""
+      }
       val calFields = (for (c <- cal; p <- pCal) yield {
         val calPct = (c - p) / p * 100.0
         val norm = ((total / c) - (pt / p)) / (pt / p) * 100.0
@@ -321,7 +313,8 @@ object Bench {
       }
       s""","prev_round_total_sec":${r3(pt)}""" +
         s""","delta_vs_prev_round_pct":${r3(pct)}""" +
-        s""","prev_round_source":"$src"""" + calFields + attribution
+        s""","prev_round_source":"$src"""" + crossHost + calFields +
+        attribution
     }.getOrElse {
       System.err.println(
         "[bench] no usable prior-round artifact (BENCH_r*.json " +
@@ -331,26 +324,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // same stance as Verify: bench what the gate verifies — the
-      // sessions this repo itself builds opt into the kernel rewrite
-      .config("spark.graft.autoKernel", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    // Optional subset (comma-separated query names): a targeted A/B of
+    // a few queries warms up and times only those; a round run leaves
+    // it unset and benches everything.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").toSet)
+    val names = SparkEntry.queries.toSeq
+      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Untimed warmup at the smallest SF: compiles each query's codegen
     // (same generated classes — plans differ only in file paths) and JITs
     // the hot paths, so the timed pass measures steady-state engine
@@ -382,7 +363,7 @@ object Bench {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutor(pool)
-      val fs = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val fs = names.map { case (name, fn) =>
         Future {
           val t = System.nanoTime()
           try fn(spark, warmDir).count() catch { case _: Throwable => () }
@@ -411,7 +392,7 @@ object Bench {
       // concurrently with the timed rounds after a timeout (on the
       // success path the queue is empty and this is equivalent)
       pool.shutdownNow()
-      dropCheckpoints(spark)
+      Sessions.dropCheckpoints(spark)
     }
     val warmupSec = (System.nanoTime() - t0) / 1e9
     // Three timed rounds, INTERLEAVED (full pass over every query, then
@@ -420,12 +401,6 @@ object Bench {
     // back-to-back runs of one query both land inside a bad window;
     // interleaving separates a query's samples by a whole pass, so the
     // min dodges any window shorter than ~1/3 of the bench.
-    // Optional local-iteration filter (comma-separated query names);
-    // the driver never sets it, so driver runs bench everything.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    val names = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // ---- fixed calibration probe (VERDICT r15 item 2, the batch twin
     // of StreamBench's null-op stream): a CPU-bound query with no I/O
     // — xxhash64 over an in-memory range, one partition per core —
@@ -503,7 +478,8 @@ object Bench {
         val it = pass.iterator
         while (it.hasNext && (round == 1 || inBudget)) {
           val (name, fn) = it.next()
-          dropCheckpoints(spark) // session hygiene OUTSIDE the timed window
+          // session hygiene OUTSIDE the timed window
+          Sessions.dropCheckpoints(spark)
           sample(name, fn(spark, sfDir).count(), samples, failed) match {
             case Some(sec) =>
               System.err.println(f"[bench] r$round $name: $sec%.1f s")

@@ -167,25 +167,10 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // plan-only construction: volume-gate estimates are skipped (the
-      // gates take their below-guard branch — the true plan at this
-      // SF) so dumping plans runs no estimate jobs (VERDICT r12 item 3)
-      .config("spark.graft.planOnly", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // plan-only construction: volume-gate estimates are skipped (the
+    // gates take their below-guard branch — the true plan at this SF)
+    // so dumping plans runs no estimate jobs (VERDICT r12 item 3)
+    val spark = Sessions.local(8, "spark.graft.planOnly" -> "true")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of representative queries\n\n")

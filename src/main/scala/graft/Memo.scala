@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rebuild (the builder is deterministic), so oracle comparisons are
   * unaffected. localCheckpoint CUTS LINEAGE — an unpersisted memo
   * block is unrecoverable — so session-hygiene sweeps that unpersist
-  * stray blocks (Bench.dropCheckpoints) must exclude [[liveIds]].
+  * stray blocks (Sessions.dropCheckpoints) must exclude [[liveIds]].
   */
 object Memo {
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of registered
   * queries (PLANS.md is maintained from this output).
   * Usage: runMain graft.PlanDump <sfDir> <query>[,<query>...] */
@@ -9,22 +7,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions.col
     // bounded-subgraph round inputs for the `_lpa_round`/`_cc_round`

@@ -355,23 +355,8 @@ object ScaleStress {
       .split(",").map(_.trim.toInt).toSeq.distinct.sorted
     require(factors.nonEmpty && factors.forall(_ > 1),
       s"SPARK_GRAFT_SCALE_FACTORS must be integers > 1, got $factors")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
 
     val dirs: Seq[(Int, String)] = factors.map(n => n -> s"target/scale$n")
     dirs.foreach { case (n, out) =>
@@ -495,18 +480,7 @@ object ScaleStress {
         SparkEntry.queries("q97_kcore")(spark, d)))
     val runs = allRuns.filter { case (n, _) => only.forall(_.contains(n)) }
 
-    def hygiene(): Unit = {
-      val keep = Memo.liveIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !keep(id) }
-        // BLOCKING: async unpersist let the next timed query start
-        // while the previous one's checkpoint blocks still held
-        // storage memory, squeezing its execution share — measured
-        // +62 s on q93-after-q92 at 30× (standalone probe: 68.9 s vs
-        // 132.8 s in-session)
-        .values.foreach(_.unpersist(blocking = true))
-    }
-    // Partitions stay at the session's 32 at EVERY scale — measured,
+    // Partitions stay at the session's `cpus` at EVERY scale — measured,
     // not assumed: a 32·N-partitions-at-N× variant was tried and
     // REJECTED (stage table showed s4_scoring unchanged → the growth
     // is not partial-agg spill; full-query times got worse from the
@@ -520,7 +494,7 @@ object ScaleStress {
     // binary A/B
     def time(fn: String => DataFrame, d: String)
     : (Double, Long, Double, Double) = {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       val lb = HostLoad.loadavg()
       val t = System.nanoTime()
       val rows = fn(d).count()
@@ -529,7 +503,7 @@ object ScaleStress {
 
     // warm: one untimed pass at base scale (codegen/JIT)
     runs.foreach { case (n, fn) =>
-      try { fn(base).count(); hygiene() } catch { case _: Throwable => () }
+      try { fn(base).count(); Sessions.dropCheckpoints(spark) } catch { case _: Throwable => () }
       System.err.println(s"[scale] warm $n done")
     }
     // interleaved min-of-2 per scale point
@@ -604,7 +578,7 @@ object ScaleStress {
     val runQ93Stages =
       only.forall(s => s.isEmpty || s.contains("q93_cf_eval"))
     if (runQ87Stages) for (pass <- 1 to 2; d <- points) {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       def timed[T](name: String)(f: => T): T = stageTimed(d, name)(f)
       val ui = timed("s1_ui_matrix")(
         Recommend.uiMatrix(copurchases(spark, d), Recommend.UserItemCap))
@@ -644,7 +618,7 @@ object ScaleStress {
     val q92StageNames = Seq("h1_ui_matrix", "h2_cf_arm", "h3_cn_arm",
       "h4_fusion")
     if (runQ92Stages) for (pass <- 1 to 2; d <- points) {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       def timed92[T](name: String)(f: => T): T = stageTimed(d, name)(f)
       val ui = timed92("h1_ui_matrix")(
         Recommend.uiMatrix(copurchases(spark, d), Recommend.UserItemCap))
@@ -673,7 +647,7 @@ object ScaleStress {
     val q93StageNames = Seq("e1_holdout_split", "e2_retrain_cf",
       "e3_eval_join")
     if (runQ93Stages) for (pass <- 1 to 2; d <- points) {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       def timed93[T](name: String)(f: => T): T = stageTimed(d, name)(f)
       // e1: the interaction distinct + per-user holdout pick — both
       // checkpoints are eager, so the whole split materializes in the
@@ -726,7 +700,7 @@ object ScaleStress {
     val runChainStages =
       only.forall(s => s.isEmpty || s.contains("q80_leakage_split"))
     if (runChainStages) for (pass <- 1 to 2; d <- points) {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       def timedC[T](name: String)(f: => T): T = stageTimed(d, name)(f)
       val docs = documents(spark, d)
       val pairs = timedC("c1_pair_list")(
@@ -767,7 +741,7 @@ object ScaleStress {
     val runQ85Stages =
       only.forall(s => s.isEmpty || s.contains("q85_source_gram_overlap"))
     if (runQ85Stages) for (pass <- 1 to 2; d <- points) {
-      hygiene()
+      Sessions.dropCheckpoints(spark)
       def timedG[T](name: String)(f: => T): T = stageTimed(d, name)(f)
       val sg = timedG("g1_gram_set")(
         graft.ops.Pipeline.sourceGramSet(documents(spark, d))

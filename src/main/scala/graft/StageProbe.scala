@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
@@ -59,23 +59,7 @@ object StageProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("target/scale30")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import graft.mining.Recommend
 
     // generic registered-query probe: `StageProbe <dir> q <n1,n2,..>`
@@ -248,8 +232,7 @@ object StageProbe {
           graft.Tables.part(spark, d), Recommend.UserItemCap,
           Recommend.CoMinUsers, Recommend.NeighborTopM,
           Recommend.ProfileTopF, Recommend.RecK))
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Sessions.dropCheckpoints(spark)
       if (args.contains("gc")) { System.gc(); Thread.sleep(3000) }
       probe("q93 after q92" + (if (args.contains("gc")) " + gc" else ""),
         Recommend.cfEvalOn(Recommend.copurchases(spark, d),

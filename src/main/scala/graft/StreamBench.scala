@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming micro-benchmark (VERDICT r7 item 7): the batch twins of
@@ -97,33 +97,18 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Sessions.cpus
     val durSec = sys.env.getOrElse("SPARK_GRAFT_STREAM_SEC", "12").toInt
     val corpusDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (q93/q87 scoring tail): the CF
-      // chain's explicit u-exchange serves the (u,j) aggregate, the
-      // ownership anti-join AND the top-k window only when the planner
-      // may co-partition a join on a PREFIX of its keys; per-u group
-      // fan-out is cap-bounded there, so the relaxation is safe at any
-      // scale (see Recommend.scoreFromNbr)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Sessions.local(cpus,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // commit per-batch CHANGELOGS instead of full RocksDB snapshots:
       // with ~10^5 state rows the snapshot upload dominated every
       // micro-batch commit (the r9 neardup_screen throughput gap)
-      .config("spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.rocksdb" +
+        ".changelogCheckpointing.enabled" -> "true")
     import spark.implicits._
 
     def rate(rowsPerSec: Int): DataFrame =
@@ -132,7 +117,7 @@ object StreamBench {
         // one generator partition per core: the screen's whole probe
         // chain is narrow (broadcast joins, no shuffle until the
         // dedup), so input parallelism IS stage parallelism
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load() // (timestamp, value)
 
     // synthetic event time: value-driven, so watermarks advance fast
@@ -443,10 +428,7 @@ object StreamBench {
         }
         val bc = point("bcast", "10000000")
         val sh = point("shuffle", "0")
-        val keep = graft.Memo.liveIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !before(id) && !keep(id) }
-          .values.foreach(_.unpersist(blocking = false))
+        Sessions.dropCheckpoints(spark, keep = before)
         s""""${n}x":{"index_docs":$idxDocs,$bc,$sh}"""
       }
       s""","screen_index_scale":{${entries.mkString(",")}}"""

@@ -432,7 +432,7 @@ object Recommend {
     // measurably never dedups: 0.9% at sf0.1), the co-partitioned
     // anti-join, and the single-phase per-user window (the join
     // elision needs requireAllClusterKeysForCoPartition=false — set in
-    // every session builder of this repo — since the join keys (u,j)
+    // graft.Sessions for every session — since the join keys (u,j)
     // are a superset of the exchange key). Measured at sf0.1: the
     // scoring tail's 3 ENSURE_REQUIREMENTS exchanges (10M-row/309MB
     // candidates, ui re-exchange, window re-exchange) collapse to the

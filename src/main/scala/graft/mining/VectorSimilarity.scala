@@ -476,11 +476,11 @@ object VectorSimilarity {
     * `graft_dot(a,b) / (sqrt(graft_dot(a,a)) · sqrt(graft_dot(b,b)))`
     * — the form a user writes when they don't know the fused kernel
     * exists. This is the registered, DuckDB-hash-gated host for the
-    * [[graft.plans.KernelRewrite]] cosine fuse: the Verify/Bench
-    * sessions run with `spark.graft.autoKernel=true`, so the driver's
-    * correctness gate executes this query THROUGH the rewrite (its
-    * optimized plan contains one fused [[graft.plans.CosineSimExpr]] —
-    * PlansSpec pins that) and the hash must equal the oracle's replay
+    * [[graft.plans.KernelRewrite]] cosine fuse: every session
+    * [[graft.Sessions]] builds runs with `spark.graft.autoKernel=true`,
+    * so the oracle correctness gate executes this query THROUGH the
+    * rewrite (its optimized plan contains one fused
+    * [[graft.plans.CosineSimExpr]] — PlansSpec pins that) and the hash must equal the oracle's replay
     * of the unfused arithmetic. A 1:1 self-join on (vec_id, vec_id+1):
     * linear rows, equi-keyed, no window — the query is about the
     * expression, not the join. */

@@ -330,6 +330,33 @@ class CountsSpec extends AnyFunSuite {
       None, "othersha0000").isEmpty)
   }
 
+  test("Bench.roundDeltaFields labels a baseline from a host with " +
+      "another core count as cross_host; the delta and gate stay") {
+    val root = Files.createTempDirectory("graft_cross_host")
+    val sf = "testdata/sf0.1"
+    Files.write(root.resolve("BENCH_r16.json"),
+      ("""{"n": 16, "cpus": 32, "parsed": {"metric": "total", """ +
+        """"value": 100.0, "calibration_sec": 2.0, """ +
+        """"sha": "aaaabbbbcccc", "host_cpus": 32, """ +
+        s""""sf": "$sf"}}""").getBytes("UTF-8"))
+    val cross = Bench.roundDeltaFields(root, sf, total = 13.1,
+      cal = Some(8.5), selfSha = "selfsha00000", hostCpus = 4)
+    assert(cross.contains("\"baseline_host_cpus\":32,\"cross_host\":true"))
+    assert(cross.contains("\"delta_vs_prev_round_pct\":-86.900"))
+    assert(cross.contains("\"total_moved_ge_10pct\":true"))
+    val same = Bench.roundDeltaFields(root, sf, total = 104.0,
+      cal = None, selfSha = "selfsha00000", hostCpus = 32)
+    assert(same.contains("\"delta_vs_prev_round_pct\":4.000"))
+    assert(!same.contains("cross_host") && !same.contains("baseline_host"))
+    // an unstamped baseline cannot be shown to share this host
+    Files.write(root.resolve("BENCH_r17.json"),
+      ("""{"parsed": {"metric": "total", "value": 100.0, """ +
+        s""""sha": "aaaabbbbcccc", "sf": "$sf"}}""").getBytes("UTF-8"))
+    assert(Bench.roundDeltaFields(root, sf, total = 104.0, cal = None,
+      selfSha = "selfsha00000", hostCpus = 32)
+      .contains("\"baseline_host_cpus\":null,\"cross_host\":true"))
+  }
+
   test("Bench.sample: a throwing query yields no sample, is named in " +
       "failed_queries and stays out of the min") {
     val samples = scala.collection.mutable.Map[String, List[Double]]()

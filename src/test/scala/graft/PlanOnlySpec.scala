@@ -18,8 +18,7 @@ class PlanOnlySpec extends AnyFunSuite {
     // fresh memo state: a warm artifact would make q87/q89/q92
     // trivially jobless without exercising the planOnly build path
     Memo.clear(spark)
-    spark.conf.set("spark.graft.planOnly", "true")
-    try {
+    try TestUtil.withConf("spark.graft.planOnly" -> "true") {
       val family = Seq("q87_item_cf", "q88_lm_quality",
         "q89_content_rec", "q90_delta_screen", "q91_ppr",
         "q92_hybrid_rec", "q93_cf_eval")
@@ -51,7 +50,6 @@ class PlanOnlySpec extends AnyFunSuite {
       assert(Memo.buildSeconds(spark).isEmpty,
         "planOnly builds must bypass the memo cache")
     } finally {
-      spark.conf.unset("spark.graft.planOnly")
       // drop the planOnly-built artifacts: rec_cn's broadcast class
       // index is EMPTY under planOnly (a dump never executes it) and
       // must not leak into a later suite's real run
@@ -63,8 +61,7 @@ class PlanOnlySpec extends AnyFunSuite {
       "planOnly (VERDICT r15 item 7: the guarantee held on the " +
       "recommender family by pin and on the rest by convention)") {
     Memo.clear(spark)
-    spark.conf.set("spark.graft.planOnly", "true")
-    try {
+    try TestUtil.withConf("spark.graft.planOnly" -> "true") {
       // per-id accounting: the bus drained after each construction,
       // so an offending job names the query that ran it instead of a
       // 33-way "someone did"
@@ -82,9 +79,6 @@ class PlanOnlySpec extends AnyFunSuite {
           offenders.mkString("\n"))
       assert(Memo.buildSeconds(spark).isEmpty,
         "planOnly builds must bypass the memo cache")
-    } finally {
-      spark.conf.unset("spark.graft.planOnly")
-      Memo.clear(spark)
-    }
+    } finally Memo.clear(spark)
   }
 }

@@ -108,13 +108,9 @@ class PlansSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val expected = Map(1L -> 3, 2L -> 2, 3L -> 0)
     assert(run() == expected)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() == expected)
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    TestUtil.withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(
+      assert(run() == expected))
   }
 
   test("kmeans assignment expression text is O(k), never inlined k×d literals") {
@@ -155,15 +151,11 @@ class PlansSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     got.foreach { case (id, s) => assert(s == expected(id)) }
     // interpreted path
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    TestUtil.withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val got2 = df.select(col("id"), expr("graft_minhash(xs)").as("s"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       got2.foreach { case (id, s) => assert(s == expected(id)) }
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
 
@@ -209,14 +201,12 @@ class PlansSpec extends AnyFunSuite {
       // otherwise constant-fold the whole select at optimize time and
       // leave nothing for the rewrite to prove itself on
       .repartition(2)
-    def plans(on: Boolean): (String, Seq[(Double, Double)]) = {
-      spark.conf.set("spark.graft.autoKernel", on.toString)
-      try {
+    def plans(on: Boolean): (String, Seq[(Double, Double)]) =
+      TestUtil.withConf("spark.graft.autoKernel" -> on.toString) {
         val q = df.select(expr(dotHof).as("d"), expr(distHof).as("e"))
         (q.queryExecution.optimizedPlan.toString,
           q.collect().toSeq.map(r => (r.getDouble(0), r.getDouble(1))))
-      } finally spark.conf.set("spark.graft.autoKernel", "false")
-    }
+      }
     val (offPlan, offRows) = plans(on = false)
     val (onPlan, onRows) = plans(on = true)
     assert(!offPlan.contains("graft_dot") && !offPlan.contains("graft_dist2"),
@@ -230,14 +220,13 @@ class PlansSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
       .repartition(2)
       .select(expr(dotHof).as("d"))
-    spark.conf.set("spark.graft.autoKernel", "true")
-    try {
+    TestUtil.withConf("spark.graft.autoKernel" -> "true") {
       val p = nullable.queryExecution.optimizedPlan.toString
       assert(!p.contains("graft_dot"),
         "rule fired on a nullable-element array")
       assert(nullable.collect().head.isNullAt(0),
         "HOF null propagation preserved")
-    } finally spark.conf.set("spark.graft.autoKernel", "false")
+    }
   }
 
   test("graft_cos equals the three-kernel composition bit-for-bit, " +
@@ -263,13 +252,8 @@ class PlansSpec extends AnyFunSuite {
       case (id, f, c) => fail(s"id $id: non-double $f / $c")
     }
     check(run())
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try check(run())
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    TestUtil.withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check(run()))
     // ragged input → NULL, like every array kernel (HOF parity)
     val ragged = Seq((1L, Seq(1.0, 2.0), Seq(1.0))).toDF("id", "a", "b")
       .select(expr("graft_cos(a, b)").as("v")).collect()
@@ -293,14 +277,13 @@ class PlansSpec extends AnyFunSuite {
       assert(zeroDiv(ex), s"$form on zero norm: wanted DIVIDE_BY_ZERO, " +
         s"got $ex")
     }
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    TestUtil.withConf("spark.sql.ansi.enabled" -> "false") {
       val legacy = degenerate.toDF("id", "a", "b")
         .select(expr("graft_cos(a, b)").as("f"), expr(comp).as("c"))
         .collect()
       legacy.foreach(r => assert(r.isNullAt(0) && r.isNullAt(1),
         s"legacy zero-norm must be NULL on both forms: $r"))
-    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+    }
   }
 
   test("KernelRewrite fuses cosine: fires on the kernel composition, " +
@@ -324,18 +307,14 @@ class PlansSpec extends AnyFunSuite {
       // queryExecution is lazily CACHED per DataFrame — build a fresh
       // frame per conf mode or the off-plan replays the on-plan
       def q = df.select(col("id"), expr(form).as("c"))
-      spark.conf.set("spark.graft.autoKernel", "true")
-      val (onPlan, onRows) =
-        try {
+      def planRows(on: Boolean) =
+        TestUtil.withConf("spark.graft.autoKernel" -> on.toString) {
           val d = q
           (d.queryExecution.optimizedPlan.toString,
             d.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1))))
-        } finally spark.conf.set("spark.graft.autoKernel", "false")
-      val (offPlan, offRows) = {
-        val d = q
-        (d.queryExecution.optimizedPlan.toString,
-          d.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1))))
-      }
+        }
+      val (onPlan, onRows) = planRows(on = true)
+      val (offPlan, offRows) = planRows(on = false)
       assert(!offPlan.contains("graft_cos"), s"$label: inert-off violated")
       assert(onPlan.contains("graft_cos"),
         s"$label: cosine fuse did not fire:\n$onPlan")
@@ -347,10 +326,9 @@ class PlansSpec extends AnyFunSuite {
     // mismatched arrays across the three dots must NOT fuse
     val q = df.select(expr("graft_dot(a, b) / (sqrt(graft_dot(a, a)) * " +
       "sqrt(graft_dot(a, a)))").as("c"))
-    spark.conf.set("spark.graft.autoKernel", "true")
-    try assert(!q.queryExecution.optimizedPlan.toString.contains("graft_cos"),
-      "fused a composition whose norms are not the pair's norms")
-    finally spark.conf.set("spark.graft.autoKernel", "false")
+    TestUtil.withConf("spark.graft.autoKernel" -> "true")(
+      assert(!q.queryExecution.optimizedPlan.toString.contains("graft_cos"),
+        "fused a composition whose norms are not the pair's norms"))
   }
 
   test("cosine fuse never hardens error semantics: try_divide stays " +
@@ -380,8 +358,7 @@ class PlansSpec extends AnyFunSuite {
       assert(got(2L), "zero norm must be NULL, not DIVIDE_BY_ZERO")
       assert(!got(1L), "nonzero-norm cosine must still compute")
     }
-    spark.conf.set("spark.graft.autoKernel", "true")
-    try {
+    TestUtil.withConf("spark.graft.autoKernel" -> "true") {
       checkNullOnZero(df.select(col("id"), expr(
         "try_divide(graft_dot(a, b), sqrt(graft_dot(a, a)) * " +
           "sqrt(graft_dot(b, b)))").as("c")))
@@ -389,14 +366,13 @@ class PlansSpec extends AnyFunSuite {
       // EvalMode.LEGACY in the Divide node; the session then returns
       // to ANSI before optimization+execution — the fuse must keep
       // the node's analyzed semantics (NULL), not re-read the flag
-      spark.conf.set("spark.sql.ansi.enabled", "false")
       val legacyQ =
-        try df.select(col("id"), expr(
-          "graft_dot(a, b) / (sqrt(graft_dot(a, a)) * " +
-            "sqrt(graft_dot(b, b)))").as("c"))
-        finally spark.conf.set("spark.sql.ansi.enabled", "true")
+        TestUtil.withConf("spark.sql.ansi.enabled" -> "false")(
+          df.select(col("id"), expr(
+            "graft_dot(a, b) / (sqrt(graft_dot(a, a)) * " +
+              "sqrt(graft_dot(b, b)))").as("c")))
       checkNullOnZero(legacyQ)
-    } finally spark.conf.set("spark.graft.autoKernel", "false")
+    }
   }
 
   test("cosine fuse never SOFTENS error semantics: an ANSI-analyzed " +
@@ -419,8 +395,7 @@ class PlansSpec extends AnyFunSuite {
     val zero = Seq((2L, Seq(0.0, 0.0), Seq(1.0, 3.0)))
       .toDF("id", "a", "b")
       .repartition(2)
-    spark.conf.set("spark.graft.autoKernel", "true")
-    try {
+    TestUtil.withConf("spark.graft.autoKernel" -> "true") {
       // (b) positive plan assertion: ANSI divide → fused with
       // failOnError=true (flatArguments renders the flag in the plan)
       val q = ok.select(col("id"), expr(comp).as("c"))
@@ -441,19 +416,19 @@ class PlansSpec extends AnyFunSuite {
           || zeroDiv(t.getCause))
       assert(zeroDiv(ex),
         s"fused ANSI zero norm: wanted DIVIDE_BY_ZERO, got $ex")
-    } finally spark.conf.set("spark.graft.autoKernel", "false")
+    }
   }
 
   test("q147 runs UNDER the rewrite: optimized plan holds one fused " +
       "graft_cos and results equal the rule-off run") {
     val fn = SparkEntry.queries("q147_cos_pairs")
-    spark.conf.set("spark.graft.autoKernel", "true")
     val (onPlan, onRows) =
-      try {
+      TestUtil.withConf("spark.graft.autoKernel" -> "true") {
         val d = fn(spark, sfDir)
         (d.queryExecution.optimizedPlan.toString, d.collect().toSeq)
-      } finally spark.conf.set("spark.graft.autoKernel", "false")
-    val offRows = fn(spark, sfDir).collect().toSeq
+      }
+    val offRows = TestUtil.withConf("spark.graft.autoKernel" -> "false")(
+      fn(spark, sfDir).collect().toSeq)
     assert(onPlan.contains("graft_cos") && !onPlan.contains("graft_dot"),
       s"q147 did not fuse under autoKernel=true:\n$onPlan")
     assert(onRows == offRows,
@@ -479,13 +454,9 @@ class PlansSpec extends AnyFunSuite {
         expr("graft_dist2(a, b)"), expr("graft_isize(sa, sb)"))
         .orderBy(col("id")).collect().toSeq.map(_.toSeq)
     val gen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() == gen, "interpreted eval diverges from codegen")
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    TestUtil.withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(
+      assert(run() == gen, "interpreted eval diverges from codegen"))
   }
 
   test("every partition-less Window in every registered plan consumes " +

@@ -478,8 +478,7 @@ class SimilaritySpec extends AnyFunSuite {
         r.collect().map(x => (x.getLong(0), x.getLong(1),
           x.getDouble(2))).toSet)
     }
-    spark.conf.set("spark.graft.screenBroadcastDocs", "0")
-    try {
+    TestUtil.withConf("spark.graft.screenBroadcastDocs" -> "0") {
       val (small, rSmall) = run(
         graft.mining.Recommend.SpillGuardRowsPerTask * floor)
       val (big, rBig) = run(
@@ -494,35 +493,38 @@ class SimilaritySpec extends AnyFunSuite {
         big.contains("REPARTITION_BY_NUM"),
         s"above-guard plan must hint shuffle-hash and size the band " +
           s"exchange:\n$big")
-      spark.conf.set("spark.graft.screenBroadcastDocs", "1000000")
-      val bc = SetSimilarity.screenAgainstIndex(delta, corpus)
-      assert(bc.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"),
-        "small-index branch must broadcast")
-      val rBc = bc.collect().map(x => (x.getLong(0), x.getLong(1),
-        x.getDouble(2))).toSet
+      val rBc = TestUtil.withConf(
+          "spark.graft.screenBroadcastDocs" -> "1000000") {
+        val bc = SetSimilarity.screenAgainstIndex(delta, corpus)
+        assert(bc.queryExecution.executedPlan.toString
+          .contains("BroadcastHashJoin"),
+          "small-index branch must broadcast")
+        bc.collect().map(x => (x.getLong(0), x.getLong(1),
+          x.getDouble(2))).toSet
+      }
       // the broadcast gate is byte-capped too: a MEASURED index
       // payload past spark.graft.screenBroadcastBytes must drop to the
       // non-broadcast branch even when the doc count is under the
       // bound — observable as the branch's shuffle-hash rewrite firing
       // (a stock-plan BroadcastHashJoin on this tiny frame would be
       // Catalyst's own legitimate pick, so the hint is the witness)
-      spark.conf.set("spark.graft.screenBroadcastBytes", "0")
-      val fat = SetSimilarity.screenAgainstIndex(delta, corpus, "1 hour",
-        None, Some(graft.mining.Recommend.ShuffleRowsPerPartition * 64L))
-      assert(fat.queryExecution.executedPlan.toString
-        .contains("ShuffledHashJoin"),
-        "index payload past the byte cap must take the non-broadcast " +
-          "branch (shuffle-hash index lookups)")
-      val rFat = fat.collect().map(x => (x.getLong(0), x.getLong(1),
-        x.getDouble(2))).toSet
+      val rFat = TestUtil.withConf(
+          "spark.graft.screenBroadcastDocs" -> "1000000",
+          "spark.graft.screenBroadcastBytes" -> "0") {
+        val fat = SetSimilarity.screenAgainstIndex(delta, corpus,
+          "1 hour", None,
+          Some(graft.mining.Recommend.ShuffleRowsPerPartition * 64L))
+        assert(fat.queryExecution.executedPlan.toString
+          .contains("ShuffledHashJoin"),
+          "index payload past the byte cap must take the non-broadcast " +
+            "branch (shuffle-hash index lookups)")
+        fat.collect().map(x => (x.getLong(0), x.getLong(1),
+          x.getDouble(2))).toSet
+      }
       assert(rSmall == rBig && rBig == rBc && rBc == rFat,
         s"gate branches must agree: $rSmall vs $rBig vs $rBc vs $rFat")
       assert(rSmall == Set((101L, 3L, 1.0)),
         s"planted dup must be the one hit: $rSmall")
-    } finally {
-      spark.conf.unset("spark.graft.screenBroadcastDocs")
-      spark.conf.unset("spark.graft.screenBroadcastBytes")
     }
   }
 }

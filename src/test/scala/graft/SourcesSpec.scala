@@ -107,9 +107,7 @@ class SourcesSpec extends AnyFunSuite {
     Sources.writeBucketed(custs, "b_custs", s"$base/b_custs",
       "o_custkey", 4)
     // force a non-broadcast join so co-location is what's under test
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try TestUtil.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_orders")
         .join(spark.table("b_custs"), "o_custkey")
         .select(col("o_custkey"), col("c_mktsegment"), col("o_totalprice"))
@@ -119,7 +117,6 @@ class SourcesSpec extends AnyFunSuite {
       // same rows as the plain (shuffled) join
       assert(joined.count() == ords.join(custs, "o_custkey").count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_custs")
     }

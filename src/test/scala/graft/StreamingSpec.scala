@@ -273,18 +273,14 @@ class StreamingSpec extends AnyFunSuite {
     // the BATCH probe side here is a tiny LocalRelation the planner
     // would legitimately broadcast on its own — a stream probe, the
     // production shape, has no such option.)
-    spark.conf.set("spark.graft.screenBroadcastDocs", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    TestUtil.withConf("spark.graft.screenBroadcastDocs" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val gated = screen()
       assert(!gated.queryExecution.executedPlan.toString
         .contains("BroadcastHashJoin"),
         "gate=0 must keep the shuffle join for the band probe")
       assert(gated.collect().map(r => (r.getLong(0), r.getLong(1)))
         .toSeq == Seq(1L -> 100L), "gated plan changed verdicts")
-    } finally {
-      spark.conf.unset("spark.graft.screenBroadcastDocs")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -385,11 +381,6 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState latest-state (TTL'd) matches the batch q112") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val t0 = 1700000000000000L // µs
     val b1 = Seq(
       Streams.ChangeEvent(1L, t0, 10L, "signup", 1.0),
@@ -427,7 +418,9 @@ class StreamingSpec extends AnyFunSuite {
         .start()
       try q.awaitTermination(120000) finally q.stop()
     }
-    try {
+    TestUtil.withConf("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")) {
       mem.addData(b1: _*); drain()
       mem.addData(b2: _*); drain()
       // update emissions accumulate: latest per key wins
@@ -445,13 +438,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed == batch, s"tws $streamed != batch $batch")
       assert(streamed.exists(r => r._1 == 1L && r._3 == 12L),
         "cross-batch overwrite missing")
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

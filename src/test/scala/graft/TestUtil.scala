@@ -30,6 +30,21 @@ object TestUtil {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Runs `body` with the given keys set on the test session's conf,
+    * then restores each key's previous value, or unsets it if it had
+    * none — the shared session leaves every test in the state it found
+    * it. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val conf = SparkTestSession.spark.conf
+    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** Normalized mutual information between two labelings (the
     * reference's grading metric for clustering, Assignment5 PDF §4.3). */
   def nmi(a: Seq[Int], b: Seq[Int]): Double = {

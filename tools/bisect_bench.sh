@@ -9,6 +9,8 @@
 # windows, and back-to-back same-binary runs can both land inside one.
 #
 # Usage: tools/bisect_bench.sh <prev-commit> [sf_dir] [passes]
+# SPARK_GRAFT_CPUS, when set, reaches both binaries through the
+# environment; unset, each binary uses its own session default.
 # Reads: ~20-40 min for 2 passes at sf0.1. Each binary runs from its
 # own scratch cwd so neither touches the repo's bench_queries.json
 # baseline.
@@ -55,8 +57,7 @@ run_one() { # $1 = classes dir (absolute), $2 = label, $3 = scratch cwd,
   # totals" diagnostic could run.
   mkdir -p "$3"
   local total
-  total=$( (cd "$3" && SPARK_GRAFT_SF_DIR="$SF" \
-    SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" GRAFT_GIT_SHA="$4" \
+  total=$( (cd "$3" && SPARK_GRAFT_SF_DIR="$SF" GRAFT_GIT_SHA="$4" \
     java -Xmx"${HEAP:-16g}" $OPENS -Dspark.ui.enabled=false \
       -cp "$1:/opt/spark/jars/*" graft.Bench 2>>bench_stderr.log) |
     grep -o '"metric":"total","value":[0-9.]*' | head -1 |

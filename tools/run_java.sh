@@ -9,6 +9,5 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
-exec java -Xmx"${HEAP:-16g}" $OPENS -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+exec java -Xmx"${HEAP:-16g}" $OPENS \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
