@@ -1,7 +1,9 @@
 package graft.cluster
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.collection.mutable
 
 /** BFR (Bradley–Fayyad–Reina) chunked clustering — the reference's
@@ -10,14 +12,15 @@ import scala.collection.mutable
   * Semantics kept from the reference:
   *  - cluster summaries are N/SUM/SUMSQ sufficient statistics
   *    (bfr.py:103-113), merged commutatively;
-  *  - Mahalanobis threshold α·√d with α = 2 (bfr.py:136-137);
+  *  - Mahalanobis threshold α·√d, α = 2, d the data's (bfr.py:136-137);
   *  - σ = 0 → divide by 1 (bfr.py:144-147);
   *  - CS cluster ids offset by +100 (bfr.py:222-223);
   *  - final outliers are the surviving RS points, labeled −1
   *    (bfr.py:443-444).
   *
   * Spark shape: the data never lands on the driver, and every step is
-  * ONE job with no Exchange — a `mapPartitions` that folds its
+  * ONE job on the persisted points ([[KMeans.persistPoints]]), with no
+  * Exchange and no Catalyst query — a `mapPartitions` that folds its
   * partition into per-cluster partial summaries (plus, in a chunk
   * round, the bounded smallest-id RS buffer), collected and merged on
   * the driver in partition-index order. Only summaries (k×d stats) and
@@ -28,7 +31,6 @@ import scala.collection.mutable
   */
 object Bfr {
 
-  val Dim = 64
   val K = 10
   val Alpha = 2.0
   val NumChunks = 5
@@ -92,8 +94,6 @@ object Bfr {
       m.updated(k, m.get(k).fold(st)(_.merge(st)))
     }
 
-  private val thresh = Alpha * math.sqrt(Dim)
-
   private[cluster] def d2(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
     while (i < a.length) { val dd = a(i) - b(i); acc += dd * dd; i += 1 }
@@ -131,8 +131,8 @@ object Bfr {
         val mine = asg.filter(_._1 == i).map(_._2)
         if (mine.isEmpty) (i, c)
         else {
-          val m = new Array[Double](Dim)
-          mine.foreach(p => (0 until Dim).foreach(j => m(j) += p(j)))
+          val m = new Array[Double](c.length)
+          mine.foreach(p => m.indices.foreach(j => m(j) += p(j)))
           (i, m.map(_ / mine.size))
         }
       }
@@ -168,9 +168,9 @@ object Bfr {
       nof_point_retained: Long)
 
   /** Primary/secondary assignment: the closest DS summary, else the
-    * closest CS summary, each only within α·√d; −1 = unassigned. */
+    * closest CS summary, each only within `thresh`; −1 = unassigned. */
   private def tag(p: Array[Double], ds: Array[(Int, Frozen)],
-      cs: Array[(Int, Frozen)]): Int =
+      cs: Array[(Int, Frozen)], thresh: Double): Int =
     Iterator(ds, cs).flatMap(_.map { case (c, f) => (f.mahalanobis(p), c) }
       .minOption).find(_._1 < thresh).fold(-1)(_._2)
 
@@ -206,20 +206,16 @@ object Bfr {
 
   /** One chunk round as ONE job: tag each point of [lo, hi) against the
     * broadcast frozen DS/CS summaries and fold, in one pass. */
-  private[graft] def chunkRound(pts: DataFrame, lo: Long, hi: Long,
-      ds: Array[(Int, Frozen)], cs: Array[(Int, Frozen)], cap: Int)
-  : Seq[Partial] = {
-    val s = pts.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast((ds, cs))
-    pts.filter(col("vec_id") >= lo && col("vec_id") < hi)
-      .select(col("vec_id"), col("vd")).as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (d, c) = bc.value
-        Iterator.single(foldChunk(
-          it.map { case (id, p) => (id, p, tag(p, d, c)) }, cap))
-      }
-      .collect().toSeq
+  private[graft] def chunkRound(pts: RDD[KMeans.Pt], lo: Long, hi: Long,
+      ds: Array[(Int, Frozen)], cs: Array[(Int, Frozen)], cap: Int,
+      thresh: Double): Seq[Partial] = {
+    val bc = pts.sparkContext.broadcast((ds, cs))
+    pts.mapPartitions { it =>
+      val (d, c) = bc.value
+      Iterator.single(foldChunk(it.collect {
+        case (id, p, _) if id >= lo && id < hi => (id, p, tag(p, d, c, thresh))
+      }, cap))
+    }.collect().toSeq
   }
 
   /** A chunk round's decisions: the frozen summaries its points were
@@ -233,10 +229,11 @@ object Bfr {
     * tag then follows the merges of rounds r.. in order, and an
     * unassigned point is −1 (RS survivor or overflow) unless `created`
     * moved it from RS into CS `c` in round r. Ids ≥ `total` belong to no
-    * chunk and get no label. */
+    * chunk and get no label. `thresh` is the fit's α·√d. */
   private[graft] case class Fit(chunkSz: Long, total: Long,
       cents0: Array[(Int, Array[Double])], rounds: Seq[Round],
-      created: Map[Long, (Int, Int)], stats: Seq[RoundStats]) {
+      created: Map[Long, (Int, Int)], stats: Seq[RoundStats],
+      thresh: Double) {
     /** CS id `c` as tagged or issued in round `r` → its final id. The
       * remap is composed round by round, never global: a merge frees an
       * id and a later round may issue it again to a new cluster. */
@@ -251,7 +248,7 @@ object Bfr {
       else if (id >= total) None
       else {
         val r = (id / chunkSz).toInt; val rd = rounds(r - 1)
-        Some(tag(p, rd.ds, rd.cs) match {
+        Some(tag(p, rd.ds, rd.cs, thresh) match {
           case -1 => created.get(id).fold(-1) { case (rr, c) => settle(rr, c) }
           case c if c >= CsIdOffset => settle(r, c)
           case c => c
@@ -259,27 +256,23 @@ object Bfr {
       }
   }
 
-  /** Fit BFR over a (vec_id, vd, …) frame; returns the frame
-    * checkpointed, for the final labelling map, and the fit. */
-  private def fit(points: DataFrame, rsCap: Int): (DataFrame, Fit) = {
-    val s = points.sparkSession
-    import s.implicits._
-    // checkpoint and count in ONE job: a lazy local checkpoint
-    // materializes in the first job that reads it
-    val pts = points.localCheckpoint(eager = false)
-    val total = pts.queryExecution.toRdd.count()
+  /** Fit BFR over persisted points. */
+  private def fit(pts: RDD[KMeans.Pt], rsCap: Int): Fit = {
+    val total = pts.count()
     val chunkSz = math.max(1L, (total + NumChunks - 1) / NumChunks)
     // Round 1: seed centroids come from a BOUNDED deterministic sample
     // (InitSampleCap rows, hash-ordered top-k — farthest-first + local
     // Lloyd on the sample, the reference's 20% sampling intent,
     // bfr.py:255-259), then InitIters distributed Lloyd iterations over
     // the whole chunk refine them. Only k×d centroids and k stats rows
-    // ever cross the driver — no data-sized collect anywhere.
-    val chunk0 = pts.filter(col("vec_id") < chunkSz)
-    val sample = chunk0.select(col("vec_id"), col("vd"))
-      .orderBy(hash(col("vec_id")), col("vec_id"))
-      .limit(InitSampleCap)
-      .as[(Long, Array[Double])].collect().toSeq
+    // ever cross the driver — no data-sized collect anywhere. Sample
+    // order = SQL's (hash(vec_id), vec_id): Murmur3, seed 42.
+    val chunk0 = pts.filter(_._1 < chunkSz)
+    val sample = chunk0.takeOrdered(InitSampleCap)(
+        Ordering.by[KMeans.Pt, (Int, Long)](p =>
+          (Murmur3_x86_32.hashLong(p._1, 42), p._1)))
+      .map { case (id, p, _) => (id, p) }.toSeq
+    val thresh = Alpha * math.sqrt(sample.headOption.fold(0)(_._2.length))
     val cents0 = KMeans.lloydCentroids(chunk0, K, InitIters,
       Some(localKMeans(sample, K)._2)).toArray
     var ds: Map[Int, CStats] = KMeans.foldNearest(chunk0, cents0.toSeq)
@@ -292,7 +285,7 @@ object Bfr {
       val lo = chunk * chunkSz; val hi = math.min(total, lo + chunkSz)
       val fDs = frozenOf(ds); val fCs = frozenOf(cs)
       val (deltas, unPts) =
-        mergeRound(chunkRound(pts, lo, hi, fDs, fCs, rsCap), rsCap)
+        mergeRound(chunkRound(pts, lo, hi, fDs, fCs, rsCap, thresh), rsCap)
       deltas.foreach { case (c, st) =>
         if (c >= CsIdOffset) cs = cs.updated(c, cs(c).merge(st))
         else if (c >= 0) ds = ds.updated(c, ds(c).merge(st))
@@ -331,7 +324,7 @@ object Bfr {
       rounds += Round(fDs, fCs, merges.toSeq)
       stats += roundStats(chunk + 1, ds, cs, rs)
     }
-    (pts, Fit(chunkSz, total, cents0, rounds.toSeq, created.toMap, stats.toSeq))
+    Fit(chunkSz, total, cents0, rounds.toSeq, created.toMap, stats.toSeq, thresh)
   }
 
   /** Run BFR over a (vec_id, vd) frame; returns assignments (vec_id,
@@ -343,15 +336,15 @@ object Bfr {
       rsCap: Int = RsCap): DataFrame = {
     val s = points.sparkSession
     import s.implicits._
-    val (pts, f) = fit(points.select(col("vec_id"), col("vd")), rsCap)
+    val pts = KMeans.persistPoints(points.select(col("vec_id"), col("vd")))
+    val f = fit(pts, rsCap)
     intermediateOut.foreach { path =>
       graft.sources.Sinks.csvWithHeader(
         s.createDataFrame(f.stats).coalesce(1), path)
     }
     val bc = s.sparkContext.broadcast(f)
-    pts.as[(Long, Array[Double])]
-      .flatMap { case (id, p) => bc.value.label(id, p).map((id, _)) }
-      .toDF("vec_id", "cluster")
+    s.createDataset(pts.flatMap { case (id, p, _) =>
+      bc.value.label(id, p).map((id, _)) }).toDF("vec_id", "cluster")
   }
 
   /** [[runOn]] over `embeddings`. */
@@ -431,11 +424,12 @@ object Bfr {
     * see [[BfrR2RatioFloor]] for why it would gate on noise here). */
   def bfrClusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // one checkpoint feeds BFR, both audits and the baseline Lloyd
-    val (pts, f) = fit(KMeans.points(s, d, "label"), RsCap)
+    // one persisted RDD feeds BFR, both audits and the baseline Lloyd
+    val pts = KMeans.persistPoints(KMeans.points(s, d, "label"))
+    val f = fit(pts, RsCap)
     val bc = s.sparkContext.broadcast(f)
     // sizes, NMI counts and BFR's R² from ONE (cluster, label) fold
-    val cells = mergeInOrder(pts.as[(Long, Array[Double], Int)]
+    val cells = mergeInOrder(pts
       .mapPartitions(it => foldBy(it.flatMap { case (id, p, l) =>
         bc.value.label(id, p).map(c => ((c, l), p)) }).iterator)
       .collect().toSeq).toSeq.sortBy(_._1)

@@ -1,7 +1,10 @@
 package graft.mining
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import graft.Tables._
 
@@ -11,14 +14,19 @@ import graft.Tables._
   * Baskets are order → distinct part brands (the user→business basket
   * model of Assignment2/task1.py:25-35 transposed to the testdata).
   *
+  * The baskets are persisted once as a typed RDD, and each pass is ONE
+  * job on it that no Catalyst query re-plans.
+  *
   * Phase 1 (`mapPartitions` A-Priori): each partition mines candidates
   * at the fractional support scaled to its basket count — the one place
   * per-partition imperative code is genuinely the right tool (SURVEY.md
-  * A16). If a set is globally frequent (count ≥ s·N) then some partition
-  * has count_p ≥ s·n_p, so the candidate union has no false negatives.
-  * Phase 2 counts candidates exactly with one shuffle (explode candidate
-  * hits map-side → groupBy sum), replacing the reference's
-  * closure-captured candidate list + reduceByKey (task1.py:145-168).
+  * A16) — and returns that count with them, so the total needs no job
+  * of its own. If a set is globally frequent (count ≥ s·N) then some
+  * partition has count_p ≥ s·n_p, so the candidate union has no false
+  * negatives. Phase 2 counts candidates exactly with no shuffle: dense
+  * per-partition hit arrays summed by `reduce`, replacing the
+  * reference's closure-captured candidate list + reduceByKey
+  * (task1.py:145-168).
   *
   * Scale: phase 1 is embarrassingly parallel; the candidate set crossing
   * the driver is itemsets (small — the SON contract), never data. At
@@ -204,42 +212,52 @@ object Son {
   /** q28: SON frequent itemsets at 0.5% support, sizes 1..3. Output:
     * comma-joined sorted itemset, size, exact support count. */
   def sonItemsets(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // localCheckpoint: the basket build (join + groupBy collect_set) is
-    // consumed three times (total count, phase 1, phase 2) — without it
-    // each pass recomputes the 600k-row join (this was 60 of q28's 88
-    // bench seconds at sf0.1).
     // repartition pins phase-1 parallelism: AQE coalesces the small
     // basket shuffle to ~1 partition, which would serialize the local
     // mining (this, not the mining itself, was q28's bench cost). The
     // fractional local threshold keeps SON's no-false-negative guarantee
-    // at any partition count.
-    val b = baskets(s, d).select(col("basket")).as[Array[String]]
+    // at any partition count. Persisted: both passes read the baskets
+    // without recomputing the join + groupBy.
+    val b = baskets(s, d).select(col("basket"))
       .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    val total = b.count()
-    val minsup = math.max(1L, math.ceil(SupportFrac * total).toLong)
-    // Phase 1: per-partition candidates.
-    // toVector, not toSeq: Iterator.toSeq yields a lazily-memoized
-    // LazyList whose repeated traversals (one per A-Priori level)
-    // dominate the partition runtime.
-    val candidates = b
-      .mapPartitions(it => aprioriLocal(it.toVector, SupportFrac, MaxSize))
-      .distinct()
-      .collect()
-      .map(_.toVector)
-    // Phase 2: exact counting. The naive form (enumerate subsets,
-    // build a "a,b,c" string per hit, hash-aggregate the strings) paid
-    // ~10⁸ string constructions at sf0.1; instead items are int-coded
-    // against the candidate vocabulary, candidates become sorted
-    // packed-long arrays (one per size), baskets probe them by binary
-    // search, and each partition emits only its (size, packed, count)
-    // partial counts — a candidate-bounded shuffle, with the packed →
-    // string unpack running on the aggregated (tiny) result.
-    val items: Array[String] =
-      candidates.iterator.flatten.toArray.distinct.sorted
-    val dictB = s.sparkContext.broadcast((items, candidates))
-    import org.apache.spark.sql.Encoders
+      .queryExecution.toRdd.map { r =>
+        val a = r.getArray(0)
+        Array.tabulate(a.numElements())(a.getUTF8String(_).toString)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    // sorted on the driver in Spark's string order (UTF-8 bytes): an
+    // orderBy over the local rows would cost three more jobs
+    s.createDataFrame(mine(b, SupportFrac)
+      .sortBy { case (set, sz, _) => (sz, UTF8String.fromString(set)) })
+      .toDF("itemset", "sz", "support")
+  }
+
+  /** Phase 1 and the basket count as ONE job: (Σ basket counts, the
+    * deduped union of each partition's local A-Priori candidates). */
+  private[graft] def phase1(b: RDD[Array[String]], supportFrac: Double)
+  : (Long, Array[Vector[String]]) = {
+    val parts = b.mapPartitions { it =>
+      // toVector, not toSeq: a lazily-memoized LazyList's repeated
+      // traversals (one per A-Priori level) dominate the runtime
+      val bs = it.toVector
+      Iterator.single((bs.length.toLong,
+        aprioriLocal(bs, supportFrac, MaxSize).map(_.toVector).toVector))
+    }.collect()
+    (parts.map(_._1).sum, parts.iterator.flatMap(_._2).toArray.distinct)
+  }
+
+  /** SON over persisted baskets: (itemset, size, support), unordered.
+    * Phase 2: the naive form (enumerate subsets, build a "a,b,c" string
+    * per hit, hash-aggregate the strings) paid ~10⁸ string
+    * constructions at sf0.1; instead items are int-coded against the
+    * candidate vocabulary, candidates become sorted packed-long arrays
+    * (one per size), baskets probe them by binary search, and each
+    * partition emits dense per-size hit arrays that `reduce` sums
+    * (Long counts do not depend on merge order). */
+  private[graft] def mine(b: RDD[Array[String]], supportFrac: Double)
+  : Seq[(String, Long, Long)] = {
+    val (total, candidates) = phase1(b, supportFrac)
+    val minsup = math.max(1L, math.ceil(supportFrac * total).toLong)
+    val items = candidates.iterator.flatten.toArray.distinct.sorted
     // Packed keys need v^MaxSize to fit a Long (the pair loop also
     // forms pk*v prefix products — hence the /4 headroom). Mirror
     // aprioriLocal's guard: past ~2M candidate items fall back to
@@ -247,113 +265,89 @@ object Son {
     if (items.nonEmpty &&
         math.pow(items.length.toDouble, MaxSize.toDouble) >=
           Long.MaxValue.toDouble / 4)
-      return phase2Generic(b, dictB, minsup)
-    val counted = b.mapPartitions { it =>
-        val (itemArr, cands) = dictB.value
-        val v = itemArr.length.toLong
-        val idOf = itemArr.iterator.zipWithIndex.toMap
-        // candidate packed keys, ascending, one array per size;
-        // item ids follow lexicographic order, so packing sorted-string
-        // itemsets yields keys comparable across both sides
-        val byK: Array[Array[Long]] = Array.tabulate(MaxSize) { k0 =>
-          cands.iterator.filter(_.length == k0 + 1)
-            .map(_.foldLeft(0L)((a, it0) => a * v + idOf(it0)))
-            .toArray.sorted
-        }
-        val hits = byK.map(a => new Array[Long](a.length))
-        val pairs = byK(1) // size-2 candidates prune the triple loop
-        it.foreach { basket =>
-          val ids = basket.iterator.flatMap(idOf.get).toArray
-          val n = ids.length
-          var i = 0
-          while (i < n) {
-            val ki = java.util.Arrays.binarySearch(byK(0), ids(i).toLong)
-            if (ki >= 0) hits(0)(ki) += 1
-            var j = i + 1
-            while (j < n) {
-              val pk = ids(i).toLong * v + ids(j)
-              val kj = java.util.Arrays.binarySearch(pairs, pk)
-              if (kj >= 0) {
-                hits(1)(kj) += 1
-                // A-Priori: a frequent triple's (i,j) prefix is itself a
-                // local candidate somewhere, so the union contains it —
-                // extending only candidate pairs loses nothing
-                var l = j + 1
-                while (l < n) {
-                  val kt = java.util.Arrays.binarySearch(byK(2), pk * v + ids(l))
-                  if (kt >= 0) hits(2)(kt) += 1
-                  l += 1
-                }
+      return phase2Generic(b, candidates, minsup)
+    val v = items.length.toLong
+    val idOf = items.iterator.zipWithIndex.toMap
+    // candidates in (size, packed key) order; item ids follow
+    // lexicographic order, so packing sorted-string itemsets yields
+    // keys comparable across both sides
+    val keyed = candidates.map(c =>
+        (c, c.foldLeft(0L)((a, it0) => a * v + idOf(it0))))
+      .sortBy { case (c, key) => (c.length, key) }
+    val byK: Array[Array[Long]] = Array.tabulate(MaxSize)(k0 =>
+      keyed.collect { case (c, key) if c.length == k0 + 1 => key })
+    val dictB = b.sparkContext.broadcast((idOf, byK))
+    val hits = b.mapPartitions { it =>
+      val (idOf, byK) = dictB.value
+      val hits = byK.map(a => new Array[Long](a.length))
+      val pairs = byK(1) // size-2 candidates prune the triple loop
+      it.foreach { basket =>
+        val ids = basket.iterator.flatMap(idOf.get).toArray
+        val n = ids.length
+        var i = 0
+        while (i < n) {
+          val ki = java.util.Arrays.binarySearch(byK(0), ids(i).toLong)
+          if (ki >= 0) hits(0)(ki) += 1
+          var j = i + 1
+          while (j < n) {
+            val pk = ids(i).toLong * v + ids(j)
+            val kj = java.util.Arrays.binarySearch(pairs, pk)
+            if (kj >= 0) {
+              hits(1)(kj) += 1
+              // A-Priori: a frequent triple's (i,j) prefix is itself a
+              // local candidate somewhere, so the union contains it —
+              // extending only candidate pairs loses nothing
+              var l = j + 1
+              while (l < n) {
+                val kt = java.util.Arrays.binarySearch(byK(2), pk * v + ids(l))
+                if (kt >= 0) hits(2)(kt) += 1
+                l += 1
               }
-              j += 1
             }
-            i += 1
+            j += 1
           }
+          i += 1
         }
-        (for {
-          k0 <- (0 until MaxSize).iterator
-          ix <- byK(k0).indices.iterator if hits(k0)(ix) > 0
-        } yield (k0 + 1, byK(k0)(ix), hits(k0)(ix))).iterator
-      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
-        Encoders.scalaLong))
-      .toDF("sz0", "packed", "c")
-      .groupBy(col("sz0"), col("packed"))
-      .agg(sum(col("c")).as("support"))
-      .filter(col("support") >= minsup)
-    counted.as[(Int, Long, Long)](
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
-          Encoders.scalaLong))
-      .map { case (k, packed, support) =>
-        val itemArr = dictB.value._1
-        val v = itemArr.length.toLong
-        val ids = Iterator.iterate((packed, List.empty[Int])) {
-          case (p, acc) => (p / v, (p % v).toInt :: acc)
-        }.drop(k).next()._2
-        (ids.map(itemArr).mkString(","), k.toLong, support)
-      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong))
-      .toDF("itemset", "sz", "support")
-      .orderBy(col("sz"), col("itemset"))
+      }
+      Iterator.single(hits)
+    }.reduce(addHits)
+    frequent(keyed.map(_._1), hits.flatten, minsup)
   }
+
+  /** Element-wise sum into `a` (a task's own result). */
+  private def addHits(a: Array[Array[Long]], b: Array[Array[Long]])
+  : Array[Array[Long]] = {
+    a.indices.foreach(k => a(k).indices.foreach(i => a(k)(i) += b(k)(i)))
+    a
+  }
+
+  /** The rows of the candidates whose hit count reaches `minsup`. */
+  private def frequent(cands: Array[Vector[String]], hits: Array[Long],
+      minsup: Long): Seq[(String, Long, Long)] =
+    cands.indices.filter(hits(_) >= minsup).map(ix =>
+      (cands(ix).mkString(","), cands(ix).length.toLong, hits(ix)))
 
   /** Exact phase-2 counting with string itemset keys — the fallback
     * when the candidate vocabulary is too large to base-v pack into a
-    * Long. Same candidate-bounded shuffle shape as the packed path
-    * (per-partition partial counts, one aggregate), just heavier keys;
-    * SonSpec pins agreement between the two paths. */
-  private[graft] def phase2Generic(
-      b: org.apache.spark.sql.Dataset[Array[String]],
-      dictB: org.apache.spark.broadcast.Broadcast[
-        (Array[String], Array[Vector[String]])],
-      minsup: Long): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    b.mapPartitions { it =>
-        val cands = dictB.value._2
-        val candSet: Set[Vector[String]] = cands.toSet
-        val vocab: Set[String] = cands.iterator.flatten.toSet
-        val counts = mutable.HashMap.empty[Vector[String], Long]
-        it.foreach { basket =>
-          val bs = basket.filter(vocab)
-          var k = 1
-          while (k <= MaxSize) {
-            if (bs.length >= k) bs.combinations(k).foreach { c =>
-              val cv = c.toVector
-              if (candSet(cv))
-                counts.update(cv, counts.getOrElse(cv, 0L) + 1)
-            }
-            k += 1
-          }
-        }
-        counts.iterator.map { case (cv, n) =>
-          (cv.mkString(","), cv.length.toLong, n)
-        }
-      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong))
-      .toDF("itemset", "sz", "c")
-      .groupBy(col("itemset"), col("sz"))
-      .agg(sum(col("c")).as("support"))
-      .filter(col("support") >= minsup)
-      .orderBy(col("sz"), col("itemset"))
+    * Long. Same shape as the packed path (a dense hit array per
+    * partition, summed by `reduce`), just heavier keys; SonSpec pins
+    * agreement between the two paths. */
+  private[graft] def phase2Generic(b: RDD[Array[String]],
+      candidates: Array[Vector[String]], minsup: Long)
+  : Seq[(String, Long, Long)] = {
+    val candB = b.sparkContext.broadcast(candidates)
+    val hits = b.mapPartitions { it =>
+      val index = candB.value.iterator.zipWithIndex.toMap
+      val vocab = candB.value.iterator.flatten.toSet
+      val hits = new Array[Long](candB.value.length)
+      it.foreach { basket =>
+        val bs = basket.filter(vocab)
+        (1 to math.min(MaxSize, bs.length)).foreach(k => bs.combinations(k)
+          .foreach(c => index.get(c.toVector).foreach(hits(_) += 1)))
+      }
+      Iterator.single(Array(hits))
+    }.reduce(addHits).head
+    frequent(candidates, hits, minsup)
   }
 
   /** Oracle: exhaustive 1/2/3-itemset counting by self-joins. CTEs are

@@ -28,8 +28,14 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("bfr recovers well-separated 64-d clusters (NMI > 0.8)") {
+    assertBfrRecovers(64)
+  }
+
+  /** BFR over K separable `dim`-d blobs labels every point exactly once
+    * and recovers the blobs. */
+  private def assertBfrRecovers(dim: Int): Unit = {
     import spark.implicits._
-    val data = blobs(1000, Bfr.K, Bfr.Dim)
+    val data = blobs(1000, Bfr.K, dim)
     val pts = data.map { case (id, v, _) => (id, v) }.toDF("vec_id", "vd")
     val out = Bfr.runOn(pts).collect().map(r => r.getLong(0) -> r.getInt(1))
     assert(out.length == data.size, "every vector labeled")
@@ -37,7 +43,13 @@ class ClusterSpec extends AnyFunSuite {
     val byId = out.toMap
     val nmi = TestUtil.nmi(data.map { case (id, _, _) => byId(id) },
       data.map(_._3))
-    assert(nmi > 0.8, s"NMI $nmi")
+    assert(nmi > 0.8, s"$dim-d NMI $nmi")
+  }
+
+  // α·√d and the local-Lloyd sums follow the data's d, not a fixed 64
+  test("bfr recovers well-separated 2-d and 100-d clusters (NMI > 0.8)") {
+    assertBfrRecovers(2)
+    assertBfrRecovers(100)
   }
 
   test("bfr summary kernel: centroid, σ, Mahalanobis, σ = 0 quirk") {
@@ -68,7 +80,8 @@ class ClusterSpec extends AnyFunSuite {
         Bfr.Round(Array.empty, Array(100 -> fz(0), 101 -> fz(100)),
           Seq(101 -> 100)),
         Bfr.Round(Array.empty, Array.empty, Seq.empty)),
-      created = Map(25L -> (2, 101)), stats = Seq.empty)
+      created = Map(25L -> (2, 101)), stats = Seq.empty,
+      thresh = Bfr.Alpha * math.sqrt(2))
     val far = Array(500.0, 500.0)
     assert(fit.label(3L, far).contains(0), "chunk 0: nearest centroid")
     assert(fit.label(15L, Array(100.0, 100.0)).contains(100),
@@ -150,13 +163,48 @@ class ClusterSpec extends AnyFunSuite {
     assert(q40Jobs.size <= 7, q40Jobs.mkString("\n"))
     val (_, q41Jobs) = TestUtil.countJobs(spark)(q41Run())
     assert(q41Jobs.size <= 25, q41Jobs.mkString("\n"))
-    val pts = KMeans.points(spark, sfDir).localCheckpoint()
-    val ds = Bfr.foldBy(pts.collect().iterator.take(40).map(r =>
-      (r.getLong(0).toInt % 2, r.getSeq[Double](1).toArray)))
-      .map { case (c, st) => (c, st.frozen) }.toArray
+    val pts = KMeans.persistPoints(KMeans.points(spark, sfDir))
+    val ds = twoSummaries(pts)
     val (parts, roundJobs) = TestUtil.countJobs(spark)(
-      Bfr.chunkRound(pts, 100L, 200L, ds, Array.empty, Bfr.RsCap))
+      Bfr.chunkRound(pts, 100L, 200L, ds, Array.empty, Bfr.RsCap, thresh64))
     assert(roundJobs.size == 1, roundJobs.mkString("\n"))
     assert(parts.flatMap(_.stats).map(_._2.n).sum == 100L)
+  }
+
+  private val thresh64 = Bfr.Alpha * math.sqrt(64)
+
+  /** Two frozen DS summaries from the first 40 points, split by id
+    * parity. */
+  private def twoSummaries(pts: org.apache.spark.rdd.RDD[KMeans.Pt]) =
+    Bfr.foldBy(pts.take(40).iterator.map { case (id, p, _) =>
+      ((id % 2).toInt, p) }).map { case (c, st) => (c, st.frozen) }.toArray
+
+  test("no Catalyst per round: a BFR chunk round and a Lloyd iteration " +
+      "are each 1 job and 0 SQL executions") {
+    val pts = KMeans.persistPoints(KMeans.points(spark, sfDir))
+    pts.count()
+    val init = pts.take(Bfr.K).map { case (id, p, _) => (id.toInt, p) }.toSeq
+    val ds = twoSummaries(pts)
+    val (_, lloydJobs, lloydSql) = TestUtil.countRuns(spark)(
+      KMeans.lloydCentroids(pts, Bfr.K, 1, Some(init)))
+    assert(lloydJobs.size == 1, lloydJobs.mkString("\n"))
+    assert(lloydSql.isEmpty, lloydSql.mkString("\n"))
+    val (_, roundJobs, roundSql) = TestUtil.countRuns(spark)(
+      Bfr.chunkRound(pts, 100L, 200L, ds, Array.empty, Bfr.RsCap, thresh64))
+    assert(roundJobs.size == 1, roundJobs.mkString("\n"))
+    assert(roundSql.isEmpty, roundSql.mkString("\n"))
+  }
+
+  test("job pins: q40 builds in 7 jobs, q41 in 18; each writes in 1") {
+    val out = java.nio.file.Files.createTempDirectory("q40-jobs").toString
+    Seq("q40_kmeans" -> 7, "q41_bfr" -> 18).foreach { case (q, pin) =>
+      val fn = SparkEntry.queries(q)
+      fn(spark, sfDir).write.mode("overwrite").parquet(out) // warm
+      val (df, build) = TestUtil.countJobs(spark)(fn(spark, sfDir))
+      val (_, write) = TestUtil.countJobs(spark)(
+        df.write.mode("overwrite").parquet(out))
+      assert((build.size, write.size) == (pin, 1),
+        (Seq(q) ++ build ++ Seq("-- write") ++ write).mkString("\n"))
+    }
   }
 }

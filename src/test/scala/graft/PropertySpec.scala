@@ -255,4 +255,82 @@ class PropertySpec extends AnyFunSuite {
         stats.map { case (t, st) => t -> st.n } == wantN
     })
   }
+
+  test("SON's fused count + phase 1 and its reduce phase 2 == brute-force " +
+      "frequent itemsets over any partitioning") {
+    import SparkTestSession._
+    val gen = for {
+      baskets <- Gen.oneOf(basketsGen, basketsGen.map(_.take(1)),
+        Gen.choose(0, 30).flatMap(n => basketsGen.map(_.take(n))))
+      nParts <- Gen.choose(1, 5)
+      oneHoldsAll <- Gen.oneOf(true, false)
+      part <- Gen.listOfN(baskets.size,
+        if (oneHoldsAll) Gen.const(nParts - 1) else Gen.choose(0, nParts - 1))
+      frac <- Gen.oneOf(0.05, 0.2, 0.4)
+    } yield (baskets, nParts, part, frac)
+    check(Prop.forAll(gen) { case (baskets, nParts, part, frac) =>
+      // partition i holds exactly the baskets assigned to it, in order
+      val parts = (0 until nParts).map(i => baskets.zip(part).collect {
+        case (b, `i`) => b.toArray })
+      val rdd = spark.sparkContext.parallelize(parts, nParts).flatMap(identity)
+      val minsup = math.max(1L, math.ceil(frac * baskets.size).toLong)
+      val counts = scala.collection.mutable.Map.empty[List[String], Long]
+      baskets.foreach { b =>
+        (1 to math.min(Son.MaxSize, b.size)).foreach { k =>
+          b.combinations(k).foreach(c =>
+            counts.update(c, counts.getOrElse(c, 0L) + 1))
+        }
+      }
+      val want = counts.collect { case (c, n) if n >= minsup =>
+        (c.mkString(","), c.size.toLong, n) }.toSet
+      Son.mine(rdd, frac).toSet == want
+    })
+  }
+
+  test("foldNearest over an RDD == an in-order brute-force fold of each " +
+      "glom'd partition, merged in partition order: N, SUM, SUMSQ bit for bit") {
+    import SparkTestSession._
+    import graft.cluster.KMeans
+    val vec = Gen.listOfN(3, Gen.chooseNum(-50.0, 50.0)).map(_.toArray)
+    val gen = for {
+      pts <- Gen.choose(0, 50).flatMap(Gen.listOfN(_, vec))
+      cents <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, vec))
+      nParts <- Gen.choose(1, 5)
+      part <- Gen.listOfN(pts.size, Gen.choose(0, nParts - 1))
+    } yield (pts, cents, nParts, part)
+    check(Prop.forAll(gen) { case (pts, cents, nParts, part) =>
+      val parts = (0 until nParts).map(i => pts.indices.collect {
+        case j if part(j) == i => (j.toLong, pts(j), 0) })
+      val rdd = spark.sparkContext.parallelize(parts, nParts).flatMap(identity)
+      val cids = cents.indices.map(_ * 7 + 3) // ids are not positions
+      val got = KMeans.foldNearest(rdd, cids.zip(cents))
+      def d2(a: Array[Double], b: Array[Double]): Double =
+        a.indices.foldLeft(0.0)((s, i) => s + (a(i) - b(i)) * (a(i) - b(i)))
+      type St = (Long, Array[Double], Array[Double])
+      def add(a: St, b: St): St = (a._1 + b._1,
+        a._2.indices.map(i => a._2(i) + b._2(i)).toArray,
+        a._3.indices.map(i => a._3(i) + b._3(i)).toArray)
+      val want = rdd.glom().collect().foldLeft(Map.empty[Int, St]) {
+        (acc, partPts) =>
+          val local = scala.collection.mutable.LinkedHashMap.empty[Int, St]
+          partPts.foreach { case (_, p, _) =>
+            var best = 0
+            cents.indices.foreach { i =>
+              val (d, bd) = (d2(p, cents(i)), d2(p, cents(best)))
+              if (d < bd || (d == bd && cids(i) < cids(best))) best = i
+            }
+            val c = cids(best)
+            local(c) = add(local.getOrElse(c,
+              (0L, new Array[Double](3), new Array[Double](3))),
+              (1L, p, p.map(x => x * x)))
+          }
+          local.foldLeft(acc) { case (m, (c, st)) =>
+            m.updated(c, m.get(c).fold(st)(add(_, st))) }
+      }
+      got.keySet == want.keySet && got.forall { case (c, st) =>
+        val (n, sum, sumsq) = want(c)
+        st.n == n && st.sum.sameElements(sum) && st.sumsq.sameElements(sumsq)
+      }
+    })
+  }
 }

@@ -88,21 +88,25 @@ class SonSpec extends AnyFunSuite {
     // registered (packed) query on the same candidates
     import spark.implicits._
     val b = Son.baskets(spark, sfDir).select(col("basket"))
-      .as[Array[String]].repartition(4).localCheckpoint()
-    val total = b.count()
+      .as[Array[String]].repartition(4).rdd.cache()
+    val (total, candidates) = Son.phase1(b, Son.SupportFrac)
     val minsup = math.max(1L, math.ceil(Son.SupportFrac * total).toLong)
-    val candidates = b
-      .mapPartitions(it =>
-        Son.aprioriLocal(it.toVector, Son.SupportFrac, Son.MaxSize))
-      .distinct().collect().map(_.toVector)
-    val items = candidates.iterator.flatten.toArray.distinct.sorted
-    val dictB = spark.sparkContext.broadcast((items, candidates))
-    val gen = Son.phase2Generic(b, dictB, minsup).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val gen = Son.phase2Generic(b, candidates, minsup).toSet
     val packed = Son.sonItemsets(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(gen == packed,
       s"generic ${gen.size} vs packed ${packed.size}; " +
         s"diff ${(gen diff packed) ++ (packed diff gen)}")
+  }
+
+  test("job pins: q28 builds in 5 jobs and writes in 1") {
+    val q28 = SparkEntry.queries("q28_son_itemsets")
+    val out = java.nio.file.Files.createTempDirectory("q28-jobs").toString
+    q28(spark, sfDir).write.mode("overwrite").parquet(out) // warm
+    val (df, build) = TestUtil.countJobs(spark)(q28(spark, sfDir))
+    val (_, write) = TestUtil.countJobs(spark)(
+      df.write.mode("overwrite").parquet(out))
+    assert((build.size, write.size) == (5, 1),
+      (build ++ Seq("-- write") ++ write).mkString("\n"))
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -11,22 +13,36 @@ object TestUtil {
   /** Runs `body` under one `onJobStart` listener and returns its result
     * with one line per Spark job it started: "job <id>: <stage names>"
     * (the callsite-bearing stage names say WHAT ran; the optional
-    * description is usually absent for library-triggered jobs). Any
-    * job was SUBMITTED synchronously inside `body`, so its event is
-    * already queued: the bus is drained before the list is read. */
+    * description is usually absent for library-triggered jobs). */
   def countJobs[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
+    val (out, jobs, _) = countRuns(spark)(body)
+    (out, jobs)
+  }
+
+  /** [[countJobs]] plus one line per SQL execution (a Dataset action
+    * planned through Catalyst) that `body` started: "sql <id>: <desc>".
+    * Every job and execution was SUBMITTED synchronously inside `body`,
+    * so its event is already queued: the bus is drained before the
+    * lists are read. */
+  def countRuns[A](spark: SparkSession)(body: => A)
+  : (A, Seq[String], Seq[String]) = {
+    val jobs, sqls = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.add(s"job ${j.jobId}: " +
+        jobs.add(s"job ${j.jobId}: " +
           j.stageInfos.map(_.name).mkString(" ~ "))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          sqls.add(s"sql ${x.executionId}: ${x.description}")
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.GraftSparkInternals
         .waitUntilListenerBusEmpty(spark.sparkContext)
-      (out, seen.asScala.toSeq)
+      (out, jobs.asScala.toSeq, sqls.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
