@@ -1,23 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Dumps `explain("formatted")` for representative queries to PLANS.md —
-  * the plan-shape evidence (pushdown, broadcast joins, whole-stage
-  * codegen spans, partial aggregation) referenced from the README. */
+/** Prints `explain("formatted")` of representative queries in PLANS.md
+  * format — the plan-shape evidence (pushdown, broadcast joins,
+  * whole-stage codegen spans, partial aggregation) referenced from the
+  * README. Every frame is built exactly as Verify and Bench build it:
+  * gate estimates, eager checkpoints and driver collects all run, so
+  * each dump is the plan the query executes on the given data.
+  *
+  * Usage: `tools/run_java.sh graft.ExplainDump <sfDir> [id,id,...]` —
+  * the named ids (default: [[picks]]) to stdout; Spark's log goes to
+  * stderr. PLANS.md is the default roster at sf0.01. */
 object ExplainDump {
+  import graft.graph.Graphs
 
   /** Build the frame for a dumpable id — the registered query, or one
-    * of the `_`-prefixed synthetic dumps (memo-free recommender
-    * builds, the unsorted *On entry). Shared by [[main]] and
-    * PlanOnlySpec: the spec pins every id here to zero-job plan-only
-    * construction (VERDICT r15 item 7), so the dump roster and the
-    * zero-job roster can never drift apart. */
+    * of the `_`-prefixed synthetic dumps: memo-free recommender
+    * builds, the unsorted *On entry, and single rounds of the graph
+    * loops (inside the registered queries those sit behind
+    * checkpoint scans, so their plans are otherwise invisible). Every
+    * case calls the production definitions, never an inline rebuild
+    * that could drift from them. */
   private[graft] def frameFor(name: String,
-      spark: SparkSession, sfDir: String)
-  : org.apache.spark.sql.DataFrame = {
+      spark: SparkSession, sfDir: String): DataFrame = {
     import graft.mining.Recommend
+    def subEdges = Graphs.edges(spark, sfDir, Some(Graphs.SubNations),
+      Graphs.SubThreshold)
+    // q35/q36's round inputs, checkpointed like the production loops'
+    def roundInputs: (DataFrame, DataFrame) = {
+      val ed = subEdges
+      val ue = ed.select(col("src"), col("dst"))
+        .unionByName(ed.select(col("dst").as("src"),
+          col("src").as("dst")))
+        .localCheckpoint()
+      (ue, ue.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")).localCheckpoint())
+    }
     name match {
       // the memo-free recommender builds — the registered entries
       // read memoized artifacts, which hides the build plan
@@ -30,15 +50,23 @@ object ExplainDump {
         Recommend.ProfileTopF, Recommend.RecK)
       case "_q68_on_unsorted" => graft.ops.Pipeline.qualitySampleOn(
         Tables.documents(spark, sfDir))
+      // the un-checkpointed co-purchase edge subtree
+      case "_edge_build" => Graphs.capBySourceDf(
+        Graphs.custParts(spark, sfDir, None), Graphs.MaxSourceDf)
+      case "_lpa_round" =>
+        val (ue, labels0) = roundInputs; Graphs.lpaRound(ue, labels0)
+      case "_cc_round" =>
+        val (ue, labels0) = roundInputs; Graphs.ccRound(ue, labels0)
+      // one q64 large-star step over a checkpointed edge frame
+      case "_star_round" =>
+        Graphs.starLargeRound(subEdges.localCheckpoint())
       case _ => SparkEntry.queries(name)(spark, sfDir)
     }
   }
 
-  /** The dumpable (id, note) roster — every entry here is dumped to
-    * PLANS.md by [[main]] AND pinned to zero-job plan-only
-    * construction by PlanOnlySpec (VERDICT r15 item 7). Operators
-    * that iterate at construction (CC, Lloyd, GN) are deliberately
-    * absent — see the PlanOnly scaladoc's SCOPE note. */
+  /** The default (id, note) roster — PLANS.md. Operators that iterate
+    * to a data-dependent fixpoint (CC, Lloyd, GN) are absent: their
+    * dump would be one checkpoint scan of the converged result. */
   private[graft] val picks: Seq[(String, String)] = Seq(
     ("q01_pricing_summary",
       "partial+final HashAggregate; only referenced columns read"),
@@ -60,7 +88,8 @@ object ExplainDump {
     ("q33_degree_hist",
       "J2 self-join shape; histogram output independent of scale. " +
         "Pair aggregate is volume-gated (Graphs.edgesFromCp): " +
-        "plan-only/below-guard shows the stock partial-agg layout; " +
+        "below the guard (every oracle SF) the stock partial-agg " +
+        "layout; " +
         "past the narrow-pair guard the pair stream clusters by " +
         "(src,dst) at mass/2M partitions (zero spill at 100×, " +
         "diag/r14/q33_100x_gate_evidence.out)"),
@@ -164,30 +193,38 @@ object ExplainDump {
         "are checkpointed scans — delta never self-joins, and the " +
         "asymmetric band join replaces the full n-squared pass"))
 
+  /** One PLANS.md section: the id, its roster note, the formatted
+    * physical plan. */
+  private[graft] def section(name: String, spark: SparkSession,
+      sfDir: String): String = {
+    val plan = frameFor(name, spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val note = picks.toMap.get(name).fold("")(n => s"_${n}_\n\n")
+    s"\n## $name\n\n$note```\n$plan```"
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    // plan-only construction: volume-gate estimates are skipped (the
-    // gates take their below-guard branch — the true plan at this SF)
-    // so dumping plans runs no estimate jobs (VERDICT r12 item 3)
-    val spark = Sessions.local(8, "spark.graft.planOnly" -> "true")
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of representative queries\n\n")
-    sb.append(s"Generated by `graft.ExplainDump` at sf0.01, commit " +
-      s"${GitStamp.sha}. What to look\n")
-    sb.append("for per plan is noted above each dump. Volume-gated\n")
-    sb.append("operators are dumped in their below-guard (stock) " +
-      "branch —\nthe executing plan at this SF; the above-guard " +
-      "branches are\npinned by plan tests (RecommendSpec/" +
-      "SimilaritySpec).\n")
-    picks.foreach { case (name, note) =>
-      val plan = frameFor(name, spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n_${note}_\n\n```\n$plan```\n")
+    val sfDir = args(0)
+    val ids =
+      if (args.length > 1) args(1).split(",").toSeq else picks.map(_._1)
+    val spark = Sessions.local()
+    val sf = java.nio.file.Paths.get(sfDir).getFileName
+    // UTF-8 whatever the locale: the notes and plans are not ASCII
+    val out = new java.io.PrintStream(System.out, true,
+      java.nio.charset.StandardCharsets.UTF_8)
+    import out.println
+    println("# PLANS — physical plans of representative queries\n")
+    println(s"Generated by `graft.ExplainDump` at $sf on " +
+      s"local[${Sessions.cpus}], commit ${GitStamp.sha}. What to look\n" +
+      "for per plan is noted above each dump. Every frame is built\n" +
+      "the way Verify and Bench build it (gate estimates, checkpoints\n" +
+      "and driver collects run), so each volume-gated operator shows\n" +
+      "the branch its gate takes at this SF; the other branches are\n" +
+      "pinned by plan tests (RecommendSpec/SimilaritySpec/GraphSpec).")
+    ids.foreach { name =>
+      println(section(name, spark, sfDir))
+      Sessions.dropCheckpoints(spark)
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[explain] wrote $out")
     spark.stop()
   }
 }

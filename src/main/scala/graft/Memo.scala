@@ -183,16 +183,9 @@ object Memo {
     }
   }
 
-  /** Get-or-build the artifact `name` for dataset dir `d`. Under
-    * plan-only construction ([[PlanOnly]], ExplainDump's contract)
-    * the build is neither materialized NOR cached: the returned
-    * stand-in dumps the same `Scan ExistingRDD` plan a real
-    * checkpoint would, runs zero jobs, and — because it never enters
-    * the cache — can never be served to a later real consumer of the
-    * same session. */
+  /** Get-or-build the artifact `name` for dataset dir `d`. */
   def of(s: SparkSession, d: String, name: String)
       (build: => DataFrame): DataFrame = {
-    if (PlanOnly(s)) return PlanOnly.cp(build)
     evictDead(s)
     val (app, start) = contextKey(s)
     val cell = entries.computeIfAbsent(Key(app, start, s"$d#$name"),

@@ -771,7 +771,7 @@ object ScaleStress {
     md ++= "runs k ∝ corpus). Times are min-of-2, interleaved, one\n"
     md ++= s"warmed session, local[$cpus]; memo-free entry points (the\n"
     md ++= "algorithms, not the session cache). Session shuffle\n"
-    md ++= "partitions stay at 32 at every scale; the CF chain's two\n"
+    md ++= s"partitions stay at $cpus at every scale; the CF chain's two\n"
     md ++= "corpus-scale shuffles are volume-gated INSIDE the operator\n"
     md ++= "(Recommend.sizedByCardinality): past a measured 4M-rows-per-\n"
     md ++= "task spill guard they repartition by their grouping keys at\n"
@@ -884,152 +884,104 @@ object ScaleStress {
       }.mkString(" | ")
       md ++= s"| $name | $cols |\n"
     }
-    // q87 stage-attribution table (one timed pass per scale)
-    if (runQ87Stages) {
-    md ++= "\n## q87 stage attribution (min-of-2 per scale, forced " +
-      "stage boundaries)\n\n"
-    md ++= "s3 is checkpointed for measurement (production fuses s3→s4" +
-      "; their sum is the query). ui = distinct+cap matrix; sims = " +
-      "the f² co-occurrence self-join + cosine; top_m = symmetrize + " +
-      "per-item rank; scoring = candidate join + (u,j) agg + " +
-      "anti-join + top-k.\n\n"
-    md ++= s"| stage | $baseLabel sec | " +
-      factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
-    md ++= "|---" * (3 + factors.size) + "|\n"
-    stageNames.foreach { n =>
-      val cols = points.map(d => f"${stageTimes((n, d))}%.1f")
-        .mkString(" | ")
-      val slope =
-        if (factors.size < 2) "n/a"
-        else f"${(stageTimes((n, s"target/scale${factors.last}")) /
-          math.max(stageTimes((n, s"target/scale${factors.head}")), 1e-3)) /
-          (factors.last.toDouble / factors.head)}%.2f"
-      md ++= s"| $n | $cols | $slope |\n"
-    }
-    }
-
-    // q92 stage-attribution table: serialized arms + fusion vs the
-    // fused one-plan run from the main table
-    if (runQ92Stages) {
-    md ++= "\n## q92 stage attribution (min-of-2 per scale, arms " +
-      "serialized behind checkpoint boundaries)\n\n"
-    md ++= "ui = the shared capped matrix; cf_arm = q87's full CF " +
-      "top-k over it; cn_arm = q89's full content top-k over it; " +
-      "fusion = the full-outer CombSUM join + per-user re-rank over " +
-      "two k-per-user checkpointed frames. `h_sum` is the SERIALIZED " +
-      "cost (arms run one after the other, each with the whole " +
-      "heap/disk to itself); `q92 fused` is the main table's " +
-      "one-plan run where both arms execute concurrently inside one " +
-      "plan; `co-residency gap` = fused − sum: the cost of the two " +
-      "arms' shuffle/aggregate state sharing one JVM heap and one " +
-      "spill disk. On a real cluster the gap prices contention, not " +
-      "algorithm — executors scale with data and each arm's per-node " +
-      "state share stays constant.\n\n"
-    md ++= s"| stage | $baseLabel sec | " +
-      factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
-    md ++= "|---" * (3 + factors.size) + "|\n"
+    // per-replica cost at the LAST point over the FIRST: ≈1 → linear
     def slopeOf(times: String => Double): String =
       if (factors.size < 2) "n/a"
       else f"${(times(s"target/scale${factors.last}") /
         math.max(times(s"target/scale${factors.head}"), 1e-3)) /
         (factors.last.toDouble / factors.head)}%.2f"
-    q92StageNames.foreach { n =>
-      val cols = points.map(d => f"${stageTimes((n, d))}%.1f")
-        .mkString(" | ")
-      md ++= s"| $n | $cols | ${slopeOf(d => stageTimes((n, d)))} |\n"
+    def stageRow(label: String, times: String => Double): String =
+      s"| $label | " + points.map(d => f"${times(d)}%.1f").mkString(" | ") +
+        s" | ${slopeOf(times)} |\n"
+    // one stage-attribution section: a wall row per stage, plus slope
+    def stageTable(title: String, legend: String,
+        names: Seq[String]): Unit = {
+      md ++= s"\n## $title\n\n$legend\n\n"
+      md ++= s"| stage | $baseLabel sec | " +
+        factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
+      md ++= "|---" * (3 + factors.size) + "|\n"
+      names.foreach(n => md ++= stageRow(n, d => stageTimes((n, d))))
     }
-    val hSum = (d: String) => q92StageNames.map(n => stageTimes((n, d))).sum
-    md ++= s"| h_sum (serialized) | " +
-      points.map(d => f"${hSum(d)}%.1f").mkString(" | ") +
-      s" | ${slopeOf(hSum)} |\n"
-    if (best.contains(("q92_hybrid_rec", base))) {
-      val fused = (d: String) => best(("q92_hybrid_rec", d))._1
-      md ++= s"| q92 fused (one plan) | " +
-        points.map(d => f"${fused(d)}%.1f").mkString(" | ") +
-        s" | ${slopeOf(fused)} |\n"
-      md ++= s"| co-residency gap | " +
-        points.map(d => f"${fused(d) - hSum(d)}%.1f").mkString(" | ") +
-        " | — |\n"
-    }
+
+    // q87 stage-attribution table (one timed pass per scale)
+    if (runQ87Stages) stageTable(
+      "q87 stage attribution (min-of-2 per scale, forced stage " +
+        "boundaries)",
+      "s3 is checkpointed for measurement (production fuses s3→s4" +
+        "; their sum is the query). ui = distinct+cap matrix; sims = " +
+        "the f² co-occurrence self-join + cosine; top_m = symmetrize + " +
+        "per-item rank; scoring = candidate join + (u,j) agg + " +
+        "anti-join + top-k.",
+      stageNames)
+
+    // q92 stage-attribution table: serialized arms + fusion vs the
+    // fused one-plan run from the main table
+    if (runQ92Stages) {
+      stageTable(
+        "q92 stage attribution (min-of-2 per scale, arms serialized " +
+          "behind checkpoint boundaries)",
+        "ui = the shared capped matrix; cf_arm = q87's full CF " +
+          "top-k over it; cn_arm = q89's full content top-k over it; " +
+          "fusion = the full-outer CombSUM join + per-user re-rank over " +
+          "two k-per-user checkpointed frames. `h_sum` is the SERIALIZED " +
+          "cost (arms run one after the other, each with the whole " +
+          "heap/disk to itself); `q92 fused` is the main table's " +
+          "one-plan run where both arms execute concurrently inside one " +
+          "plan; `co-residency gap` = fused − sum: the cost of the two " +
+          "arms' shuffle/aggregate state sharing one JVM heap and one " +
+          "spill disk. On a real cluster the gap prices contention, not " +
+          "algorithm — executors scale with data and each arm's per-node " +
+          "state share stays constant.",
+        q92StageNames)
+      val hSum = (d: String) => q92StageNames.map(n => stageTimes((n, d))).sum
+      md ++= stageRow("h_sum (serialized)", hSum)
+      if (best.contains(("q92_hybrid_rec", base))) {
+        val fused = (d: String) => best(("q92_hybrid_rec", d))._1
+        md ++= stageRow("q92 fused (one plan)", fused)
+        md ++= s"| co-residency gap | " +
+          points.map(d => f"${fused(d) - hSum(d)}%.1f").mkString(" | ") +
+          " | — |\n"
+      }
     }
 
     // q93 stage-attribution table (VERDICT r13 item 7): the eval
     // side's own stages, separated from the shared retrain
-    if (runQ93Stages) {
-    md ++= "\n## q93 stage attribution (min-of-2 per scale, forced " +
-      "stage boundaries)\n\n"
-    md ++= "holdout_split = interaction distinct + per-user " +
-      "(max item, count) pick; retrain_cf = the anti-join train " +
-      "slice + q87's full volume-gated CF top-k (its own stage table " +
-      "owns the inner decomposition); eval_join = the users×k recs ⋈ " +
-      "holdout hit join + rollup. The checkpoint boundaries are " +
-      "measurement scaffolding; the stages' sum is the query.\n\n"
-    md ++= s"| stage | $baseLabel sec | " +
-      factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
-    md ++= "|---" * (3 + factors.size) + "|\n"
-    q93StageNames.foreach { n =>
-      val cols = points.map(d => f"${stageTimes((n, d))}%.1f")
-        .mkString(" | ")
-      val slope =
-        if (factors.size < 2) "n/a"
-        else f"${(stageTimes((n, s"target/scale${factors.last}")) /
-          math.max(stageTimes((n, s"target/scale${factors.head}")), 1e-3)) /
-          (factors.last.toDouble / factors.head)}%.2f"
-      md ++= s"| $n | $cols | $slope |\n"
-    }
-    }
+    if (runQ93Stages) stageTable(
+      "q93 stage attribution (min-of-2 per scale, forced stage " +
+        "boundaries)",
+      "holdout_split = interaction distinct + per-user " +
+        "(max item, count) pick; retrain_cf = the anti-join train " +
+        "slice + q87's full volume-gated CF top-k (its own stage table " +
+        "owns the inner decomposition); eval_join = the users×k recs ⋈ " +
+        "holdout hit join + rollup. The checkpoint boundaries are " +
+        "measurement scaffolding; the stages' sum is the query.",
+      q93StageNames)
 
     // dedup-composition stage-attribution table (VERDICT r14 item 3)
-    if (runChainStages) {
-    md ++= "\n## dedup-composition stage attribution (q61/q65/q80 " +
-      "chain; min-of-2 per scale, forced stage boundaries)\n\n"
-    md ++= "pair_list = q58's banded LSH near-dup pairs (volume-" +
-      "gated, output-sized); cc_contraction = star-contraction " +
-      "connected components over the pair graph (iterative, " +
-      "per-round localCheckpoint — the round count is O(log " +
-      "diameter), printed by the run log); split_audit = q80's " +
-      "token-count join + canon-hash split + cross-pair audit. " +
-      "q61's anti-join tail and q65's relabel are strict subsets of " +
-      "these stages; their full-query walls sit in the main table.\n\n"
-    md ++= s"| stage | $baseLabel sec | " +
-      factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
-    md ++= "|---" * (3 + factors.size) + "|\n"
-    chainStageNames.foreach { n =>
-      val cols = points.map(d => f"${stageTimes((n, d))}%.1f")
-        .mkString(" | ")
-      val slope =
-        if (factors.size < 2) "n/a"
-        else f"${(stageTimes((n, s"target/scale${factors.last}")) /
-          math.max(stageTimes((n, s"target/scale${factors.head}")), 1e-3)) /
-          (factors.last.toDouble / factors.head)}%.2f"
-      md ++= s"| $n | $cols | $slope |\n"
-    }
-    }
+    if (runChainStages) stageTable(
+      "dedup-composition stage attribution (q61/q65/q80 chain; " +
+        "min-of-2 per scale, forced stage boundaries)",
+      "pair_list = q58's banded LSH near-dup pairs (volume-" +
+        "gated, output-sized); cc_contraction = star-contraction " +
+        "connected components over the pair graph (iterative, " +
+        "per-round localCheckpoint — the round count is O(log " +
+        "diameter), printed by the run log); split_audit = q80's " +
+        "token-count join + canon-hash split + cross-pair audit. " +
+        "q61's anti-join tail and q65's relabel are strict subsets of " +
+        "these stages; their full-query walls sit in the main table.",
+      chainStageNames)
 
     // q85 stage-attribution table (VERDICT r15 item 3)
-    if (runQ85Stages) {
-    md ++= "\n## q85 exact gram-overlap stage attribution " +
-      "(min-of-2 per scale, forced stage boundary)\n\n"
-    md ++= "gram_set = tokenize + 5-gram explode + distinct " +
-      "(source, gram) — the corpus-sized build; pair_join = the " +
-      "gram-keyed self-join + (src_a, src_b) pair aggregate — the " +
-      "exchange whose skew question this table answers (per-gram " +
-      "join input ≤ #sources because the set is distinct; per-node " +
-      "spill evidence: `graft.StageProbe <dir> q85`).\n\n"
-    md ++= s"| stage | $baseLabel sec | " +
-      factors.map(n => s"${n}× sec").mkString(" | ") + " | slope |\n"
-    md ++= "|---" * (3 + factors.size) + "|\n"
-    q85StageNames.foreach { n =>
-      val cols = points.map(d => f"${stageTimes((n, d))}%.1f")
-        .mkString(" | ")
-      val slope =
-        if (factors.size < 2) "n/a"
-        else f"${(stageTimes((n, s"target/scale${factors.last}")) /
-          math.max(stageTimes((n, s"target/scale${factors.head}")), 1e-3)) /
-          (factors.last.toDouble / factors.head)}%.2f"
-      md ++= s"| $n | $cols | $slope |\n"
-    }
-    }
+    if (runQ85Stages) stageTable(
+      "q85 exact gram-overlap stage attribution (min-of-2 per scale, " +
+        "forced stage boundary)",
+      "gram_set = tokenize + 5-gram explode + distinct " +
+        "(source, gram) — the corpus-sized build; pair_join = the " +
+        "gram-keyed self-join + (src_a, src_b) pair aggregate — the " +
+        "exchange whose skew question this table answers (per-gram " +
+        "join input ≤ #sources because the set is distinct; per-node " +
+        "spill evidence: `graft.StageProbe <dir> q85`).",
+      q85StageNames)
 
     // the same stages in BYTES and CPU (from the min-wall pass): if
     // shuffle bytes and CPU grow ∝ data while wall grows faster, the

@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.PlanOnly.CpOps
 import graft.Tables._
 
 /** Graph analytics over the co-purchase graph — the Spark-native form of
@@ -90,20 +89,17 @@ object Graphs {
     // paid it 4×). Materializing cp once trades bounded storage
     // (distinct (ck,pk) pairs) for never re-reading the fact tables.
     val cp = capBySourceDf(custParts(s, d, maxNation), MaxSourceDf)
-      .cpLocal()
+      .localCheckpoint()
     // Exact pair mass, memoized per (dataset, nation cap) so a
     // session's 2–4 edge-list consumers pay the one-aggregate local
-    // scan once; plan-only construction skips it (the gate takes its
-    // below-guard branch — the stock plan at every oracle SF).
-    // Deliberately NOT skipped for nation-bounded subgraphs (ADVICE
-    // r14): "bounded" is a constant FRACTION of customers, not a
-    // constant size — the guard stays armed at any corpus scale, and
-    // the memoized estimate costs one local-scan job per session key.
-    val mass =
-      if (planOnly(s)) 0L
-      else graft.Memo.scalarOf[java.lang.Long](s, d,
-        s"edges_pair_mass_${maxNation.getOrElse(-1)}")(
-        Long.box(pairMass(cp))).longValue
+    // scan once. Deliberately measured for nation-bounded subgraphs
+    // too (ADVICE r14): "bounded" is a constant FRACTION of
+    // customers, not a constant size — the guard stays armed at any
+    // corpus scale, and the memoized estimate costs one local-scan
+    // job per session key.
+    val mass = graft.Memo.scalarOf[java.lang.Long](s, d,
+      s"edges_pair_mass_${maxNation.getOrElse(-1)}")(
+      Long.box(pairMass(cp))).longValue
     edgesFromCp(cp, thr, mass)
   }
 
@@ -145,8 +141,6 @@ object Graphs {
       .filter(col("shared") >= thr)
       .select(col("src"), col("dst"))
 
-  private def planOnly(s: SparkSession): Boolean = graft.PlanOnly(s)
-
   /** Both-direction edges (neighbor expansion). */
   private def undirected(ed: DataFrame): DataFrame =
     ed.select(col("src"), col("dst"))
@@ -180,7 +174,7 @@ object Graphs {
     * result is histogram-sized regardless of scale. */
   def degreeHist(s: SparkSession, d: String): DataFrame =
     // edges checkpointed: undirected() references it twice
-    degreeHistFromEdges(edges(s, d, None, EdgeThreshold).cpLocal())
+    degreeHistFromEdges(edges(s, d, None, EdgeThreshold).localCheckpoint())
       .orderBy(col("degree"))
 
   /** q33's histogram tail over a prebuilt edge list — the ONE
@@ -241,7 +235,7 @@ object Graphs {
   }
 
   /** One LPA round over a both-direction edge list — the un-checkpointed
-    * plan, shared by [[lpa]] and PlanDump's `_lpa_round` evidence dump
+    * plan, shared by [[lpa]] and ExplainDump's `_lpa_round` dump
     * (an inline rebuild there could silently drift, ADVICE r14).
     * Deterministic argmax via max_by over a (cnt, −lbl) struct key —
     * same (highest count, then smallest label) winner the oracle's
@@ -310,7 +304,7 @@ object Graphs {
   }
 
   /** One min-label-propagation round — the un-checkpointed plan,
-    * shared by [[components]] and PlanDump's `_cc_round` evidence
+    * shared by [[components]] and ExplainDump's `_cc_round`
     * dump. The change indicator rides INSIDE the round's one
     * materialized frame (the old label is already on hand from the
     * `least` join), so the caller's convergence check is a
@@ -373,7 +367,7 @@ object Graphs {
     * per star step ((src,dst) dedup, src aggregate, join re-exchange).
     * Per-src fan-out is the node degree — the same key distribution
     * every one of those stages already grouped on. Lifted out of
-    * [[componentsLargeStar]] so PlanDump's `_star_round` evidence dump
+    * [[componentsLargeStar]] so ExplainDump's `_star_round` dump
     * shares the production definition (the ADVICE r14 rule; this
     * shape was r16's one optimization shipped without its plan
     * receipt — VERDICT r16 item 10). */
@@ -400,16 +394,6 @@ object Graphs {
   def componentsLargeStar(edges: DataFrame,
       localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
     val s = edges.sparkSession
-    // planOnly (the ExplainDump contract): the contraction iterates
-    // to a data-dependent fixpoint — there is no single "the plan"
-    // to build without running it (PlanOnly scaladoc's SCOPE note).
-    // Compositions that EMBED it behind a checkpoint boundary (q86's
-    // train pipeline) dump the same Scan-ExistingRDD stand-in a
-    // production run's materialized rounds leave, and construct
-    // joblessly (PlanOnlySpec pins q86 to zero non-schema jobs).
-    if (graft.PlanOnly(edges))
-      return graft.PlanOnly.cp(edges
-        .select(col("src").as("node"), col("dst").as("component")))
     def undir(e: DataFrame): DataFrame = starUndir(e)
     def minNbr(ue: DataFrame): DataFrame = starMinNbr(ue)
     var e = undir(edges).localCheckpoint()
@@ -556,23 +540,21 @@ object Graphs {
     * exact 0.0 terms, which cannot perturb either engine's sum). */
   def personalizedPagerank(s: SparkSession, d: String): DataFrame =
     pprOn(undirected(edges(s, d, Some(SubNations), SubThreshold))
-      .cpLocal())
+      .localCheckpoint())
 
   /** q91 over a caller-supplied both-direction (src, dst) edge list
     * with no dangling nodes. */
   def pprOn(ue: DataFrame): DataFrame = {
     val deg = ue.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).cpLocal()
+      .agg(count(lit(1)).as("deg")).localCheckpoint()
     val seeds = deg.orderBy(col("deg").desc, col("node").asc)
       .limit(PprSeedK).select(col("node"), lit(1).as("is_seed"))
-    // ≤ PprSeedK rows — a scalar driver sync; 1 under plan-only
-    // construction so the teleport constants baked into the dumped
-    // plan stay finite (the dump never executes them)
-    val k = if (graft.PlanOnly(ue)) 1L else seeds.count()
+    // ≤ PprSeedK rows — a scalar driver sync
+    val k = seeds.count()
     val degS = deg
       .join(broadcast(seeds), Seq("node"), "left_outer")
       .withColumn("is_seed", coalesce(col("is_seed"), lit(0)))
-      .cpLocal() // read every iteration + the seed indicator
+      .localCheckpoint() // read every iteration + the seed indicator
     var pr = degS.withColumn("pr",
       when(col("is_seed") === 1, lit(1.0 / k)).otherwise(lit(0.0)))
     for (_ <- 1 to PrIters) {
@@ -587,7 +569,7 @@ object Graphs {
             .otherwise(lit(0.0)) + lit(PrDamping) * col("inflow"))
             * 1e6 + 0.5) / 1e6)
         .select(col("node"), col("deg"), col("is_seed"), col("pr"))
-        .cpLocal()
+        .localCheckpoint()
     }
     pr.select(col("node"), col("is_seed").cast("long").as("is_seed"),
         col("pr").as("ppr"))

@@ -3,8 +3,6 @@ package graft.mining
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.PlanOnly
-import graft.PlanOnly.CpOps
 import graft.Tables._
 
 /** Item-item collaborative-filtering recommendations — the recommender
@@ -101,14 +99,9 @@ object Recommend {
     * `perRowBytes` a SQL expression estimating one row's in-memory
     * bytes. Order-of-magnitude honest, like the LSH gate's
     * `payloadBytesExpr`: consumers compare it against
-    * [[DimBroadcastBytes]], they don't budget with it. Under
-    * plan-only construction ([[PlanOnly]]) the measure is SKIPPED and
-    * reads (0, 0) — the in-gate branch, the true plan at oracle SF —
-    * matching the LSH estimate and the graph pair mass (VERDICT r14
-    * item 2). */
+    * [[DimBroadcastBytes]], they don't budget with it. */
   private[graft] def measuredDim(df: DataFrame,
       perRowBytes: String): (Long, Long) = {
-    if (PlanOnly(df)) return (0L, 0L)
     val r = df.agg(count(lit(1)).cast("long"),
       coalesce(sum(expr(perRowBytes)), lit(0L)).cast("long")).first()
     (r.getLong(0), r.getLong(1))
@@ -197,7 +190,7 @@ object Recommend {
     val ui0 = interactions.select(col("u"), col("i")).distinct()
     val keptUsers = ui0.groupBy(col("u"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= cap).select(col("u"))
-    ui0.join(keptUsers, Seq("u"), "left_semi").cpLocal()
+    ui0.join(keptUsers, Seq("u"), "left_semi").localCheckpoint()
   }
 
   /** The item-similarity index: top-`topM` cosine neighbors per item
@@ -220,8 +213,7 @@ object Recommend {
     * extra counting job. */
   def neighborTable(ui: DataFrame, coMin: Int, topM: Int,
       nItems: Long): DataFrame = {
-    val pairsEst = if (PlanOnly(ui)) 0L else pairsEstimate(ui)
-    neighborTable(ui, coMin, topM, nItems, pairsEst)
+    neighborTable(ui, coMin, topM, nItems, pairsEstimate(ui))
   }
 
   /** [[neighborTable]] with BOTH sizing scalars already known —
@@ -240,13 +232,13 @@ object Recommend {
     * degree joins fall back to shuffle-hash on the pair frame's keys. */
   private[graft] def simsTable(ui: DataFrame, coMin: Int,
       nItems: Long): DataFrame =
-    simsPlan(ui, coMin, nItems).cpLocal()
+    simsPlan(ui, coMin, nItems).localCheckpoint()
 
   /** [[simsTable]] with the pair estimate already known ([[neighborTable]]
     * computes it once for the top-M cut too). */
   private[graft] def simsTable(ui: DataFrame, coMin: Int,
       nItems: Long, pairsEst: Long): DataFrame =
-    simsPlan(ui, coMin, nItems, pairsEst).cpLocal()
+    simsPlan(ui, coMin, nItems, pairsEst).localCheckpoint()
 
   /** The EXACT pair count Σ n_u·(n_u−1)/2 of the co-occurrence
     * self-join — the cardinality that sizes the pair aggregate's
@@ -256,7 +248,6 @@ object Recommend {
     * the power-user cap, so n·(n−1)/2 ≤ 2016 and the sum fits a long
     * at any corpus size. */
   private[graft] def pairsEstimate(ui: DataFrame): Long = {
-    if (PlanOnly(ui)) return 0L // jobless dump: below-guard branch
     (ui.groupBy(col("u")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n") * (col("n") - lit(1))).cast("long"))
       .first() match {
@@ -328,8 +319,8 @@ object Recommend {
     * 588,924, its sort 16.8 s summed task time / 1,040 MiB peak —
     * the single most expensive sort in the plan, for zero reduction).
     * Exchanging first costs the same bytes the partial pass shipped
-    * (~100%) and leaves ONE sort. `symRowsBound = 0` (compat callers,
-    * plan-only) keeps session parallelism; past the spill guard the
+    * (~100%) and leaves ONE sort. `symRowsBound = 0` (compat callers)
+    * keeps session parallelism; past the spill guard the
     * exchange is cardinality-scaled like every corpus shuffle in this
     * family. */
   private[graft] def topMFromSims(sims: DataFrame, topM: Int): DataFrame =
@@ -389,19 +380,15 @@ object Recommend {
     // of the two scalar aggregates is one job with two tiny
     // exchanges). n ≤ the power-user cap here (every caller hands in
     // the capped matrix), so the pair sum stays far under long range —
-    // the same ANSI note as [[pairsEstimate]]. Jobless (0, 0, 0) under
-    // plan-only construction — every gate it feeds takes its in-gate
-    // branch, the executing plan at oracle SF.
-    val (uiRows, nItems, pairsEst) =
-      if (PlanOnly(ui)) (0L, 0L, 0L)
-      else {
-        val stats = ui.agg(count(lit(1)), count_distinct(col("i")))
-          .crossJoin(ui.groupBy(col("u")).agg(count(lit(1)).as("n"))
-            .agg(coalesce(sum(col("n") * (col("n") - lit(1))), lit(0L))
-              .cast("long")))
-          .first()
-        (stats.getLong(0), stats.getLong(1), stats.getLong(2) / 2)
-      }
+    // the same ANSI note as [[pairsEstimate]].
+    val (uiRows, nItems, pairsEst) = {
+      val stats = ui.agg(count(lit(1)), count_distinct(col("i")))
+        .crossJoin(ui.groupBy(col("u")).agg(count(lit(1)).as("n"))
+          .agg(coalesce(sum(col("n") * (col("n") - lit(1))), lit(0L))
+            .cast("long")))
+        .first()
+      (stats.getLong(0), stats.getLong(1), stats.getLong(2) / 2)
+    }
     val nbr = neighborTable(ui, coMin, topM, nItems, pairsEst)
     scoreFromNbr(ui, nbr, nItems * topM, k, uiRows * topM)
   }
@@ -676,7 +663,7 @@ object Recommend {
     // unconditionally: past the gate the df lookup rides shuffle-hash
     // on the catalog-sized feats0 stream, correct at any vocabulary.
     val dfTab = feats0.groupBy(col("f")).agg(count(lit(1)).as("df"))
-      .cpLocal()
+      .localCheckpoint()
     val (dfRows, dfBytes) = measuredDim(dfTab, "octet_length(f) + 24")
     feats0
       .join(dimHint(dfTab, dfRows, dfBytes), "f")
@@ -867,7 +854,7 @@ object Recommend {
     // item-feature pairs: whole name + brand + type, then the df cap.
     // catalog-sized (≤3 rows/item); read by the class build and the
     // profile build — checkpoint so the df-cap subtree runs once.
-    val feats = contentFeats(p).cpLocal()
+    val feats = contentFeats(p).localCheckpoint()
     // ---- item-profile equivalence classes: the canonical sorted
     // feature set. Everything class-keyed from here is VOCABULARY-
     // bounded (distinct feature combinations), not catalog-sized.
@@ -897,7 +884,7 @@ object Recommend {
       .select(col("i"), col("fs"), concat_ws("|", col("fs")).as("ck"))
       .groupBy(col("ck"))
       .agg(minKItems(col("i")).as("items"), first(col("fs")).as("fs"))
-      .cpLocal() // read by the gate measure AND either branch
+      .localCheckpoint() // read by the gate measure AND either branch
     // ---- class-index gate (count AND measured bytes, the same double
     // bound as `dimHint`/the LSH lookups): the index rows carry
     // data-dependent payloads — feature strings and (cap+k)-item
@@ -915,9 +902,9 @@ object Recommend {
     // frames, and sequential scheduling would serialize two driver
     // round-trips for nothing.
     val (featsMeasure, idxMeasure) =
-      if (idxEst.isDefined || PlanOnly(ui))
+      if (idxEst.isDefined)
         (() => measuredDim(feats, "octet_length(f) + 24"),
-          () => idxEst.getOrElse((0L, 0L)))
+          () => idxEst.get)
       else {
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration._
@@ -1000,16 +987,10 @@ object Recommend {
   private def contentScoreBroadcast(prof0: DataFrame,
       classTab: DataFrame, profTopF: Int,
       capK: Int): DataFrame = {
-    // the index CONTENT is broadcast data, not plan structure — under
-    // plan-only construction skip the driver collect (a job) and bake
-    // an empty index: the dumped plan is identical, and a plan dump
-    // never executes the aggregate that would read it. ONE collect of
-    // the class table replaces the old separate classFeats+classItems
-    // collects — same bytes (the feature pairs are the exploded fs),
-    // one driver round-trip.
-    val index = if (PlanOnly(prof0)) {
-      ClassIndex(Map.empty, Array.empty, Array.empty)
-    } else {
+    // ONE collect of the class table replaces the old separate
+    // classFeats+classItems collects — same bytes (the feature pairs
+    // are the exploded fs), one driver round-trip.
+    val index = {
       val rows = classTab
         .select(col("ck"), col("items"), col("fs")).collect()
         .map(r => (r.getString(0), r.getSeq[Long](1).toArray,
@@ -1220,7 +1201,7 @@ object Recommend {
   def cfEvalOn(interactions: DataFrame, cap: Int, coMin: Int,
       topM: Int, k: Int): DataFrame = {
     val all = interactions.select(col("u"), col("i")).distinct()
-      .cpLocal() // read by the holdout agg AND the train slice
+      .localCheckpoint() // read by the holdout agg AND the train slice
     // ONE corpus-sized groupBy(u) serves the holdout AND the
     // power-user cap (guide §2.4): the train slice removes exactly one
     // row per holdout user, so the q87-equivalent kept-user set —
@@ -1232,7 +1213,7 @@ object Recommend {
     // skipped too. Same matrix, two corpus passes fewer.
     val hs = all.groupBy(col("u"))
       .agg(max(col("i")).as("held"), count(lit(1)).as("n"))
-      .cpLocal() // read by hold (train/hits/n_eval) and the kept set
+      .localCheckpoint() // read by hold (train/hits/n_eval) and the kept set
     val hold = hs.filter(col("n") >= EvalMinOwned)
       .select(col("u"), col("held"))
     val train = all.join(
@@ -1241,7 +1222,7 @@ object Recommend {
     val kept = hs.filter(
       when(col("n") >= EvalMinOwned, col("n") - 1).otherwise(col("n"))
         <= cap).select(col("u"))
-    val ui = train.join(kept, Seq("u"), "left_semi").cpLocal()
+    val ui = train.join(kept, Seq("u"), "left_semi").localCheckpoint()
     // unordered top: recs only feeds the hit join — no presentation sort
     val recs = itemCfTop(ui, coMin, topM, k)
     val hits = recs.join(hold,

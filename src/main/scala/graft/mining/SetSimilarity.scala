@@ -3,7 +3,6 @@ package graft.mining
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.PlanOnly.CpOps
 import graft.functions.Hashing
 import graft.ops.Text.{toksExpr, toksSqlExpr}
 
@@ -399,13 +398,6 @@ object SetSimilarity {
     s"array($structs)"
   }
 
-  /** True when the session asked for plan-only construction
-    * (`spark.graft.planOnly` — set by ExplainDump): cardinality
-    * estimates are skipped (volume gates take their below-guard
-    * branch, the proven plan at every oracle SF) so building a
-    * DataFrame runs ZERO cluster jobs. Never set by Verify/Bench. */
-  private def planOnly(df: DataFrame): Boolean = graft.PlanOnly(df)
-
   /** Exact volume-gate inputs for [[lshCandidates]]: the corpus size,
     * the EXACT pre-distinct band-bucket pair count Σ n·(n−1)/2, and
     * the measured verify-table payload bytes (token/shingle arrays —
@@ -463,11 +455,9 @@ object SetSimilarity {
     * the round's only bench regression, q58 +30%). Registered
     * entries memoize the result per (session, dataset) via
     * [[graft.Memo.scalarOf]] — the production analogue of a cached
-    * index statistic. Under plan-only construction ([[planOnly]])
-    * returns the zero estimate joblessly. */
+    * index statistic. */
   private[graft] def lshEstimate(sigTable: DataFrame, nBands: Int,
       nRows: Int): LshEst = {
-    if (planOnly(sigTable)) return LshEst(0L, 0L)
     // a `pb` column (payload bytes, [[sigsOf]]) rides the same explode:
     // each doc contributes nBands rows carrying its pb, so Σpb/nBands
     // recovers the verify table's total bytes — still one job
@@ -601,20 +591,21 @@ object SetSimilarity {
     * re-executions stop re-paying the estimate job; anonymous-corpus
     * callers compute it per call (one band-table-sized aggregate).
     * Checkpoints are LAZY (eager = false): the signature and
-    * token-set tables still materialize exactly once — at the first
-    * action instead of at construction — so plan-only consumers
-    * (ExplainDump) run no jobs. */
+    * token-set tables still materialize exactly once, inside the
+    * first job that reads them (the estimate, or the query's own run
+    * once the estimate is memoized) rather than in a job of their
+    * own at construction. */
   def neardupLshOn(docs: DataFrame,
       estMemoKey: Option[(String, String)] = None): DataFrame = {
     // same reuse story as q58: the signature and token-set tables feed
     // multiple join branches — materialize each once
     val sigTable = sigsOf(docs, withPayloadBytes = true)
-      .cpLocal(eager = false)
+      .localCheckpoint(eager = false)
     val est = lshEstimateMemo(sigTable, LshBands, LshRows, estMemoKey)
     val (cand, lookupHint) =
       lshCandidates(sigTable, LshBands, LshRows, LshMinSigMatches, est)
     verifyExact(cand,
-      tokenSetsOf(docs).cpLocal(eager = false), LshVerifyTau,
+      tokenSetsOf(docs).localCheckpoint(eager = false), LshVerifyTau,
       lookupHint)
   }
 
@@ -622,7 +613,7 @@ object SetSimilarity {
     * (datasetDir, name) key exists, direct otherwise. */
   private def lshEstimateMemo(sigTable: DataFrame, nBands: Int,
       nRows: Int, key: Option[(String, String)]): LshEst = key match {
-    case Some((d, name)) if !planOnly(sigTable) =>
+    case Some((d, name)) =>
       graft.Memo.scalarOf(sigTable.sparkSession, d, name)(
         lshEstimate(sigTable, nBands, nRows))
     case _ => lshEstimate(sigTable, nBands, nRows)
@@ -783,14 +774,14 @@ object SetSimilarity {
     // branch made q58 the bench's slowest query (12.5 s at sf0.1; the
     // materialized tables are corpus-sized, ~doc_id + 32 longs / the
     // shingle arrays, so storage is bounded and the hash runs once).
-    // Lazy, like q24's: first action materializes, ExplainDump doesn't.
-    val sh = shingleSetsOf(docs).cpLocal(eager = false)
+    // Lazy, like q24's: the first job that reads them materializes them.
+    val sh = shingleSetsOf(docs).localCheckpoint(eager = false)
     val sigTable = sh
       .withColumn("xs",
         expr(s"transform(ts, t -> ${Hashing.h31SparkSql("t")})"))
       .select(col("doc_id"), expr("graft_minhash(xs)").as("sig"),
         expr(payloadBytesExpr("ts")).as("pb"))
-      .cpLocal(eager = false)
+      .localCheckpoint(eager = false)
     val est =
       lshEstimateMemo(sigTable, ShingleBands, ShingleRows, estMemoKey)
     val (cand, lookupHint) = lshCandidates(sigTable, ShingleBands,
@@ -850,7 +841,7 @@ object SetSimilarity {
     // stream, the first micro-batch) materializes them once.
     val idxSh0 = shingleSetsOf(corpus)
       .select(col("doc_id").as("dup_of"), col("ts").as("sh_b"))
-      .cpLocal(eager = false)
+      .localCheckpoint(eager = false)
     val idxBands0 = shingleSetsOf(corpus)
       .withColumn("xs",
         expr(s"transform(ts, t -> ${Hashing.h31SparkSql("t")})"))
@@ -859,10 +850,9 @@ object SetSimilarity {
         explode(expr(bandStructsExpr(ShingleBands, ShingleRows))).as("b"))
       .select(col("dup_of"), col("sig_b"),
         col("b.band").as("band"), col("b.key").as("key"))
-      .cpLocal(eager = false)
+      .localCheckpoint(eager = false)
     // one cheap count decides the plan (an AQE-style runtime choice
-    // the checkpointed frames' missing stats would otherwise forfeit);
-    // plan-only construction assumes the broadcast branch joblessly
+    // the checkpointed frames' missing stats would otherwise forfeit)
     val bcastDocs = incoming.sparkSession.conf
       .getOption("spark.graft.screenBroadcastDocs")
       .map(_.toLong).getOrElse(ScreenBroadcastDocsDefault)
@@ -875,7 +865,7 @@ object SetSimilarity {
     val bcastBytes = incoming.sparkSession.conf
       .getOption("spark.graft.screenBroadcastBytes")
       .map(_.toLong).getOrElse(LshLookupBroadcastBytes)
-    val small = planOnly(corpus) || {
+    val small = {
       val r = idxSh0.agg(count(lit(1)).cast("long"),
         sum(expr(payloadBytesExpr("sh_b"))).cast("long")).first()
       val n = if (r.isNullAt(0)) 0L else r.getLong(0)

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.PlanOnly.CpOps
 import graft.Tables._
 import graft.mining.SetSimilarity
 
@@ -112,7 +111,7 @@ object Pipeline {
     * (diag/r15/scale100_chain_run.log). */
   def dupClustersOn(docs: DataFrame): DataFrame =
     dupClustersFrom(SetSimilarity.shingleNeardupOn(docs)
-      .select(col("doc_a"), col("doc_b")).cpLocal())
+      .select(col("doc_a"), col("doc_b")).localCheckpoint())
 
   /** The q65 canonicalization over an ALREADY-COMPUTED near-dup pair
     * list (doc_a, doc_b) — any of the q22/q24/q25/q45/q58 detectors
@@ -217,17 +216,6 @@ object Pipeline {
   def tokenShardsFrom(tok: DataFrame, budget: Long): DataFrame = {
     val s = tok.sparkSession
     import s.implicits._
-    // planOnly: the offset pass is imperative RDD work (cache +
-    // per-partition-total collect + broadcast) — everything past the
-    // RDD boundary is opaque to explain anyway (the result is a
-    // LogicalRDD), so construction returns the same Scan-ExistingRDD
-    // stand-in the real path's final checkpoint leaves, and runs
-    // nothing. The executed shape is pinned by PipelineSpec.
-    if (graft.PlanOnly(tok))
-      return graft.PlanOnly.cp(tok
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("n_tokens").cast("long").as("n_tokens"))
-        .withColumn("shard", lit(0L)))
     val toks = tok
       .select(col("doc_id").cast("long"), col("n_tokens").cast("long"))
       .repartitionByRange(col("doc_id"))
@@ -426,19 +414,13 @@ object Pipeline {
     val sig = sigIn
       .select(col("doc_id"), col("source"),
         col("n_tokens").cast("long").as("n_tokens"), col("quality"))
-      .cpLocal() // feeds level stats + both admission branches
-    // phase 1: bounded level summary → driver cumsum per source.
-    // planOnly skips the collect (the one construction-time job
-    // here): the empty cut tables produce the same downstream plan
-    // shape — broadcast semi/inner joins against tiny key frames
-    val levels =
-      if (graft.PlanOnly(sigIn))
-        Map.empty[String, Array[(String, Double, Long)]]
-      else sig.groupBy(col("source"), col("quality"))
-        .agg(sum(col("n_tokens")).as("lt"))
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-        .groupBy(_._1)
+      .localCheckpoint() // feeds level stats + both admission branches
+    // phase 1: bounded level summary → driver cumsum per source
+    val levels = sig.groupBy(col("source"), col("quality"))
+      .agg(sum(col("n_tokens")).as("lt"))
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+      .groupBy(_._1)
     // (source, quality) → cum tokens BEFORE the level, in admission
     // order (quality desc; doc_id order only matters inside a level)
     val cuts = levels.toSeq.flatMap { case (src, ls) =>
@@ -516,7 +498,7 @@ object Pipeline {
   def leakageSplitOn(docs: DataFrame): DataFrame = {
     // pair list feeds both the contraction and the violation audit
     val pairs = SetSimilarity.shingleNeardupOn(docs)
-      .select(col("doc_a"), col("doc_b")).cpLocal()
+      .select(col("doc_a"), col("doc_b")).localCheckpoint()
     leakageSplitFrom(docs, pairs, dupClustersFrom(pairs))
   }
 
@@ -609,7 +591,7 @@ object Pipeline {
         size(expr(Text.toksExpr)).cast("long").as("n_tokens"))
       .join(Text.docQualityOn(docs).select(col("doc_id"), col("quality")),
         "doc_id")
-      .cpLocal() // feeds the boundary agg + the staging pass
+      .localCheckpoint() // feeds the boundary agg + the staging pass
     val b = t.agg(
       expr("percentile(n_tokens, 0.25D)").as("b1"),
       expr("percentile(n_tokens, 0.5D)").as("b2"),
@@ -669,7 +651,7 @@ object Pipeline {
       .select(col("source"),
         size(expr(Text.toksExpr)).cast("long").as("n_tokens"))
       .groupBy(col("source")).agg(sum(col("n_tokens")).as("n_tokens"))
-      .cpLocal() // #sources rows; feeds totals + the weight row
+      .localCheckpoint() // #sources rows; feeds totals + the weight row
     val tot = per.agg(sum(col("n_tokens")).as("tot"),
       sum(sqrt(col("n_tokens").cast("double"))).as("denom"))
     per.crossJoin(broadcast(tot)) // 1-row scalar frame
@@ -786,7 +768,7 @@ object Pipeline {
   /** q85 over a caller-supplied (doc_id, source, text) corpus. */
   def sourceGramOverlapOn(docs: DataFrame): DataFrame =
     // checkpoint: both sides of the self-join read the gram set
-    sourceGramPairsFrom(sourceGramSet(docs).cpLocal())
+    sourceGramPairsFrom(sourceGramSet(docs).localCheckpoint())
 
   val sourceGramOverlapSql: String =
     s"""WITH t AS (SELECT source, ${Text.toksSqlExpr} AS toks
@@ -831,17 +813,17 @@ object Pipeline {
     val sig = Text.signalChainOn(docs)
       .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
         col("quality"), col("repetitive"))
-      .cpLocal()
+      .localCheckpoint()
     val kept = Text.curationFrom(sig, docs)
       .filter(col("keep")).select(col("doc_id"))
     // curated corpus: feeds pair detection + source lookup + manifest hash
     val keptDocs = docs.join(kept, Seq("doc_id"), "left_semi")
-      .cpLocal()
+      .localCheckpoint()
     // checkpointed before the contraction (the q65 lesson, r15): the
     // CC's symmetrization reads its input twice, and a raw LSH
     // subtree would be computed once per branch
     val pairs = SetSimilarity.shingleNeardupOn(keptDocs)
-      .select(col("doc_a"), col("doc_b")).cpLocal()
+      .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val canon = dupClustersFrom(pairs)
     val trainIds = kept
       .join(canon, Seq("doc_id"), "left_outer")

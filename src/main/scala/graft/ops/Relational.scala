@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
-import graft.PlanOnly.CpOps
 
 /** Relational operator surface (SURVEY.md §2.1–§2.7).
   *
@@ -208,7 +207,7 @@ object Relational {
     // brand dimension)
     val dict = part(s, d).select(col("p_brand").as("brand")).distinct()
       .withColumn("bc", row_number().over(Window.orderBy(col("brand"))))
-      .cpLocal()
+      .localCheckpoint()
     val ob = lineitem(s, d)
       .join(broadcast(part(s, d).select(col("p_partkey"), col("p_brand"))
         .join(broadcast(dict), col("p_brand") === col("brand"))
@@ -1373,7 +1372,7 @@ object Relational {
     val ud = events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .cpLocal() // feeds the expansion + the max-day scalar
+      .localCheckpoint() // feeds the expansion + the max-day scalar
     val mx = ud.agg(max(col("day")).as("mx"))
     ud.select(col("user_id"),
         explode(sequence(col("day"),
@@ -1731,7 +1730,7 @@ object Relational {
   def stateAtPurchase(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).select(col("user_id"),
       unix_micros(col("ts")).as("tsl"), col("event_id"),
-      col("event_type")).cpLocal()
+      col("event_type")).localCheckpoint()
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tsl"), col("event_id"))
     val runs = ev.filter(col("event_type") =!= "purchase")

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.PlanOnly.CpOps
 import graft.Tables._
 import graft.functions.Hashing
 
@@ -390,7 +389,7 @@ object Text {
       .select(col("doc_id"), explode(expr(toksExpr)).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .cpLocal()
+      .localCheckpoint()
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     // rank on the raw double (identical arithmetic in the oracle), so
@@ -644,7 +643,7 @@ object Text {
       .select(col("doc_id"), expr(toksExpr).as("toks"))
       .select(col("doc_id"),
         explode(expr(s"array_distinct(${ngramExpr("toks", 3)})")).as("gram"))
-      .cpLocal()
+      .localCheckpoint()
     val df = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     grams.join(df, "gram")
       .groupBy(col("doc_id"))
@@ -709,11 +708,11 @@ object Text {
       .select(col("doc_id"),
         split(col("g"), " ").getItem(0).as("w1"),
         split(col("g"), " ").getItem(1).as("w2"))
-      .cpLocal() // the LM build AND the scoring join read it
+      .localCheckpoint() // the LM build AND the scoring join read it
     val hq = docQualityOn(docs).filter(col("keep")).select(col("doc_id"))
     val lmc = bg.join(hq, Seq("doc_id"), "left_semi")
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .cpLocal() // the context totals AND the logp join read it
+      .localCheckpoint() // the context totals AND the logp join read it
     val tot = lmc.groupBy(col("w1")).agg(sum(col("c")).as("total"))
     val lm = lmc.join(tot, "w1")
       .select(col("w1"), col("w2"),
@@ -723,7 +722,7 @@ object Text {
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("logp").isNull, 1L).otherwise(0L)).as("n_oov"),
         floor(avg(col("logp")) * 1e6 + 0.5 + 1e-9).as("lp_u6"))
-      .cpLocal() // the quartile agg AND the final flag read it
+      .localCheckpoint() // the quartile agg AND the final flag read it
     val p = sc.agg(expr("percentile(lp_u6, 0.25D)").as("p25"))
     sc.crossJoin(broadcast(p)) // 1-row boundary frame
       .select(col("doc_id"), col("n_bigrams"), col("n_oov"),

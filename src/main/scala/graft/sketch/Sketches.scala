@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.Hashing
-import graft.PlanOnly.CpOps
 
 /** Probabilistic sketches as relational dataflows — Bloom membership
   * (Assignment6/task1.py) and Flajolet–Martin distinct counting
@@ -342,7 +341,7 @@ object Sketches {
             .unboundedPreceding, 0)))
       // two consumers below (pick + interpolation join): pin the
       // 128-row summary so the events scan isn't replayed
-      .cpLocal()
+      .localCheckpoint()
     val probes = AqQuantiles.map(_.toDouble).toDF("p")
       .crossJoin(broadcast(stats))
       .select(col("p"), col("mn"), col("mx"),
