@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** Prints `explain("formatted")` of representative queries in PLANS.md
   * format — the plan-shape evidence (pushdown, broadcast joins,
@@ -18,26 +17,14 @@ object ExplainDump {
 
   /** Build the frame for a dumpable id — the registered query, or one
     * of the `_`-prefixed synthetic dumps: memo-free recommender
-    * builds, the unsorted *On entry, and single rounds of the graph
-    * loops (inside the registered queries those sit behind
-    * checkpoint scans, so their plans are otherwise invisible). Every
-    * case calls the production definitions, never an inline rebuild
-    * that could drift from them. */
+    * builds, the unsorted *On entry, the edge build and one q64 star
+    * round (inside the registered queries those sit behind checkpoint
+    * scans, so their plans are otherwise invisible). Every case calls
+    * the production definitions, never an inline rebuild that could
+    * drift from them. */
   private[graft] def frameFor(name: String,
       spark: SparkSession, sfDir: String): DataFrame = {
     import graft.mining.Recommend
-    def subEdges = Graphs.edges(spark, sfDir, Some(Graphs.SubNations),
-      Graphs.SubThreshold)
-    // q35/q36's round inputs, checkpointed like the production loops'
-    def roundInputs: (DataFrame, DataFrame) = {
-      val ed = subEdges
-      val ue = ed.select(col("src"), col("dst"))
-        .unionByName(ed.select(col("dst").as("src"),
-          col("src").as("dst")))
-        .localCheckpoint()
-      (ue, ue.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node")).localCheckpoint())
-    }
     name match {
       // the memo-free recommender builds — the registered entries
       // read memoized artifacts, which hides the build plan
@@ -53,13 +40,9 @@ object ExplainDump {
       // the un-checkpointed co-purchase edge subtree
       case "_edge_build" => Graphs.capBySourceDf(
         Graphs.custParts(spark, sfDir, None), Graphs.MaxSourceDf)
-      case "_lpa_round" =>
-        val (ue, labels0) = roundInputs; Graphs.lpaRound(ue, labels0)
-      case "_cc_round" =>
-        val (ue, labels0) = roundInputs; Graphs.ccRound(ue, labels0)
       // one q64 large-star step over a checkpointed edge frame
-      case "_star_round" =>
-        Graphs.starLargeRound(subEdges.localCheckpoint())
+      case "_star_round" => Graphs.starLargeRound(Graphs.edges(spark,
+        sfDir, Some(Graphs.SubNations), Graphs.SubThreshold).localCheckpoint())
       case _ => SparkEntry.queries(name)(spark, sfDir)
     }
   }
@@ -193,6 +176,10 @@ object ExplainDump {
         "are checkpointed scans — delta never self-joins, and the " +
         "asymmetric band join replaces the full n-squared pass"))
 
+  /** Fields a plan node prints before "... N more fields": Spark's
+    * default of 25 cut q30's 40-sketch explode array. Plan text only. */
+  private val MaxPlanFields = 1000
+
   /** One PLANS.md section: the id, its roster note, the formatted
     * physical plan. */
   private[graft] def section(name: String, spark: SparkSession,
@@ -207,7 +194,8 @@ object ExplainDump {
     val sfDir = args(0)
     val ids =
       if (args.length > 1) args(1).split(",").toSeq else picks.map(_._1)
-    val spark = Sessions.local()
+    val spark = Sessions.local(Sessions.cpus,
+      "spark.sql.debug.maxToStringFields" -> MaxPlanFields.toString)
     val sf = java.nio.file.Paths.get(sfDir).getFileName
     // UTF-8 whatever the locale: the notes and plans are not ASCII
     val out = new java.io.PrintStream(System.out, true,

@@ -52,12 +52,37 @@ object Sessions {
     * an async unpersist lets the next query start while the blocks
     * still hold storage memory, squeezing its execution share —
     * measured +62 s on q93-after-q92 at 30× (standalone 68.9 s vs
-    * 132.8 s in-session). Call it outside any timed window. */
+    * 132.8 s in-session). Call it outside any timed window. Spark warns
+    * once per local checkpoint it unpersists that its lineage is gone,
+    * which is the point of the sweep, so those RDD classes' loggers are
+    * raised to ERROR around the unpersist calls only. */
   def dropCheckpoints(spark: SparkSession,
       keep: Set[Int] = Set.empty): Unit = {
     val live = Memo.liveIds(spark) ++ keep
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !live(id) }
-      .values.foreach(_.unpersist(blocking = true))
+    val drop = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !live(id) }.values
+    quietly(drop.map(_.getClass.getName).toSet) {
+      drop.foreach(_.unpersist(blocking = true))
+    }
+  }
+
+  /** Runs `body` with the named loggers at ERROR, then gives each back
+    * its own level, or removes the logger config it did not have. */
+  private def quietly[A](loggers: Set[String])(body: => A): A = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val own = ctx.getConfiguration.getLoggers
+    val prev = loggers.map(n => n -> Option(own.get(n)).map(_.getLevel))
+    loggers.foreach(Configurator.setLevel(_, Level.ERROR))
+    try body
+    finally {
+      prev.foreach {
+        case (n, Some(l)) => Configurator.setLevel(n, l)
+        case (n, None) => ctx.getConfiguration.removeLogger(n)
+      }
+      ctx.updateLoggers()
+    }
   }
 }

@@ -1,8 +1,12 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 import graft.Tables._
 
 /** Graph analytics over the co-purchase graph — the Spark-native form of
@@ -19,10 +23,12 @@ import graft.Tables._
   * handles the merely-uneven rest); everything downstream operates on
   * the edge list, which is orders of magnitude smaller than the input.
   *
-  * LPA and connected components are synchronous join-iterations with
-  * explicit deterministic tie-breaks (count desc, label asc) — unlike
-  * library LPA implementations whose hash-order ties defeat replay. The
-  * DuckDB oracle replays LPA exactly (unrolled iterations) and CC via a
+  * LPA, connected components, PageRank, personalized PageRank and the
+  * k-core peel are Pregel supersteps (Malewicz et al., SIGMOD 2010) on
+  * one persisted, hash-partitioned [[adjacency]], with explicit
+  * deterministic tie-breaks (count desc, label asc) — unlike library
+  * LPA implementations whose hash-order ties defeat replay. The DuckDB
+  * oracle replays LPA exactly (unrolled iterations) and CC via a
   * recursive CTE, so even the iterative graph operators are
   * hash-verified, not rows-only.
   */
@@ -146,6 +152,66 @@ object Graphs {
     ed.select(col("src"), col("dst"))
       .unionByName(ed.select(col("dst").as("src"), col("src").as("dst")))
 
+  /** node → its neighbours, hash-partitioned on node. */
+  private[graft] type Adjacency = RDD[(Long, Array[Long])]
+
+  /** The undirected adjacency of an edge frame: one row per node with
+    * its neighbours in both directions (a pair counts once, whether the
+    * frame is canonical or lists both directions), so the keys are the
+    * node roster and each array's length is the degree. Partitioned at
+    * the session's shuffle width and persisted once: every superstep
+    * joins its state narrowly against it, so edges never move again. */
+  private[graft] def adjacency(ed: DataFrame): Adjacency =
+    ed.select(col("src"), col("dst")).queryExecution.toRdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((a, b), (b, a))
+      }
+      .groupByKey(new HashPartitioner(
+        ed.sparkSession.sessionState.conf.numShufflePartitions))
+      .mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Pregel supersteps (Malewicz et al., SIGMOD 2010) over `adj`, from
+    * one `init` state per node on the adjacency's partitioner. In each,
+    * a node's state meets its neighbours in a narrow join, `send` emits
+    * its messages, `merge` combines them map-side and after the one
+    * shuffle into that partitioner, and `update` folds the node's inbox
+    * (None when nothing arrived) into its next state. The node's own
+    * state rides the same shuffle, so a task's lineage ends at the
+    * previous round: a narrow state-to-state chain grows a level per
+    * round, and deserializing it overflowed the stack on a 120-node
+    * path. Each round is persisted and runs ONE job, counting its
+    * `flagged` states, then drops the round before it; rounds go on
+    * while `more(rounds, count)`. Returns (states, rounds, count). */
+  private def pregel[S: ClassTag, M: ClassTag](adj: Adjacency,
+      init: (Long, Array[Long]) => S)(
+      send: (Array[Long], S) => Iterator[(Long, M)], merge: (M, M) => M)(
+      update: (S, Option[M]) => S)(
+      flagged: S => Boolean, more: (Int, Long) => Boolean)
+  : (RDD[(Long, S)], Int, Long) = {
+    val p = adj.partitioner.get
+    var state = adj.mapPartitions(_.map { case (v, nbrs) =>
+      (v, init(v, nbrs)) }, preservesPartitioning = true)
+    var (rounds, count) = (0, 0L)
+    while (rounds == 0 || more(rounds, count)) {
+      val next = adj.join(state, p)
+        .flatMap { case (v, (nbrs, s)) =>
+          Iterator((v, (Option(s), Option.empty[M]))) ++ send(nbrs, s)
+            .map { case (u, m) => (u, (Option.empty[S], Option(m))) }
+        }
+        .reduceByKey(p, (a, b) =>
+          (a._1.orElse(b._1), (a._2 ++ b._2).reduceOption(merge)))
+        .mapValues { case (s, m) => update(s.get, m) }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      count = next.filter { case (_, s) => flagged(s) }.count()
+      state.unpersist()
+      state = next
+      rounds += 1
+    }
+    (state, rounds, count)
+  }
+
   private def cpSql(maxNation: Option[Int]): String = {
     val where = maxNation.fold("")(n =>
       s"""WHERE o_custkey IN (SELECT c_custkey FROM customer
@@ -217,48 +283,22 @@ object Graphs {
   /** q35: Label Propagation communities, 5 synchronous iterations
     * (reference maxIter = 5, Assignment4/task1.py:64-65), deterministic
     * tie-break (highest neighbor-label count, then smallest label).
-    * Each iteration: edge join → (node, label) counts → per-node argmax
-    * — two shuffles per iteration on edge-sized data. */
+    * Each iteration is one superstep: every node sends its label to its
+    * neighbours and takes the winner of the labels it received. */
   def lpa(s: SparkSession, d: String): DataFrame = {
-    // localCheckpoint truncates the lineage each round — without it the
-    // logical plan compounds per iteration and analysis time explodes.
-    // (On a cluster you'd use reliable checkpoint() to survive executor
-    // loss; local mode has no such failure domain.)
-    val ue = undirected(edges(s, d, Some(SubNations), SubThreshold))
-      .localCheckpoint()
-    var labels = ue.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    for (_ <- 1 to LpaIters) {
-      labels = lpaRound(ue, labels).localCheckpoint()
-    }
-    labels.orderBy(col("node"))
+    import s.implicits._
+    lpaLabels(adjacency(edges(s, d, Some(SubNations), SubThreshold)))
+      .toDF("node", "lbl").orderBy(col("node"))
   }
 
-  /** One LPA round over a both-direction edge list — the un-checkpointed
-    * plan, shared by [[lpa]] and ExplainDump's `_lpa_round` dump
-    * (an inline rebuild there could silently drift, ADVICE r14).
-    * Deterministic argmax via max_by over a (cnt, −lbl) struct key —
-    * same (highest count, then smallest label) winner the oracle's
-    * row_number window replays, minus the per-iteration sort the
-    * window form needed after the count aggregate.
-    * One src-exchange per round (guide §2.4): both aggregates —
-    * (node,lbl) counts and the per-node argmax — accept a src
-    * clustering, so the explicit repartition replaces the stock
-    * plan's two chained aggregate exchanges. The exchange carries
-    * the raw neighbor-label stream instead of partially-counted
-    * (node,lbl) pairs; per-partition multiplicity of a (node,lbl)
-    * key is ~0 on any partition-count ≫ degree layout, so that
-    * partial pass was shipping its input unreduced anyway (the
-    * CF-chain measurement: 0.9% reduction). */
-  private[graft] def lpaRound(ue: DataFrame, labels: DataFrame)
-  : DataFrame =
-    ue.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-      .repartition(col("src"))
-      .groupBy(col("src").as("node"), col("lbl"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("node"))
-      .agg(max_by(col("lbl"),
-        struct(col("cnt"), (-col("lbl")).as("nl"))).as("lbl"))
+  /** [[LpaIters]] rounds; each node's label counts are its inbox. */
+  private[graft] def lpaLabels(adj: Adjacency): RDD[(Long, Long)] =
+    pregel(adj, (v, _) => v)(
+      (nbrs, l) => nbrs.iterator.map((_, Map(l -> 1L))),
+      (a: Map[Long, Long], b: Map[Long, Long]) => b.foldLeft(a) {
+        case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0L) + c) })(
+      (l, counts) => counts.fold(l)(_.maxBy { case (lbl, c) => (c, -lbl) }._1))(
+      _ => false, (r, _) => r < LpaIters)._1
 
   val lpaSql: String = {
     val iters = (1 to LpaIters).map { k =>
@@ -280,47 +320,32 @@ object Graphs {
 
   // ---------------------------------------------------------------- q36
   /** q36: connected components by synchronous min-label propagation to
-    * convergence (driver checks the change count — a scalar, not data).
-    * Output: component label (min member id) and size. */
-  def components(s: SparkSession, d: String): DataFrame = {
-    // labels is referenced twice per round (min-propagation + change
-    // count) — localCheckpoint keeps the plan constant-size; without it
-    // the logical tree doubles per iteration (exponential analysis).
-    val ue = undirected(edges(s, d, Some(SubNations), SubThreshold))
-      .localCheckpoint()
-    var labels = ue.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 50) {
-      val next = ccRound(ue, labels).localCheckpoint()
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("node"), col("lbl"))
-      iter += 1
-    }
-    labels.groupBy(col("lbl").as("component"))
-      .agg(count(lit(1)).as("csize"))
-      .orderBy(col("component"))
+    * convergence. Output: component label (min member id) and size. */
+  def components(s: SparkSession, d: String): DataFrame =
+    componentsOn(edges(s, d, Some(SubNations), SubThreshold))
+
+  /** q36 over a (src, dst) edge frame. */
+  def componentsOn(ed: DataFrame): DataFrame = {
+    val s = ed.sparkSession
+    import s.implicits._
+    ccLabels(adjacency(ed))._1.map { case (_, l) => (l, 1L) }
+      .reduceByKey(_ + _).toDF("component", "csize").orderBy(col("component"))
   }
 
-  /** One min-label-propagation round — the un-checkpointed plan,
-    * shared by [[components]] and ExplainDump's `_cc_round`
-    * dump. The change indicator rides INSIDE the round's one
-    * materialized frame (the old label is already on hand from the
-    * `least` join), so the caller's convergence check is a
-    * filter-count over the fresh checkpoint — the previous shape
-    * re-joined next with labels per round (two more exchanges + an
-    * aggregate, ~2 extra jobs every iteration of an O(diameter) loop)
-    * purely to recompute a difference this projection already knows. */
-  private[graft] def ccRound(ue: DataFrame, labels: DataFrame)
-  : DataFrame =
-    ue.join(labels.withColumnRenamed("node", "dst")
-        .withColumnRenamed("lbl", "nlbl"), Seq("dst"))
-      .groupBy(col("src").as("node"))
-      .agg(min(col("nlbl")).as("minNbr"))
-      .join(labels, Seq("node"))
-      .select(col("node"), least(col("lbl"), col("minNbr")).as("lbl"),
-        (col("minNbr") < col("lbl")).as("chg"))
+  /** Min-label propagation to its fixpoint, and its rounds. Labels only
+    * decrease, so it ends within (largest diameter + 1) rounds; a round
+    * cap would split a long component silently. Only a node whose label
+    * changed sends (one that kept it already sent it), and each round's
+    * job counts the changes. */
+  private[graft] def ccLabels(adj: Adjacency): (RDD[(Long, Long)], Int) = {
+    // (label, changed in the last round)
+    val (labels, rounds, _) = pregel(adj, (v, _) => (v, true))(
+      { case (nbrs, (l, chg)) =>
+        if (chg) nbrs.iterator.map((_, l)) else Iterator.empty },
+      math.min(_: Long, _: Long)) { case ((l, _), m) =>
+      m.filter(_ < l).fold((l, false))((_, true)) }(_._2, (_, n) => n > 0)
+    (labels.mapValues(_._1), rounds)
+  }
 
   val componentsSql: String =
     s"""WITH RECURSIVE ${edgesSql(Some(SubNations), SubThreshold)},
@@ -485,40 +510,44 @@ object Graphs {
 
   /** q63: PageRank on the bounded co-purchase subgraph, 5 synchronous
     * iterations: pr'(v) = (1−d)/N + d·Σ_{u→v} pr(u)/deg(u) over the
-    * both-direction edge list (no dangling nodes — every vertex has an
+    * undirected adjacency (no dangling nodes — every vertex has an
     * edge by construction, so mass is conserved). Each iteration is
-    * one edge-sized join + a node-keyed sum; pr is rounded to 6 dp per
-    * iteration so Spark's and DuckDB's group-sum orders can't drift
+    * one superstep with a double sum as the combiner; pr is rounded to
+    * 6 dp per iteration so Spark's and DuckDB's sum orders can't drift
     * (the q40 unrolled-Lloyd precedent). The constant (1−d)/N is
     * computed with the same IEEE ops both engines apply. */
   def pagerank(s: SparkSession, d: String): DataFrame =
-    pagerankOn(
-      undirected(edges(s, d, Some(SubNations), SubThreshold))
-        .localCheckpoint())
+    pagerankOn(edges(s, d, Some(SubNations), SubThreshold))
 
-  /** q63 over a caller-supplied both-direction (src, dst) edge list
-    * with no dangling nodes. */
-  def pagerankOn(ue: DataFrame): DataFrame = {
-    val deg = ue.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint()
-    val n = deg.count()
-    var pr = deg.withColumn("pr", lit(1.0 / n))
-    for (_ <- 1 to PrIters) {
-      val contrib = ue
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pr") / col("deg")).as("inflow"))
-      pr = deg.join(contrib, Seq("node"))
-        // scaled floor-half-up, not round(x, 6): mode-independent at
-        // exact .xxxxxx5 doubles (pr mass is non-negative, so +0.5
-        // floor is half-up on both engines)
-        .withColumn("pr", floor(
-          (lit((1 - PrDamping) / n) + lit(PrDamping) * col("inflow"))
-            * 1e6 + 0.5) / 1e6)
-        .select(col("node"), col("deg"), col("pr"))
-        .localCheckpoint()
-    }
-    pr.select(col("node"), col("pr")).orderBy(col("node"))
+  /** q63 over a (src, dst) edge frame. */
+  def pagerankOn(ed: DataFrame): DataFrame = {
+    val s = ed.sparkSession
+    import s.implicits._
+    ranks(adjacency(ed), None).mapValues(_._2).toDF("node", "pr")
+      .orderBy(col("node"))
+  }
+
+  /** (teleports here, rank) after [[PrIters]] rounds. PageRank
+    * (`seedK` None) teleports to every node, after a node-count job; PPR
+    * to the top `seedK` nodes by (degree desc, node asc), one
+    * `takeOrdered` job. The teleport constants are the IEEE doubles the
+    * oracle computes. */
+  private[graft] def ranks(adj: Adjacency, seedK: Option[Int])
+  : RDD[(Long, (Boolean, Double))] = {
+    val seeds = seedK.map(k => adj.map { case (v, nbrs) => (nbrs.length, v) }
+      .takeOrdered(k)(Ordering.by { case (dg, v) => (-dg, v) }).map(_._2).toSet)
+    val n = seeds.fold(adj.count())(_.size.toLong)
+    val tele = (1 - PrDamping) / n
+    pregel(adj, (v, _) => {
+      val t = seeds.forall(_(v)); (t, if (t) 1.0 / n else 0.0)
+    })({ case (nbrs, (_, pr)) => nbrs.iterator.map((_, pr / nbrs.length)) },
+      (_: Double) + (_: Double)) { case ((t, _), in) =>
+      // scaled floor-half-up, not round(x, 6): mode-independent at
+      // exact .xxxxxx5 doubles (rank mass is non-negative, so +0.5
+      // floor is half-up on both engines); a long floor, as Spark's
+      (t, math.floor(((if (t) tele else 0.0) + PrDamping * in.getOrElse(0.0))
+        * 1e6 + 0.5).toLong / 1e6)
+    }(_ => false, (r, _) => r < PrIters)._1
   }
 
   // ---------------------------------------------------------------- q91
@@ -533,47 +562,21 @@ object Graphs {
     * graph-proximity "related items" recommender (random walks with
     * restart from the items of interest), the production complement to
     * q87's co-occurrence CF and q89's content profiles. Same scale and
-    * parity machinery as q63: edge-sized join + node-keyed sum per
-    * iteration, 6-dp FP sync per round, teleport constants evaluated
+    * parity machinery as q63: one superstep per iteration, 6-dp FP
+    * sync per round, teleport constants evaluated
     * as the identical IEEE double on both engines (the seed-count
     * division mirrors q63's (1−d)/N precedent; zero-mass nodes add
     * exact 0.0 terms, which cannot perturb either engine's sum). */
   def personalizedPagerank(s: SparkSession, d: String): DataFrame =
-    pprOn(undirected(edges(s, d, Some(SubNations), SubThreshold))
-      .localCheckpoint())
+    pprOn(edges(s, d, Some(SubNations), SubThreshold))
 
-  /** q91 over a caller-supplied both-direction (src, dst) edge list
-    * with no dangling nodes. */
-  def pprOn(ue: DataFrame): DataFrame = {
-    val deg = ue.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint()
-    val seeds = deg.orderBy(col("deg").desc, col("node").asc)
-      .limit(PprSeedK).select(col("node"), lit(1).as("is_seed"))
-    // ≤ PprSeedK rows — a scalar driver sync
-    val k = seeds.count()
-    val degS = deg
-      .join(broadcast(seeds), Seq("node"), "left_outer")
-      .withColumn("is_seed", coalesce(col("is_seed"), lit(0)))
-      .localCheckpoint() // read every iteration + the seed indicator
-    var pr = degS.withColumn("pr",
-      when(col("is_seed") === 1, lit(1.0 / k)).otherwise(lit(0.0)))
-    for (_ <- 1 to PrIters) {
-      val contrib = ue
-        .join(pr.select(col("node").as("src"), col("pr"), col("deg")),
-          Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("pr") / col("deg")).as("inflow"))
-      pr = degS.join(contrib, Seq("node"))
-        .withColumn("pr", floor(
-          (when(col("is_seed") === 1, lit((1 - PrDamping) / k))
-            .otherwise(lit(0.0)) + lit(PrDamping) * col("inflow"))
-            * 1e6 + 0.5) / 1e6)
-        .select(col("node"), col("deg"), col("is_seed"), col("pr"))
-        .localCheckpoint()
-    }
-    pr.select(col("node"), col("is_seed").cast("long").as("is_seed"),
-        col("pr").as("ppr"))
-      .orderBy(col("node"))
+  /** q91 over a (src, dst) edge frame. */
+  def pprOn(ed: DataFrame): DataFrame = {
+    val s = ed.sparkSession
+    import s.implicits._
+    ranks(adjacency(ed), Some(PprSeedK))
+      .map { case (v, (seed, pr)) => (v, if (seed) 1L else 0L, pr) }
+      .toDF("node", "is_seed", "ppr").orderBy(col("node"))
   }
 
   val pprSql: String = {
@@ -641,42 +644,44 @@ object Graphs {
     * extractor (spam/bot rings in interaction graphs, seed sets for
     * community mining) next to q34's triangles and q35's communities.
     *
-    * Scale: each round is one degree aggregate + two semi-joins, all
-    * keyed on node ids — never more than edge-linear work; rounds are
-    * bounded by the peeling depth (≤ max coreness, here capped and
-    * convergence-asserted). Per-round localCheckpoint pins the shrinking
-    * edge list, so round r+1 scans round r's output, not the whole
-    * lineage. */
+    * Scale: each round is one superstep in which every surviving node
+    * messages its neighbours — never more than edge-linear work; rounds
+    * are bounded by the peeling depth (≤ max coreness, here capped and
+    * convergence-asserted). */
   def kcore(s: SparkSession, d: String): DataFrame =
     kcoreOn(edges(s, d, Some(SubNations), SubThreshold), KCoreK)
 
-  /** q97 over an arbitrary (src, dst) canonical edge list. */
+  /** q97 over a (src, dst) edge frame. */
   def kcoreOn(ed: DataFrame, k: Int): DataFrame = {
-    val all = undirected(ed).localCheckpoint() // peel input + node roster
-    var ue = all
-    var n = ue.count()
-    var done = false
-    var round = 0
-    while (!done && round < KCoreMaxRounds) {
-      val keep = ue.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src"))
-      val next = ue.join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint()
-      val m = next.count()
-      done = m == n
-      ue = next; n = m; round += 1
-    }
-    require(done, s"q97: k-core peeling not converged in " +
+    val s = ed.sparkSession
+    import s.implicits._
+    kcorePeel(adjacency(ed), k)._1
+      .map { case (v, p) => (v, p.alive, if (p.alive) p.deg else 0L) }
+      .toDF("node", "in_kcore", "core_deg").orderBy(col("node"))
+  }
+
+  /** A node's peel state: in the core, its neighbours among the last
+    * round's survivors, and whether this round dropped it with edges. */
+  private[graft] case class Peel(alive: Boolean, deg: Long, cut: Boolean)
+
+  /** Round r drops every node with fewer than k neighbours among round
+    * r−1's survivors. The peel has converged when a round cuts no edge
+    * (the oracle guard's edge-count fixpoint), so a node whose
+    * neighbours all died drops without costing a round. Returns the
+    * states and the rounds. */
+  private[graft] def kcorePeel(adj: Adjacency, k: Int)
+  : (RDD[(Long, Peel)], Int) = {
+    val (peel, rounds, cuts) =
+      pregel(adj, (_, nbrs) => Peel(true, nbrs.length, false))(
+        (nbrs, p) =>
+          if (p.alive) nbrs.iterator.map((_, 1L)) else Iterator.empty,
+        (_: Long) + (_: Long)) { (p, in) =>
+        val d = in.getOrElse(0L)
+        if (p.alive) Peel(d >= k, d, d < k && d > 0) else p.copy(cut = false)
+      }(_.cut, (r, n) => n > 0 && r < KCoreMaxRounds)
+    require(cuts == 0, s"q97: k-core peeling not converged in " +
       s"$KCoreMaxRounds rounds — raise KCoreMaxRounds")
-    val core = ue.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-      .select(col("src").as("node"), col("core_deg"))
-    all.select(col("src").as("node")).distinct()
-      .join(core, Seq("node"), "left_outer")
-      .select(col("node"), col("core_deg").isNotNull.as("in_kcore"),
-        coalesce(col("core_deg"), lit(0L)).as("core_deg"))
-      .orderBy(col("node"))
+    (peel, rounds)
   }
 
   val kcoreSql: String = {

@@ -271,4 +271,227 @@ class GraphSpec extends AnyFunSuite {
     assert(edgeSet(above) == want,
       "the gate changes layout, never results")
   }
+
+  // ----------------------------------------------- the five graph loops
+  // Plain-Scala references over a canonical edge list, each replaying
+  // its loop's definition round by round.
+
+  /** node → distinct neighbours, both directions. */
+  private def nbrsOf(es: Seq[(Long, Long)]): Map[Long, Seq[Long]] =
+    es.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+      .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2) }
+
+  private def lpaRef(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val nb = nbrsOf(es)
+    var lbl = nb.map { case (v, _) => v -> v }
+    for (_ <- 1 to Graphs.LpaIters) {
+      lbl = nb.map { case (v, ns) =>
+        val counts = ns.groupBy(lbl).map { case (l, xs) => l -> xs.size }
+        v -> counts.toSeq.sortBy { case (l, c) => (-c, l) }.head._1
+      }
+    }
+    lbl
+  }
+
+  /** Union-find; every node points at its component's minimum. */
+  private def unionFindRef(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nbrsOf(es).keys.map(v => v -> find(v)).toMap
+  }
+
+  private def floor6(x: Double): Double =
+    math.floor(x * 1e6 + 0.5).toLong / 1e6
+
+  /** PageRank (seeds empty) or PPR (seeds = top-K by degree desc, node
+    * asc), both with the per-round 6-dp floor. */
+  private def rankRef(es: Seq[(Long, Long)], personalized: Boolean)
+  : Map[Long, Double] = {
+    val nb = nbrsOf(es)
+    val d = Graphs.PrDamping
+    val seeds = nb.toSeq.sortBy { case (v, ns) => (-ns.size, v) }
+      .take(Graphs.PprSeedK).map(_._1).toSet
+    val k = seeds.size
+    def tele(v: Long): Double =
+      if (!personalized) (1 - d) / nb.size
+      else if (seeds(v)) (1 - d) / k else 0.0
+    var pr = nb.map { case (v, _) =>
+      v -> (if (!personalized) 1.0 / nb.size
+            else if (seeds(v)) 1.0 / k else 0.0)
+    }
+    for (_ <- 1 to Graphs.PrIters) {
+      pr = nb.map { case (v, ns) =>
+        v -> floor6(tele(v) + d * ns.map(u => pr(u) / nb(u).size).sum)
+      }
+    }
+    pr
+  }
+
+  /** The edge-list peel: drop edges touching a node of degree < k
+    * until the edge set stops shrinking. (node → core degree, 0 when
+    * out of the core; rounds). */
+  private def peelRef(es: Seq[(Long, Long)], k: Int)
+  : (Map[Long, Long], Int) = {
+    var e = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+    var done = false
+    var rounds = 0
+    while (!done) {
+      val deg = e.groupBy(_._1).map { case (v, xs) => v -> xs.size }
+      val next = e.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+      done = next.size == e.size
+      e = next
+      rounds += 1
+    }
+    val core = e.groupBy(_._1).map { case (v, xs) => v -> xs.size.toLong }
+    (nbrsOf(es).keys.map(v => v -> core.getOrElse(v, 0L)).toMap, rounds)
+  }
+
+  /** Random graphs and the shapes each loop must handle. */
+  private val loopCases: Seq[(String, Seq[(Long, Long)])] = {
+    var seed = 0xC0FFEEL
+    def next(n: Int): Int = {
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      (((seed >>> 33) % n + n) % n).toInt
+    }
+    val random = (1 to 3).map { t =>
+      val n = 20 + next(30)
+      s"random $t" -> (0 until 2 * n).map(_ => (next(n).toLong, next(n).toLong))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+    }
+    random ++ Seq(
+      "empty" -> Seq.empty,
+      "one edge" -> Seq((3L, 7L)),
+      "disconnected" -> Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+        (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)),
+      "star" -> (1L to 6L).map(l => (0L, l)),
+      "path" -> (0L until 12L).map(i => (i, i + 1)))
+  }
+
+  private def edgeFrame(es: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    es.toDF("src", "dst")
+  }
+
+  test("LPA matches its replay on random graphs, empty, one edge, " +
+      "disconnected parts, a star and a path") {
+    loopCases.foreach { case (name, es) =>
+      val got = Graphs.lpaLabels(Graphs.adjacency(edgeFrame(es)))
+        .collect().toMap
+      assert(got == lpaRef(es), name)
+    }
+  }
+
+  test("min-label components match union-find on the same cases") {
+    loopCases.foreach { case (name, es) =>
+      val got = Graphs.componentsOn(edgeFrame(es)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFindRef(es).values.groupBy(identity)
+        .map { case (c, vs) => c -> vs.size.toLong }
+      assert(got == want, name)
+    }
+  }
+
+  test("a 120-node path is one component: propagation runs to its " +
+      "fixpoint with no round cap") {
+    val path = (0L until 119L).map(i => (i, i + 1))
+    val got = Graphs.componentsOn(edgeFrame(path)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got == Seq(0L -> 120L), "one component of 120 nodes")
+    val (labels, rounds) = Graphs.ccLabels(Graphs.adjacency(edgeFrame(path)))
+    assert(labels.collect().toMap == unionFindRef(path))
+    assert(rounds == 120, "diameter 119 + the round that sees no change")
+  }
+
+  test("PageRank and personalized PageRank match their 6-dp references " +
+      "on the same cases") {
+    // the inflow sums run in shuffle order, so a value may land one
+    // 1e-6 step off the reference; every value stays on the 6-dp grid
+    def onGrid(x: Double) = math.abs(x * 1e6 - math.rint(x * 1e6)) < 1e-6
+    loopCases.foreach { case (name, es) =>
+      val pr = Graphs.pagerankOn(edgeFrame(es)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val prWant = rankRef(es, personalized = false)
+      assert(pr.keySet == prWant.keySet, name)
+      pr.foreach { case (v, x) =>
+        assert(onGrid(x) && math.abs(x - prWant(v)) < 1e-5,
+          s"$name pagerank node $v: $x vs ${prWant(v)}")
+      }
+      val ppr = Graphs.pprOn(edgeFrame(es)).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      val pprWant = rankRef(es, personalized = true)
+      val seeds = nbrsOf(es).toSeq.sortBy { case (v, ns) => (-ns.size, v) }
+        .take(Graphs.PprSeedK).map(_._1).toSet
+      assert(ppr.keySet == pprWant.keySet, name)
+      ppr.foreach { case (v, (seed, x)) =>
+        assert(seed == (if (seeds(v)) 1L else 0L), s"$name seed $v")
+        assert(onGrid(x) && math.abs(x - pprWant(v)) < 1e-5,
+          s"$name ppr node $v: $x vs ${pprWant(v)}")
+      }
+    }
+  }
+
+  test("k-core peel matches the edge-list peel, rounds included, for " +
+      "k = 1..3 on the same cases") {
+    for ((name, es) <- loopCases; k <- 1 to 3) {
+      val (want, wantRounds) = peelRef(es, k)
+      if (wantRounds > Graphs.KCoreMaxRounds) {
+        // the oracle's guard errors at the cap; so must the loop
+        intercept[IllegalArgumentException](
+          Graphs.kcoreOn(edgeFrame(es), k))
+      } else {
+        val got = Graphs.kcoreOn(edgeFrame(es), k).collect()
+          .map(r => (r.getLong(0), (r.getBoolean(1), r.getLong(2)))).toMap
+        assert(got == want.map { case (v, d) => v -> (d > 0, d) },
+          s"$name k=$k")
+        val (_, rounds) =
+          Graphs.kcorePeel(Graphs.adjacency(edgeFrame(es)), k)
+        assert(rounds == wantRounds, s"$name k=$k rounds")
+      }
+    }
+  }
+
+  test("k-core rounds equal the DataFrame peel's on the k-core cases") {
+    // rounds the previous per-round DataFrame loop ran on these inputs
+    val k4 = for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)
+    Seq(
+      (Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L)), 2, 3),
+      (k4, 3, 1),
+      (k4.filter(_ != ((3L, 4L))), 3, 3)).foreach { case (es, k, pin) =>
+      val (_, rounds) = Graphs.kcorePeel(Graphs.adjacency(edgeFrame(es)), k)
+      assert(rounds == pin, s"$es k=$k")
+    }
+  }
+
+  test("job pins: every round of the five loops is at most one job and " +
+      "no SQL execution") {
+    val es = loopCases.toMap.apply("disconnected")
+    val adj = Graphs.adjacency(edgeFrame(es))
+    adj.count()
+    def runs[A](body: => A) = TestUtil.countRuns(spark)(body)
+    def pin(name: String, jobs: Seq[String], sqls: Seq[String], n: Int) = {
+      assert(jobs.size == n, s"$name:\n" + jobs.mkString("\n"))
+      assert(sqls.isEmpty, s"$name:\n" + sqls.mkString("\n"))
+    }
+    val (_, lpaJobs, lpaSql) = runs(Graphs.lpaLabels(adj))
+    pin("lpa", lpaJobs, lpaSql, Graphs.LpaIters)
+    val ((_, ccRounds), ccJobs, ccSql) = runs(Graphs.ccLabels(adj))
+    pin("cc", ccJobs, ccSql, ccRounds)
+    // + the node count / the seed takeOrdered
+    val (_, prJobs, prSql) = runs(Graphs.ranks(adj, None))
+    pin("pagerank", prJobs, prSql, Graphs.PrIters + 1)
+    val (_, pprJobs, pprSql) = runs(Graphs.ranks(adj, Some(Graphs.PprSeedK)))
+    pin("ppr", pprJobs, pprSql, Graphs.PrIters + 1)
+    val ((_, kRounds), kJobs, kSql) = runs(Graphs.kcorePeel(adj, 3))
+    pin("kcore", kJobs, kSql, kRounds)
+    Sessions.dropCheckpoints(spark)
+  }
 }

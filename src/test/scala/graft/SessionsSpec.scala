@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The test session, the probes and the benchmark run on the conf the
   * oracle gate verifies ([[Sessions.conf]]). */
@@ -50,5 +51,58 @@ class SessionsSpec extends AnyFunSuite {
     assert(parsed.size == "->".r.findAllIn(body).size,
       s"unparsed pair in Runner.verifyConf:\n$body")
     assert(parsed == Sessions.conf(n))
+  }
+
+  test("the between-query sweep keeps only live Memo RDDs and keep, " +
+      "and logs no warning for the local checkpoints it drops") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("sweep-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      val memo = Memo.of(spark, "sweep", "kept") {
+        spark.range(5).toDF("id")
+      }
+      memo.count()
+      val cps = (1 to 3).map(i => spark.range(i).toDF("id").localCheckpoint())
+      val plain = spark.sparkContext.parallelize(1 to 4).cache()
+      plain.count()
+      val kept = spark.sparkContext.parallelize(1 to 4).cache()
+      kept.count()
+      assert(cps.forall(_.count() > 0))
+      val swept = spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !Memo.liveIds(spark)(id) && id != kept.id }
+        .values.map(_.getClass.getName).toSet
+      assert(swept.contains("org.apache.spark.rdd.MapPartitionsRDD"), swept)
+      Sessions.dropCheckpoints(spark, Set(kept.id))
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet ==
+        Memo.liveIds(spark) + kept.id)
+      assert(Memo.liveIds(spark).nonEmpty, "the memo entry stays live")
+      val warned = seen.asScala.filter(_.contains("locally checkpointed"))
+      assert(warned.isEmpty, warned.mkString("\n"))
+      // the sweep gave the loggers it quieted their level back
+      swept.foreach { n =>
+        assert(!ctx.getConfiguration.getLoggers.containsKey(n), n)
+        assert(LogManager.getLogger(n).getLevel ==
+          LogManager.getRootLogger.getLevel, n)
+      }
+      kept.unpersist()
+    } finally {
+      root.removeAppender("sweep-capture")
+      ctx.updateLoggers()
+      capture.stop()
+      Memo.clear(spark)
+    }
   }
 }

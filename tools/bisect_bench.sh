@@ -9,6 +9,10 @@
 # windows, and back-to-back same-binary runs can both land inside one.
 #
 # Usage: tools/bisect_bench.sh <prev-commit> [sf_dir] [passes]
+# Builds <prev-commit> in a git worktree, or uses the tree named by
+# AB_BASE_TREE (which must hold that commit's files), as
+# tools/perfbench_ab.sh does. The side that runs first alternates from
+# pass to pass; the summary gives each side's runs, min and median.
 # SPARK_GRAFT_CPUS, when set, reaches both binaries through the
 # environment; unset, each binary uses its own session default.
 # Reads: ~20-40 min for 2 passes at sf0.1. Each binary runs from its
@@ -25,11 +29,12 @@ cd "$(git rev-parse --show-toplevel)"
 # assume one format)
 PREVSHA=$(git rev-parse --short=12 "$PREV")
 CURSHA=$(git rev-parse --short=12 HEAD)
-WT="target/bisect_wt_$PREVSHA"
+WT=${AB_BASE_TREE:-target/bisect_wt_$PREVSHA}
 
 if [ ! -d "$WT" ]; then
   git worktree add "$WT" "$PREV"
 fi
+WT=$(cd "$WT" && pwd)
 echo "[bisect] compiling HEAD ($CURSHA) and $PREVSHA ..."
 sbt -batch compile
 (cd "$WT" && sbt -batch compile)
@@ -68,16 +73,23 @@ run_one() { # $1 = classes dir (absolute), $2 = label, $3 = scratch cwd,
 
 ROOT=$(pwd)
 declare -a CUR_TOTALS PREV_TOTALS
-for pass in $(seq 1 "$PASSES"); do
-  echo "[bisect] === pass $pass/$PASSES (interleaved) ==="
-  PREV_TOTALS+=("$(run_one "$ROOT/$WT/target/scala-2.13/classes" \
+run_prev() {
+  PREV_TOTALS+=("$(run_one "$WT/target/scala-2.13/classes" \
     "prev $PREVSHA p$pass" "target/bisect_run_prev" "$PREVSHA")")
+}
+run_cur() {
   CUR_TOTALS+=("$(run_one "$ROOT/target/scala-2.13/classes" \
     "cur  $CURSHA p$pass" "target/bisect_run_cur" "$CURSHA")")
+}
+# the side that runs first swaps every pass, so a drift inside a pass
+# does not always favour the same side
+for pass in $(seq 1 "$PASSES"); do
+  echo "[bisect] === pass $pass/$PASSES (interleaved) ==="
+  if [ $((pass % 2)) -eq 1 ]; then run_prev; run_cur; else run_cur; run_prev; fi
 done
 
 python3 - "$PREVSHA" "$CURSHA" "${PREV_TOTALS[@]}" -- "${CUR_TOTALS[@]}" <<'EOF'
-import sys
+import statistics, sys
 a = sys.argv[1:]
 prevsha, cursha = a[0], a[1]
 sep = a.index('--')
@@ -89,6 +101,8 @@ if not prev or not cur:
 pm, cm = min(prev), min(cur)
 print(f'[bisect] prev {prevsha}: runs {prev} -> min {pm:.1f} s')
 print(f'[bisect] cur  {cursha}: runs {cur} -> min {cm:.1f} s')
+print(f'[bisect] median prev {statistics.median(prev):.1f} s, '
+      f'cur {statistics.median(cur):.1f} s')
 print(f'[bisect] same-host delta cur vs prev: {(cm-pm)/pm*100:+.1f}%')
 print('[bisect] if this delta is small while the recorded round totals '
       'moved, the move was host drift; if it reproduces, it is code.')
