@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExplainDumpSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  test("every roster id, the edge build and the star round build and " +
-      "dump their formatted plan; memoized recommender entries show " +
+  test("every roster id and every single-round graph id builds and " +
+      "dumps its formatted plan; memoized recommender entries show " +
       "their checkpoint scan") {
     val memoized = Seq("q87_item_cf", "q89_content_rec", "q92_hybrid_rec")
     val ids = (ExplainDump.picks.map(_._1) ++ Seq("_edge_build",

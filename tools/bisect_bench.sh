@@ -9,10 +9,8 @@
 # windows, and back-to-back same-binary runs can both land inside one.
 #
 # Usage: tools/bisect_bench.sh <prev-commit> [sf_dir] [passes]
-# Builds <prev-commit> in a git worktree, or uses the tree named by
-# AB_BASE_TREE (which must hold that commit's files), as
-# tools/perfbench_ab.sh does. The side that runs first alternates from
-# pass to pass; the summary gives each side's runs, min and median.
+# The side that runs first alternates from pass to pass; the summary
+# gives each side's runs, min and median.
 # SPARK_GRAFT_CPUS, when set, reaches both binaries through the
 # environment; unset, each binary uses its own session default.
 # Reads: ~20-40 min for 2 passes at sf0.1. Each binary runs from its
@@ -29,12 +27,11 @@ cd "$(git rev-parse --show-toplevel)"
 # assume one format)
 PREVSHA=$(git rev-parse --short=12 "$PREV")
 CURSHA=$(git rev-parse --short=12 HEAD)
-WT=${AB_BASE_TREE:-target/bisect_wt_$PREVSHA}
+WT="target/bisect_wt_$PREVSHA"
 
 if [ ! -d "$WT" ]; then
   git worktree add "$WT" "$PREV"
 fi
-WT=$(cd "$WT" && pwd)
 echo "[bisect] compiling HEAD ($CURSHA) and $PREVSHA ..."
 sbt -batch compile
 (cd "$WT" && sbt -batch compile)
@@ -74,7 +71,7 @@ run_one() { # $1 = classes dir (absolute), $2 = label, $3 = scratch cwd,
 ROOT=$(pwd)
 declare -a CUR_TOTALS PREV_TOTALS
 run_prev() {
-  PREV_TOTALS+=("$(run_one "$WT/target/scala-2.13/classes" \
+  PREV_TOTALS+=("$(run_one "$ROOT/$WT/target/scala-2.13/classes" \
     "prev $PREVSHA p$pass" "target/bisect_run_prev" "$PREVSHA")")
 }
 run_cur() {
