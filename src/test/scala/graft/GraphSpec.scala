@@ -29,17 +29,6 @@ class GraphSpec extends AnyFunSuite {
       seed = seed * 6364136223846793005L + 1442695040888963407L
       (((seed >>> 33) % n + n) % n).toInt
     }
-    def unionFind(n: Int, es: Seq[(Long, Long)]): Map[Long, Long] = {
-      val p = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (p(r) != r) r = p(r); r }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) p(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // path-compress to the component MIN (roots are minimal by the
-      // max-points-to-min union rule)
-      (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-    }
     (1 to 3).foreach { trial =>
       val n = 30 + next(40)
       val es = (0 until (n + next(n)))
@@ -51,7 +40,7 @@ class GraphSpec extends AnyFunSuite {
       val got = graft.graph.Graphs
         .componentsLargeStar(es.toDF("src", "dst"), 0L).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = unionFind(n, es)
+      val want = unionFindRef(es)
       // only nodes with at least one edge are emitted
       val touched = es.flatMap(e => Seq(e._1, e._2)).toSet
       assert(got.keySet == touched, s"trial $trial node set")
@@ -293,7 +282,8 @@ class GraphSpec extends AnyFunSuite {
     lbl
   }
 
-  /** Union-find; every node points at its component's minimum. */
+  /** Union-find; every node points at its component's minimum (roots
+    * are minimal by the max-points-to-min union rule). */
   private def unionFindRef(es: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
