@@ -473,8 +473,8 @@ class GraphSpec extends AnyFunSuite {
     }
     val (_, lpaJobs, lpaSql) = runs(Graphs.lpaLabels(adj))
     pin("lpa", lpaJobs, lpaSql, Graphs.LpaIters)
-    val ((_, ccRounds), ccJobs, ccSql) = runs(Graphs.ccLabels(adj))
-    pin("cc", ccJobs, ccSql, ccRounds)
+    val ((_, rounds), ccJobs, ccSql) = runs(Graphs.ccLabels(adj))
+    pin("cc", ccJobs, ccSql, rounds)
     // + the node count / the seed takeOrdered
     val (_, prJobs, prSql) = runs(Graphs.ranks(adj, None))
     pin("pagerank", prJobs, prSql, Graphs.PrIters + 1)
