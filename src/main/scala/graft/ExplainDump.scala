@@ -17,9 +17,9 @@ object ExplainDump {
 
   /** Build the frame for a dumpable id — the registered query, or one
     * of the `_`-prefixed synthetic dumps: memo-free recommender
-    * builds, the unsorted *On entry, the edge build and one q64 star
-    * round (inside the registered queries those sit behind checkpoint
-    * scans, so their plans are otherwise invisible). Every case calls
+    * builds, the unsorted *On entry and the edge build (inside the
+    * registered queries those sit behind checkpoint scans, so their
+    * plans are otherwise invisible). Every case calls
     * the production definitions, never an inline rebuild that could
     * drift from them. */
   private[graft] def frameFor(name: String,
@@ -40,9 +40,6 @@ object ExplainDump {
       // the un-checkpointed co-purchase edge subtree
       case "_edge_build" => Graphs.capBySourceDf(
         Graphs.custParts(spark, sfDir, None), Graphs.MaxSourceDf)
-      // one q64 large-star step over a checkpointed edge frame
-      case "_star_round" => Graphs.starLargeRound(Graphs.edges(spark,
-        sfDir, Some(Graphs.SubNations), Graphs.SubThreshold).localCheckpoint())
       case _ => SparkEntry.queries(name)(spark, sfDir)
     }
   }

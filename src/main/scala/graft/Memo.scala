@@ -240,9 +240,8 @@ object Memo {
     evictDead(s)
     val owned = entries.values.asScala.flatMap(c => Option(c.built))
       .flatMap(_.owned).toSet
-    s.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => owned(id) }
-      .values.foreach(_.unpersist(blocking = false))
+    Sessions.unpersistQuietly(s.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => owned(id) }.values)
     entries.clear()
     scalars.clear()
   }

@@ -330,16 +330,18 @@ object ScaleStress {
       |the whole banded-LSH build once per branch. Checkpointing the
       |pair list first (the shape q80 already had) cut q65 to 13.9 s;
       |q86's train pipeline carried the same defect and the same fix.
+      |The contraction now builds one adjacency RDD from a single pass
+      |over the pair list, so q65 and q86 no longer checkpoint it.
       |
       |The CC itself is OUTPUT-sized at every decade on this corpus
       |(disjoint replicas → within-replica pairs only: 47,700 pairs /
-      |95,400 undirected edges at 100×, under the 100k local-roster
-      |cap), so the production path is the driver union-find. The
-      |distributed star-contraction — the path a denser real corpus
-      |lands on — was FORCED (`localMaxEdges = 0`) for its own decade
-      |point: 1.7 s → 2.9 s for 100× pairs, 0.01+0.01 GiB shuffle,
-      |zero spill, same O(log n) round count (disjoint replicas keep
-      |the diameter). No super-linear stage anywhere in the chain.
+      |95,400 undirected edges at 100×). The distributed star
+      |contraction, the production path at every decade, took 2.9 s on
+      |the 100× pairs (0.01+0.01 GiB shuffle, zero spill; measured in
+      |r15 with the DataFrame round body that neighbour-set rounds have
+      |since replaced), with the same O(log n) round count at every
+      |decade (disjoint replicas keep the diameter). No super-linear
+      |stage anywhere in the chain.
       |
       |""".stripMargin
 
@@ -688,7 +690,7 @@ object ScaleStress {
     // ---- dedup-composition per-stage attribution (VERDICT r14 item
     // 3): q61/q65/q80 chain q58's pair list through star-contraction
     // CC and the group-keyed split/audit. The contraction is the
-    // suspect — it iterates (per-round localCheckpoint), so a hidden
+    // suspect — it iterates (one job per round), so a hidden
     // super-linear term would live in the round count or a round's
     // shuffle, not in any single plan. Forced checkpoint boundaries
     // give the pair build, the CC rounds, and the split tail each a
@@ -696,7 +698,7 @@ object ScaleStress {
     // entry points production uses (shingleNeardupOn /
     // dupClustersFrom / leakageSplitFrom) — no inline rebuilds.
     val chainStageNames = Seq("c1_pair_list", "c2_cc_contraction",
-      "c2_cc_distributed", "c3_split_audit")
+      "c3_split_audit")
     val runChainStages =
       only.forall(s => s.isEmpty || s.contains("q80_leakage_split"))
     if (runChainStages) for (pass <- 1 to 2; d <- points) {
@@ -708,17 +710,6 @@ object ScaleStress {
           .select(col("doc_a"), col("doc_b")).localCheckpoint())
       val clusters = timedC("c2_cc_contraction")(
         graft.ops.Pipeline.dupClustersFrom(pairs).localCheckpoint())
-      // the contraction AGAIN with the local-roster shortcut disabled:
-      // this synthetic corpus's pair list is output-sized at every
-      // decade (disjoint replicas → within-replica pairs only), so
-      // production takes the driver union-find — forcing
-      // localMaxEdges=0 gives the distributed star-contraction
-      // rounds (the path a denser real corpus would land on) decade
-      // evidence of their own
-      timedC("c2_cc_distributed")(
-        graft.graph.Graphs.componentsLargeStar(
-          pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          localMaxEdges = 0L).count())
       timedC("c3_split_audit")(
         graft.ops.Pipeline.leakageSplitFrom(docs, pairs, clusters)
           .count())

@@ -52,31 +52,30 @@ object Sessions {
     * an async unpersist lets the next query start while the blocks
     * still hold storage memory, squeezing its execution share —
     * measured +62 s on q93-after-q92 at 30× (standalone 68.9 s vs
-    * 132.8 s in-session). Call it outside any timed window. Spark warns
-    * once per local checkpoint it unpersists that its lineage is gone,
-    * which is the point of the sweep, so those RDD classes' loggers are
-    * raised to ERROR around the unpersist calls only. */
+    * 132.8 s in-session). Call it outside any timed window. */
   def dropCheckpoints(spark: SparkSession,
       keep: Set[Int] = Set.empty): Unit = {
     val live = Memo.liveIds(spark) ++ keep
-    val drop = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !live(id) }.values
-    quietly(drop.map(_.getClass.getName).toSet) {
-      drop.foreach(_.unpersist(blocking = true))
-    }
+    unpersistQuietly(spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !live(id) }.values)
   }
 
-  /** Runs `body` with the named loggers at ERROR, then gives each back
-    * its own level, or removes the logger config it did not have. */
-  private def quietly[A](loggers: Set[String])(body: => A): A = {
+  /** Unpersists `rdds`, blocking. Spark warns once per local checkpoint
+    * it unpersists that its lineage is gone, which is the point of a
+    * sweep, so those RDD classes' loggers are raised to ERROR around the
+    * unpersist calls only, then each gets its own level back, or loses
+    * the logger config it did not have. */
+  private[graft] def unpersistQuietly(
+      rdds: Iterable[org.apache.spark.rdd.RDD[_]]): Unit = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.LoggerContext
     import org.apache.logging.log4j.core.config.Configurator
+    val loggers = rdds.map(_.getClass.getName).toSet
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val own = ctx.getConfiguration.getLoggers
     val prev = loggers.map(n => n -> Option(own.get(n)).map(_.getLevel))
     loggers.foreach(Configurator.setLevel(_, Level.ERROR))
-    try body
+    try rdds.foreach(_.unpersist(blocking = true))
     finally {
       prev.foreach {
         case (n, Some(l)) => Configurator.setLevel(n, l)

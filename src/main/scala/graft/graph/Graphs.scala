@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,8 @@ import graft.Tables._
   *
   * LPA, connected components, PageRank, personalized PageRank and the
   * k-core peel are Pregel supersteps (Malewicz et al., SIGMOD 2010) on
-  * one persisted, hash-partitioned [[adjacency]], with explicit
+  * one persisted, hash-partitioned [[adjacency]], and the star
+  * contraction rewrites neighbour sets of that same shape, with explicit
   * deterministic tie-breaks (count desc, label asc) — unlike library
   * LPA implementations whose hash-order ties defeat replay. The DuckDB
   * oracle replays LPA exactly (unrolled iterations) and CC via a
@@ -47,8 +48,14 @@ object Graphs {
     * applies the same cap, so Spark and oracle agree at EVERY scale,
     * not just the tested ones. */
   val MaxSourceDf = 1000
-  /** Subgraph: nations < 5, threshold 4 — the bounded graph for
-    * triangle/LPA/CC queries (306 nodes / ~650 edges at sf0.01). */
+  /** Subgraph: nations < 5, threshold 4 — the bounded graph for the
+    * triangle, LPA, CC and rank queries. It shrinks as the data grows:
+    * a customer buys ~35–40 distinct parts at every scale while the
+    * part catalogue grows with the data (200 / 2,000 / 20,000 parts at
+    * sf0.001 / 0.01 / 0.1), so two customers' expected overlap falls
+    * 10× per decade, and ≥ 4 shared parts turns rare faster than the
+    * customer pairs multiply: 28 / 306 / 3,036 customers, but 248 /
+    * 647 / 19 edges on 27 / 241 / 37 nodes (diag/pr10/subgraph_by_sf.txt). */
   val SubNations = 5
   val SubThreshold = 4
   val LpaIters = 5
@@ -162,15 +169,19 @@ object Graphs {
     * the session's shuffle width and persisted once: every superstep
     * joins its state narrowly against it, so edges never move again. */
   private[graft] def adjacency(ed: DataFrame): Adjacency =
-    ed.select(col("src"), col("dst")).queryExecution.toRdd
-      .flatMap { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        Iterator((a, b), (b, a))
-      }
-      .groupByKey(new HashPartitioner(
+    linked(ed.select(col("src"), col("dst")).queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1))),
+      new HashPartitioner(
         ed.sparkSession.sessionState.conf.numShufflePartitions))
-      .mapValues(_.toArray.distinct)
       .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Each edge in both directions, grouped into `p` with a neighbour
+    * listed once: the one grouping routine, shared by [[adjacency]] and
+    * every star-contraction step. */
+  private def linked(es: RDD[(Long, Long)], p: Partitioner): Adjacency =
+    es.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .groupByKey(p)
+      .mapValues(_.toArray.distinct)
 
   /** Pregel supersteps (Malewicz et al., SIGMOD 2010) over `adj`, from
     * one `init` state per node on the adjacency's partitioner. In each,
@@ -325,11 +336,16 @@ object Graphs {
     componentsOn(edges(s, d, Some(SubNations), SubThreshold))
 
   /** q36 over a (src, dst) edge frame. */
-  def componentsOn(ed: DataFrame): DataFrame = {
-    val s = ed.sparkSession
+  def componentsOn(ed: DataFrame): DataFrame =
+    census(ed.sparkSession, ccLabels(adjacency(ed))._1)
+
+  /** (component, csize) of a node → component labelling, by component:
+    * the census q36 and q64 share. */
+  private def census(s: SparkSession, labels: RDD[(Long, Long)])
+  : DataFrame = {
     import s.implicits._
-    ccLabels(adjacency(ed))._1.map { case (_, l) => (l, 1L) }
-      .reduceByKey(_ + _).toDF("component", "csize").orderBy(col("component"))
+    labels.map { case (_, l) => (l, 1L) }.reduceByKey(_ + _)
+      .toDF("component", "csize").orderBy(col("component"))
   }
 
   /** Min-label propagation to its fixpoint, and its rounds. Labels only
@@ -358,148 +374,63 @@ object Graphs {
        |SELECT component, count(*) AS csize
        |FROM comp GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Connected components by alternating large-star / small-star
-    * rounds (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the 100-TB upgrade path over [[components]]'s
-    * min-label propagation: label propagation needs O(diameter)
-    * rounds (a 10⁶-node path is 10⁶ shuffles), star contraction
-    * converges in O(log n) rounds on any topology. Each round is two
-    * node-keyed aggregations + joins over the current edge set, which
-    * only shrinks. Returns (node, component) with the component
-    * labeled by its minimum member id. Registered as q64 over the
-    * bounded subgraph (same recursive-CTE oracle as q36); GraphSpec
-    * additionally proves it against union-find on random graphs and a
-    * long path.
-    *
-    * Round shapes (u's neighborhood N, m = min(N ∪ {u})):
-    *   large-star: for v ∈ N(u) with v > u, emit (v, m)
-    *   small-star: for v ∈ N(u) with v ≤ u, emit (v, m), plus (u, m)
-    */
-  /** Edge-count bound for the small-graph fast path in
-    * [[componentsLargeStar]]: at or below it the contraction runs as a
-    * single-pass driver union-find (a BOUNDED collect — ≤ 2·10⁵ longs
-    * ≈ 3 MB — never input-proportional: the count gates it), because
-    * near-dup pair lists are output-sized and the per-round job
-    * overhead dominates tiny graphs. Above it, the distributed
-    * O(log n) rounds. Same dispatcher shape as q45's embedding
-    * near-dup (threshold routes to the scale path). */
-  val LocalCcMaxEdges = 100000L
-
-  /** Star-step symmetrization — one src-exchange per step (guide
-    * §2.4): the dedup, the min-neighbor aggregate AND the star join
-    * that follow all accept a src clustering, so the explicit
-    * repartition replaces three chained ENSURE_REQUIREMENTS exchanges
-    * per star step ((src,dst) dedup, src aggregate, join re-exchange).
-    * Per-src fan-out is the node degree — the same key distribution
-    * every one of those stages already grouped on. Lifted out of
-    * [[componentsLargeStar]] so ExplainDump's `_star_round` dump
-    * shares the production definition (the ADVICE r14 rule; this
-    * shape was r16's one optimization shipped without its plan
-    * receipt — VERDICT r16 item 10). */
-  private[graft] def starUndir(e: DataFrame): DataFrame =
-    e.select(col("src"), col("dst"))
-      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src")).distinct()
-
-  private[graft] def starMinNbr(ue: DataFrame): DataFrame =
-    ue.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src"), least(col("mn"), col("src")).as("m"))
-
-  /** One large-star step over a prebuilt edge frame — the
-    * un-checkpointed round plan `_star_round` dumps. */
-  private[graft] def starLargeRound(e: DataFrame): DataFrame = {
-    val ue1 = starUndir(e)
-    ue1.join(starMinNbr(ue1), "src")
-      .filter(col("dst") > col("src"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
+  /** Connected components by alternating large-star / small-star steps
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014): O(log n) rounds on any topology, where [[components]]'s
+    * min-label propagation needs O(diameter) (a 10⁶-node path is 10⁶
+    * shuffles). Star contraction rewrites the edge set every round, so
+    * it is not a vertex program: each step maps every node's neighbour
+    * set to new edges and regroups them ([[linked]]) into the
+    * adjacency's partitioner. With m = min(N(u) ∪ {u}):
+    *   large-star: link each v ∈ N(u) with v > u to m
+    *   small-star: link u and each v ∈ N(u) with v < u to m
+    * A round is both steps, persisted, and ONE job: a co-partitioned
+    * cogroup against the round before, counting the nodes whose
+    * neighbour set changed. At the fixpoint every component is one
+    * star around its minimum, so a node's label is min(N(u) ∪ {u}).
+    * Returns (node → label, rounds); only nodes on an edge appear. */
+  private[graft] def starLabels(adj: Adjacency): (RDD[(Long, Long)], Int) = {
+    val p = adj.partitioner.get
+    def step(a: Adjacency)(links: (Long, Array[Long], Long) =>
+        Iterator[Long]): Adjacency =
+      linked(a.flatMap { case (u, nbrs) =>
+        val m = math.min(u, nbrs.min)
+        links(u, nbrs, m).map((_, m))
+      }, p)
+    var cur = adj
+    var (rounds, changed) = (0, 0L)
+    // 60 rounds is far past O(log n) convergence for any real graph
+    while ((rounds == 0 || changed > 0) && rounds < 60) {
+      val large = step(cur)((u, nbrs, _) => nbrs.iterator.filter(_ > u))
+      val next = step(large)((u, nbrs, m) =>
+        (nbrs.iterator.filter(_ < u) ++ Iterator(u)).filter(_ != m))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      changed = next.cogroup(cur, p).filter { case (_, (a, b)) =>
+        a.headOption.map(_.toSet) != b.headOption.map(_.toSet) }.count()
+      if (cur ne adj) cur.unpersist()
+      cur = next
+      rounds += 1
+    }
+    // a partially-contracted labelling is a silently wrong answer
+    require(changed == 0,
+      s"star contraction: no fixpoint after $rounds rounds")
+    (cur.map { case (u, nbrs) => (u, math.min(u, nbrs.min)) }, rounds)
   }
 
-  def componentsLargeStar(edges: DataFrame,
-      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
+  /** (node, component) over a (src, dst) edge frame, UNORDERED, the
+    * component labelled by its minimum member: [[starLabels]]. */
+  def componentsLargeStar(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
-    def undir(e: DataFrame): DataFrame = starUndir(e)
-    def minNbr(ue: DataFrame): DataFrame = starMinNbr(ue)
-    var e = undir(edges).localCheckpoint()
-    var eCnt = e.count()
-    if (eCnt <= localMaxEdges) {
-      import s.implicits._
-      val es = e.select(col("src"), col("dst"))
-        .as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      // iterative find + path compression: the max-under-min union
-      // rule has no rank balancing, so an adversarial edge order can
-      // chain 10⁵ parent hops — recursion would overflow the stack
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = es.flatMap { case (a, b) => Seq(a, b) }.distinct
-      return nodes.map(n => (n, find(n))).toSeq
-        .toDF("node", "component").orderBy(col("node"))
-    }
-    var done = false
-    var iter = 0
-    while (!done && iter < 60) {
-      val ue1 = undir(e)
-      val large = ue1.join(minNbr(ue1), "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-      val e1 = large.filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint()
-      val ue2 = undir(e1)
-      val nm = minNbr(ue2)
-      val small = ue2.join(nm, "src")
-        .filter(col("dst") <= col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(nm.select(col("src"), col("m").as("dst")))
-      val e2 = small.filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint()
-      // fixpoint: the star edge set stops changing. Counts first (the
-      // previous round's is carried, so this is ONE cheap job); the
-      // edge-sized symmetric difference runs only when counts agree —
-      // typically just the final round
-      val e2Cnt = e2.count()
-      done = e2Cnt == eCnt && e2.exceptAll(e).isEmpty
-      e = e2
-      eCnt = e2Cnt
-      iter += 1
-    }
-    // 60 rounds is far past O(log n) convergence for any real graph;
-    // if it's ever hit, fail loudly — a partially-contracted labeling
-    // is a silently wrong answer.
-    require(done,
-      s"componentsLargeStar: no fixpoint after $iter rounds")
-    // stars point children at the component min; the min itself
-    // appears only as a dst — add the roots' self labels
-    val members = e.select(col("src").as("node"), col("dst").as("component"))
-    members
-      .unionByName(members.select(col("component").as("node"),
-        col("component")))
-      .distinct()
-      .orderBy(col("node"))
+    import s.implicits._
+    starLabels(adjacency(edges))._1.toDF("node", "component")
   }
 
   /** q64: the same bounded-subgraph component census as q36, computed
-    * by the O(log n) star-contraction path — the designated 100-TB
-    * variant, hash-verified against the identical recursive-CTE
-    * oracle rather than only property-tested. Pins localMaxEdges = 0
-    * so the DISTRIBUTED rounds are what the oracle certifies (the
-    * small-graph union-find shortcut would otherwise capture this
-    * bounded subgraph). */
+    * by the O(log n) star contraction that q65, q80 and q86 run too,
+    * hash-verified against the identical recursive-CTE oracle. */
   def componentsStar(s: SparkSession, d: String): DataFrame =
-    componentsLargeStar(edges(s, d, Some(SubNations), SubThreshold), 0L)
-      .groupBy(col("component"))
-      .agg(count(lit(1)).as("csize"))
-      .orderBy(col("component"))
+    census(s, starLabels(
+      adjacency(edges(s, d, Some(SubNations), SubThreshold)))._1)
 
   // ---------------------------------------------------------------- q63
   /** PageRank iterations and damping — the web-quality signal a

@@ -100,18 +100,13 @@ object Pipeline {
   def dupClusters(s: SparkSession, d: String): DataFrame =
     dupClustersOn(documents(s, d)).orderBy(col("doc_id"))
 
-  /** q65 over a caller-supplied (doc_id, text) corpus. The pair list
-    * is CHECKPOINTED before the contraction, exactly like q80's:
-    * componentsLargeStar's symmetrization references its input twice
-    * (both unionByName branches), and feeding it the raw q58 subtree
-    * made the first materialization job compute the whole banded-LSH
-    * build once per branch — measured at the 100× decade as a 58.4 s
-    * q65 wall against a 13.6 s stage-sum for the identical
-    * pairs→CC→relabel chain over a checkpointed list
-    * (diag/r15/scale100_chain_run.log). */
+  /** q65 over a caller-supplied (doc_id, text) corpus. The contraction
+    * is the pair list's only reader, and it reads the list once: its
+    * adjacency is built from one pass over the frame, so the banded-LSH
+    * pair build runs once with no checkpoint in between. */
   def dupClustersOn(docs: DataFrame): DataFrame =
     dupClustersFrom(SetSimilarity.shingleNeardupOn(docs)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint())
+      .select(col("doc_a"), col("doc_b")))
 
   /** The q65 canonicalization over an ALREADY-COMPUTED near-dup pair
     * list (doc_a, doc_b) — any of the q22/q24/q25/q45/q58 detectors
@@ -819,12 +814,9 @@ object Pipeline {
     // curated corpus: feeds pair detection + source lookup + manifest hash
     val keptDocs = docs.join(kept, Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    // checkpointed before the contraction (the q65 lesson, r15): the
-    // CC's symmetrization reads its input twice, and a raw LSH
-    // subtree would be computed once per branch
-    val pairs = SetSimilarity.shingleNeardupOn(keptDocs)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val canon = dupClustersFrom(pairs)
+    // the contraction reads the pair list once, as its adjacency
+    val canon = dupClustersFrom(SetSimilarity.shingleNeardupOn(keptDocs)
+      .select(col("doc_a"), col("doc_b")))
     val trainIds = kept
       .join(canon, Seq("doc_id"), "left_outer")
       .filter(coalesce(col("canon_id"), col("doc_id")) === col("doc_id"))

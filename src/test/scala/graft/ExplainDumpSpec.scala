@@ -11,8 +11,8 @@ class ExplainDumpSpec extends AnyFunSuite {
       "dumps its formatted plan; memoized recommender entries show " +
       "their checkpoint scan") {
     val memoized = Seq("q87_item_cf", "q89_content_rec", "q92_hybrid_rec")
-    val ids = (ExplainDump.picks.map(_._1) ++ Seq("_edge_build",
-      "_star_round") ++ memoized).distinct
+    val ids = (ExplainDump.picks.map(_._1) ++ Seq("_edge_build") ++
+      memoized).distinct
     try {
       val dumps = ids.map(id => id -> ExplainDump.section(id, spark, sfDir))
         .toMap

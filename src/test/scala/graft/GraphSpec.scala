@@ -21,47 +21,6 @@ class GraphSpec extends AnyFunSuite {
       "normal keys untouched")
   }
 
-  test("large-star/small-star components == union-find on random graphs") {
-    import spark.implicits._
-    // deterministic LCG
-    var seed = 0xBEEFL
-    def next(n: Int): Int = {
-      seed = seed * 6364136223846793005L + 1442695040888963407L
-      (((seed >>> 33) % n + n) % n).toInt
-    }
-    (1 to 3).foreach { trial =>
-      val n = 30 + next(40)
-      val es = (0 until (n + next(n)))
-        .map(_ => (next(n).toLong, next(n).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      // localMaxEdges = 0 pins the DISTRIBUTED rounds (the small-graph
-      // union-find shortcut would capture every generated graph)
-      val got = graft.graph.Graphs
-        .componentsLargeStar(es.toDF("src", "dst"), 0L).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = unionFindRef(es)
-      // only nodes with at least one edge are emitted
-      val touched = es.flatMap(e => Seq(e._1, e._2)).toSet
-      assert(got.keySet == touched, s"trial $trial node set")
-      touched.foreach { v =>
-        assert(got(v) == want(v), s"trial $trial node $v")
-      }
-      // the small-graph fast path must agree with the distributed rounds
-      val local = graft.graph.Graphs
-        .componentsLargeStar(es.toDF("src", "dst")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == got, s"trial $trial local/distributed agreement")
-    }
-    // long path: label propagation would need ~500 rounds; star
-    // contraction must finish inside the 60-round cap
-    val path = (0L until 499L).map(i => (i, i + 1))
-    val labels = graft.graph.Graphs
-      .componentsLargeStar(path.toDF("src", "dst"), 0L).collect()
-    assert(labels.length == 500 && labels.forall(_.getLong(1) == 0L),
-      "path collapses to component 0")
-  }
-
   test("pagerank: mass conserved, star center dominates, symmetry holds") {
     import spark.implicits._
     // star K1,3: center 0, leaves 1..3, both directions
@@ -390,6 +349,23 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("large-star/small-star components == union-find on random graphs") {
+    // and on the other cases: empty, one edge, disconnected parts, a
+    // star and a path
+    loopCases.foreach { case (name, es) =>
+      val got = Graphs.componentsLargeStar(edgeFrame(es)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFindRef(es), name)
+    }
+    // long path: label propagation would need ~500 rounds; star
+    // contraction must finish inside the 60-round cap
+    val path = (0L until 499L).map(i => (i, i + 1))
+    val (labels, rounds) = Graphs.starLabels(Graphs.adjacency(edgeFrame(path)))
+    assert(labels.collect().toMap == unionFindRef(path),
+      "path collapses to component 0")
+    assert(rounds < 60, s"$rounds rounds")
+  }
+
   test("a 120-node path is one component: propagation runs to its " +
       "fixpoint with no round cap") {
     val path = (0L until 119L).map(i => (i, i + 1))
@@ -461,7 +437,7 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("job pins: every round of the five loops is at most one job and " +
+  test("job pins: every round of six graph loops is at most one job and " +
       "no SQL execution") {
     val es = loopCases.toMap.apply("disconnected")
     val adj = Graphs.adjacency(edgeFrame(es))
@@ -482,6 +458,8 @@ class GraphSpec extends AnyFunSuite {
     pin("ppr", pprJobs, pprSql, Graphs.PrIters + 1)
     val ((_, kRounds), kJobs, kSql) = runs(Graphs.kcorePeel(adj, 3))
     pin("kcore", kJobs, kSql, kRounds)
+    val ((_, sRounds), sJobs, sSql) = runs(Graphs.starLabels(adj))
+    pin("star", sJobs, sSql, sRounds)
     Sessions.dropCheckpoints(spark)
   }
 }

@@ -626,8 +626,11 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit,
       LocalLimit, LogicalPlan, Sort}
-    val docs = (0L until 40L).map(i =>
-      (i, s"src${i % 3}", s"the a w$i quick brown fox " * 4))
+    // docs 40..44 repeat docs 0..4 word for word: the other pairs
+    // share 3 of 9 shingles (Jaccard 0.33, under ShingleTau), so only
+    // these five reach the components rounds
+    val docs = ((0L until 40L) ++ (40L until 45L)).map(i =>
+      (i, s"src${i % 3}", s"the a w${i % 40} quick brown fox " * 4))
       .toDF("doc_id", "source", "text")
     // a GLOBAL Sort is presentation; Sort-under-Limit is a top-k
     // (TakeOrdered — semantic, physical plan never full-sorts) and
@@ -656,6 +659,10 @@ class PipelineSpec extends AnyFunSuite {
     noSort(Text.sourceTermsOn(docs), "sourceTermsOn")
     noSort(Pipeline.corpusPrepOn(docs), "corpusPrepOn")
     noSort(Pipeline.dupClustersOn(docs), "dupClustersOn")
+    assert(Pipeline.dupClustersOn(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (0L until 5L).flatMap(j => Seq((j, j), (40 + j, j))).toSet,
+      "the five duplicate pairs form five two-doc clusters")
     noSort(Pipeline.decontaminateOn(docs, docs.limit(5)), "decontaminateOn")
     noSort(Pipeline.qualitySampleOn(docs), "qualitySampleOn")
     noSort(Pipeline.sourceMixtureOn(docs, 500L), "sourceMixtureOn")

@@ -89,6 +89,7 @@ class SessionsSpec extends AnyFunSuite {
       assert(spark.sparkContext.getPersistentRDDs.keySet.toSet ==
         Memo.liveIds(spark) + kept.id)
       assert(Memo.liveIds(spark).nonEmpty, "the memo entry stays live")
+      Memo.clear(spark)
       val warned = seen.asScala.filter(_.contains("locally checkpointed"))
       assert(warned.isEmpty, warned.mkString("\n"))
       // the sweep gave the loggers it quieted their level back
