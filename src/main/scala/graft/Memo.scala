@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session-scoped cache of shared query artifacts, keyed on (context
   * identity, dataset path, artifact name).
@@ -47,18 +48,20 @@ object Memo {
 
   private case class Key(app: String, start: Long, name: String)
 
-  /** Built artifact: the checkpointed frame, the RDD ids its build
-    * persisted (the final localCheckpoint plus any intermediate
-    * checkpoints inside the builder — kept alive by hygiene sweeps),
-    * and what the build cost (surfaced by Bench as memo_build_sec). */
+  /** Built artifact: the checkpointed frame, the RDD ids behind it
+    * (its one localCheckpoint — kept alive by hygiene sweeps), and
+    * what the build cost (surfaced by Bench as memo_build_sec). */
   private case class Entry(df: DataFrame, owned: Set[Int],
       buildSec: Double)
 
   /** Per-key build cell: `lazy val` gives per-CELL locking — same
     * artifact builds once, distinct artifacts don't serialize. The
-    * owned-id set is the persisted-RDD diff around the build; a
-    * concurrent build's ids can land in both diffs, which only means
-    * both entries keep them alive — over-retention, never loss. */
+    * entry owns only its frame's checkpoint. The builder's own
+    * checkpoints (the sims table, the class and df tables) are dead
+    * once that frame is materialized, so the build releases them:
+    * the next hygiene sweep unpersists them, outside any timed window,
+    * while a nested entry's frame (rec_ui, built inside rec_cf's
+    * build) stays live as its own entry. */
   private final class Cell(s: SparkSession, build: () => DataFrame,
       pre: Option[Entry] = None) {
     /** Completed entry, or null while un-built / building — lets
@@ -81,7 +84,9 @@ object Memo {
       try {
         val t0 = System.nanoTime()
         val df = build().localCheckpoint()
-        val owned = sc.getPersistentRDDs.keySet.toSet -- before
+        // a localCheckpoint'd frame is one LogicalRDD over its blocks
+        val owned = df.queryExecution.logical
+          .collect { case r: LogicalRDD => r.rdd.id }.toSet
         val e = Entry(df, owned, (System.nanoTime() - t0) / 1e9)
         built = e
         e

@@ -626,7 +626,8 @@ object ScaleStress {
         Recommend.uiMatrix(copurchases(spark, d), Recommend.UserItemCap))
       // localCheckpoint is EAGER: each arm fully materializes inside
       // its own timed window, and the fusion then reads two
-      // ExistingRDD scans — exactly the memoized-session plan shape
+      // ExistingRDD scans, as q92 does in a session where rec_cf and
+      // rec_cn are memo entries (h1's checkpoint is rec_ui's)
       val cfT = timed92("h2_cf_arm")(
         Recommend.itemCfTop(ui, Recommend.CoMinUsers,
           Recommend.NeighborTopM, Recommend.RecK).localCheckpoint())

@@ -96,11 +96,8 @@ object Graphs {
   /** Canonical undirected edges (src < dst). */
   def edges(s: SparkSession, d: String, maxNation: Option[Int], thr: Int)
   : DataFrame = {
-    // localCheckpoint: cp feeds BOTH sides of the self-join (and every
-    // caller reuses the edge list 2–4×) — without it Spark recomputes
-    // the scan→join→distinct→window subtree once per reference (q33
-    // paid it 4×). Materializing cp once trades bounded storage
-    // (distinct (ck,pk) pairs) for never re-reading the fact tables.
+    // kept: 3 readers, the pair-mass job + both self-join sides; the
+    // scan→join→distinct→window subtree would run once per reader.
     val cp = capBySourceDf(custParts(s, d, maxNation), MaxSourceDf)
       .localCheckpoint()
     // Exact pair mass, memoized per (dataset, nation cap) so a
@@ -250,7 +247,8 @@ object Graphs {
     * n_customers). The heavy edge build runs over all customers; the
     * result is histogram-sized regardless of scale. */
   def degreeHist(s: SparkSession, d: String): DataFrame =
-    // edges checkpointed: undirected() references it twice
+    // kept: 2 readers (`undirected`); without it each reruns the pair
+    // aggregate's final pass (35% slower at sf0.1)
     degreeHistFromEdges(edges(s, d, None, EdgeThreshold).localCheckpoint())
       .orderBy(col("degree"))
 
@@ -275,7 +273,7 @@ object Graphs {
   /** q34: triangle count on the bounded subgraph — canonical-edge 3-way
     * self-join (a<b<c counts each triangle once). */
   def triangles(s: SparkSession, d: String): DataFrame = {
-    // edge list referenced three times below
+    // kept: 3 readers; 15% slower at sf0.1 without it (as q33)
     val ed = edges(s, d, Some(SubNations), SubThreshold).localCheckpoint()
     val e1 = ed.select(col("src").as("a"), col("dst").as("b"))
     val e2 = ed.select(col("src").as("b"), col("dst").as("c"))
@@ -661,7 +659,7 @@ object Graphs {
 
   /** q108 over an arbitrary canonical (src < dst) edge list. */
   def localClusteringOn(edgeList: DataFrame): DataFrame = {
-    // edge list referenced four times (degree + 3-way triangle join)
+    // kept: 4 readers; 17% slower at sf0.1 without it (as q33)
     val ed = edgeList.localCheckpoint()
     val deg = undirected(ed)
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
@@ -723,6 +721,7 @@ object Graphs {
 
   /** q118 over an arbitrary canonical (src < dst) edge list. */
   def assortativityOn(edgeList: DataFrame): DataFrame = {
+    // kept: 2 readers; 20% slower at sf0.1 without it (as q33)
     val ue = undirected(edgeList.localCheckpoint())
     val deg = ue.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))

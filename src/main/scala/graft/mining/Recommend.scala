@@ -166,7 +166,7 @@ object Recommend {
     * full re-run of both arms, exactly like a production stack serving
     * several recommenders off one materialized index. */
   private def uiArtifact(s: SparkSession, d: String): DataFrame =
-    graft.Memo.of(s, d, "rec_ui")(uiMatrix(copurchases(s, d), UserItemCap))
+    graft.Memo.of(s, d, "rec_ui")(uiPlan(copurchases(s, d), UserItemCap))
 
   // the memoized artifacts are the UNORDERED tops: q87/q89 re-sort at
   // their presentation edge and q92's fusion never needed the sort
@@ -184,13 +184,19 @@ object Recommend {
     cfArtifact(s, d).orderBy(col("custkey"), col("rec_rank"))
 
   /** The deduped, power-user-capped user-item matrix — checkpointed
-    * because every downstream stage reads it (degrees, both self-join
-    * sides, candidate generation, the ownership anti-join). */
-  private[graft] def uiMatrix(interactions: DataFrame, cap: Int): DataFrame = {
+    * because every downstream stage reads it (5+ readers: the pair
+    * estimate job, degrees, both self-join sides, candidate generation,
+    * the ownership anti-join). */
+  private[graft] def uiMatrix(interactions: DataFrame, cap: Int): DataFrame =
+    uiPlan(interactions, cap).localCheckpoint()
+
+  /** [[uiMatrix]] before its checkpoint: the memoized rec_ui artifact
+    * hands this to [[graft.Memo]], which checkpoints it once. */
+  private def uiPlan(interactions: DataFrame, cap: Int): DataFrame = {
     val ui0 = interactions.select(col("u"), col("i")).distinct()
     val keptUsers = ui0.groupBy(col("u"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= cap).select(col("u"))
-    ui0.join(keptUsers, Seq("u"), "left_semi").localCheckpoint()
+    ui0.join(keptUsers, Seq("u"), "left_semi")
   }
 
   /** The item-similarity index: top-`topM` cosine neighbors per item
@@ -232,13 +238,13 @@ object Recommend {
     * degree joins fall back to shuffle-hash on the pair frame's keys. */
   private[graft] def simsTable(ui: DataFrame, coMin: Int,
       nItems: Long): DataFrame =
-    simsPlan(ui, coMin, nItems).localCheckpoint()
+    simsPlan(ui, coMin, nItems).localCheckpoint() // kept: 2 readers
 
   /** [[simsTable]] with the pair estimate already known ([[neighborTable]]
     * computes it once for the top-M cut too). */
   private[graft] def simsTable(ui: DataFrame, coMin: Int,
       nItems: Long, pairsEst: Long): DataFrame =
-    simsPlan(ui, coMin, nItems, pairsEst).localCheckpoint()
+    simsPlan(ui, coMin, nItems, pairsEst).localCheckpoint() // kept: 2 readers
 
   /** The EXACT pair count Σ n_u·(n_u−1)/2 of the co-occurrence
     * self-join — the cardinality that sizes the pair aggregate's
@@ -662,6 +668,7 @@ object Recommend {
     // join on measured rows AND bytes instead of broadcasting
     // unconditionally: past the gate the df lookup rides shuffle-hash
     // on the catalog-sized feats0 stream, correct at any vocabulary.
+    // kept: 2 readers, the gate's measure job + the join
     val dfTab = feats0.groupBy(col("f")).agg(count(lit(1)).as("df"))
       .localCheckpoint()
     val (dfRows, dfBytes) = measuredDim(dfTab, "octet_length(f) + 24")
@@ -852,8 +859,8 @@ object Recommend {
   private[graft] def contentTop(ui: DataFrame, p: DataFrame, cap: Int,
       profTopF: Int, k: Int, idxEst: Option[(Long, Long)]): DataFrame = {
     // item-feature pairs: whole name + brand + type, then the df cap.
-    // catalog-sized (≤3 rows/item); read by the class build and the
-    // profile build — checkpoint so the df-cap subtree runs once.
+    // catalog-sized (≤3 rows/item); kept: 2 readers (class build,
+    // profile build), no shared shuffle under them.
     val feats = contentFeats(p).localCheckpoint()
     // ---- item-profile equivalence classes: the canonical sorted
     // feature set. Everything class-keyed from here is VOCABULARY-
@@ -884,7 +891,7 @@ object Recommend {
       .select(col("i"), col("fs"), concat_ws("|", col("fs")).as("ck"))
       .groupBy(col("ck"))
       .agg(minKItems(col("i")).as("items"), first(col("fs")).as("fs"))
-      .localCheckpoint() // read by the gate measure AND either branch
+      .localCheckpoint() // kept: 2 readers, the gate measure job + a branch
     // ---- class-index gate (count AND measured bytes, the same double
     // bound as `dimHint`/the LSH lookups): the index rows carry
     // data-dependent payloads — feature strings and (cap+k)-item
@@ -1201,7 +1208,7 @@ object Recommend {
   def cfEvalOn(interactions: DataFrame, cap: Int, coMin: Int,
       topM: Int, k: Int): DataFrame = {
     val all = interactions.select(col("u"), col("i")).distinct()
-      .localCheckpoint() // read by the holdout agg AND the train slice
+      .localCheckpoint() // kept: 2 readers, the holdout agg job + train
     // ONE corpus-sized groupBy(u) serves the holdout AND the
     // power-user cap (guide §2.4): the train slice removes exactly one
     // row per holdout user, so the q87-equivalent kept-user set —
@@ -1213,7 +1220,7 @@ object Recommend {
     // skipped too. Same matrix, two corpus passes fewer.
     val hs = all.groupBy(col("u"))
       .agg(max(col("i")).as("held"), count(lit(1)).as("n"))
-      .localCheckpoint() // read by hold (train/hits/n_eval) and the kept set
+      .localCheckpoint() // kept: 4 readers, train, hits, n_eval, kept set
     val hold = hs.filter(col("n") >= EvalMinOwned)
       .select(col("u"), col("held"))
     val train = all.join(
@@ -1222,6 +1229,7 @@ object Recommend {
     val kept = hs.filter(
       when(col("n") >= EvalMinOwned, col("n") - 1).otherwise(col("n"))
         <= cap).select(col("u"))
+    // kept: 5+ readers, as in [[uiMatrix]]
     val ui = train.join(kept, Seq("u"), "left_semi").localCheckpoint()
     // unordered top: recs only feeds the hit join — no presentation sort
     val recs = itemCfTop(ui, coMin, topM, k)

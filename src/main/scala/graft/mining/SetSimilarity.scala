@@ -180,7 +180,7 @@ object SetSimilarity {
 
   /** q22 over a caller-supplied (doc_id, text) corpus. */
   def neardupJaccardOn(docs: DataFrame): DataFrame = {
-    // token sets feed the signature explode AND both verify joins
+    // kept: 3 readers (signature explode, both verify joins), no shuffle
     val toks = tokenSetsOf(docs).localCheckpoint()
     // XOR set-hash signatures (guide §1.2 step 2 — per-task work):
     // the bucket key for "this set minus k elements" is the XOR of
@@ -597,8 +597,8 @@ object SetSimilarity {
     * own at construction. */
   def neardupLshOn(docs: DataFrame,
       estMemoKey: Option[(String, String)] = None): DataFrame = {
-    // same reuse story as q58: the signature and token-set tables feed
-    // multiple join branches — materialize each once
+    // kept (lazy): sigs 3 readers (estimate job, both band sides),
+    // token sets 2 (both verify joins), no shared shuffle under them
     val sigTable = sigsOf(docs, withPayloadBytes = true)
       .localCheckpoint(eager = false)
     val est = lshEstimateMemo(sigTable, LshBands, LshRows, estMemoKey)
@@ -768,7 +768,7 @@ object SetSimilarity {
     * see [[neardupLshOn]]. */
   def shingleNeardupOn(docs: DataFrame,
       estMemoKey: Option[(String, String)] = None): DataFrame = {
-    // localCheckpoint both tables: the shingle build (split → n-gram →
+    // kept (lazy), both tables: the shingle build (split → n-gram →
     // distinct → md5-hash per shingle) feeds five plan branches (band
     // self-join ×2, sig lookups ×2, verify ×2) — recomputing it per
     // branch made q58 the bench's slowest query (12.5 s at sf0.1; the
@@ -837,8 +837,8 @@ object SetSimilarity {
     // explode; the (heavy) shingle arrays stay in a separate static
     // table joined AFTER the sig-agreement filter — an 8× storage
     // amplification of the whole reference index otherwise.
-    // Checkpoints are lazy: the broadcast-size count below (or, for a
-    // stream, the first micro-batch) materializes them once.
+    // Checkpoints are lazy, kept: the broadcast-size count below (or,
+    // for a stream, the first micro-batch) materializes them once.
     val idxSh0 = shingleSetsOf(corpus)
       .select(col("doc_id").as("dup_of"), col("ts").as("sh_b"))
       .localCheckpoint(eager = false)

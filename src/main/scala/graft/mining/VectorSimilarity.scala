@@ -313,7 +313,7 @@ object VectorSimilarity {
     * smallest vec_ids (the q39 init). */
   def semDedupOn(ptsIn: DataFrame, k: Int, threshold: Double)
   : DataFrame = {
-    val pts = ptsIn.localCheckpoint() // seed collect + assignment input
+    val pts = ptsIn.localCheckpoint() // kept: 2 readers, seed collect job
     val cents = pts.filter(col("vec_id") < k).collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
@@ -321,7 +321,7 @@ object VectorSimilarity {
       .select(col("vec_id"), col("a.cid").cast("long").as("cluster"),
         col("vd"))
       .withColumn("nrm", expr("sqrt(graft_dot(vd, vd))"))
-      .localCheckpoint() // both pair-join sides + the verdict join
+      .localCheckpoint() // kept: 3 readers (pair sides, verdict), no shuffle
     val pairs = asg.select(col("cluster"), col("vec_id").as("va"),
         col("vd").as("xa"), col("nrm").as("na"))
       .join(asg.select(col("cluster"), col("vec_id").as("vb"),
@@ -382,7 +382,7 @@ object VectorSimilarity {
     val assign = graft.cluster.KMeans.lloydOn(pts, nlist, 3)
     val lists = pts.join(assign, "vec_id")
       .select(col("vec_id"), col("vd"), col("cluster").as("list_id"))
-      .localCheckpoint()
+      .localCheckpoint() // kept: 3 readers over the Lloyd assignment
     // centroids table for probe selection — per-(list, component)
     // means, the same bounded-state shape as KMeans.lloydOn: a
     // collect_list(vd) per list would buffer a whole IVF list

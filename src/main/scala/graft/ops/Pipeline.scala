@@ -234,7 +234,7 @@ object Pipeline {
         }
       }
       .toDF("doc_id", "n_tokens", "shard")
-      .localCheckpoint() // materialize before unpersisting the rdd
+      .localCheckpoint() // kept: 1 reader; cuts lineage to `rdd`
     rdd.unpersist(false)
     out
   }
@@ -409,7 +409,7 @@ object Pipeline {
     val sig = sigIn
       .select(col("doc_id"), col("source"),
         col("n_tokens").cast("long").as("n_tokens"), col("quality"))
-      .localCheckpoint() // feeds level stats + both admission branches
+      .localCheckpoint() // kept: 3 readers, level collect job + 2 branches
     // phase 1: bounded level summary → driver cumsum per source
     val levels = sig.groupBy(col("source"), col("quality"))
       .agg(sum(col("n_tokens")).as("lt"))
@@ -491,7 +491,7 @@ object Pipeline {
 
   /** q80 over a caller-supplied (doc_id, text) corpus. */
   def leakageSplitOn(docs: DataFrame): DataFrame = {
-    // pair list feeds both the contraction and the violation audit
+    // kept: 2 readers, the contraction's rounds (own jobs) + the audit
     val pairs = SetSimilarity.shingleNeardupOn(docs)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     leakageSplitFrom(docs, pairs, dupClustersFrom(pairs))
@@ -513,7 +513,7 @@ object Pipeline {
       .withColumn("split", expr(
         s"CASE WHEN ${graft.functions.Hashing.h60SparkSql("canon")} " +
           s"% $SplitMod < $SplitTrain THEN 'train' ELSE 'val' END"))
-      .localCheckpoint() // feeds the report + both sides of the audit
+      .localCheckpoint() // kept: 3 readers over the star labels' RDD
     val sp = tagged.select(col("doc_id"), col("split"))
     val viol = pairs
       .join(sp.select(col("doc_id").as("doc_a"), col("split").as("sa")),
@@ -586,7 +586,6 @@ object Pipeline {
         size(expr(Text.toksExpr)).cast("long").as("n_tokens"))
       .join(Text.docQualityOn(docs).select(col("doc_id"), col("quality")),
         "doc_id")
-      .localCheckpoint() // feeds the boundary agg + the staging pass
     val b = t.agg(
       expr("percentile(n_tokens, 0.25D)").as("b1"),
       expr("percentile(n_tokens, 0.5D)").as("b2"),
@@ -646,7 +645,6 @@ object Pipeline {
       .select(col("source"),
         size(expr(Text.toksExpr)).cast("long").as("n_tokens"))
       .groupBy(col("source")).agg(sum(col("n_tokens")).as("n_tokens"))
-      .localCheckpoint() // #sources rows; feeds totals + the weight row
     val tot = per.agg(sum(col("n_tokens")).as("tot"),
       sum(sqrt(col("n_tokens").cast("double"))).as("denom"))
     per.crossJoin(broadcast(tot)) // 1-row scalar frame
@@ -762,7 +760,8 @@ object Pipeline {
 
   /** q85 over a caller-supplied (doc_id, source, text) corpus. */
   def sourceGramOverlapOn(docs: DataFrame): DataFrame =
-    // checkpoint: both sides of the self-join read the gram set
+    // kept: 2 self-join sides; without it each reruns the distinct's
+    // corpus-sized final aggregate (22% slower at sf0.1)
     sourceGramPairsFrom(sourceGramSet(docs).localCheckpoint())
 
   val sourceGramOverlapSql: String =
@@ -804,14 +803,14 @@ object Pipeline {
   /** q86 over a caller-supplied (doc_id, source, text) corpus. */
   def trainPipelineOn(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"), col("source"), col("text"))
-    // one signal pass: curation verdict + mixture quality + shard tokens
+    // kept: 3 readers (curation, mixture quality, shard tokens)
     val sig = Text.signalChainOn(docs)
       .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
         col("quality"), col("repetitive"))
       .localCheckpoint()
     val kept = Text.curationFrom(sig, docs)
       .filter(col("keep")).select(col("doc_id"))
-    // curated corpus: feeds pair detection + source lookup + manifest hash
+    // kept: 3 readers, pair detection (own jobs), source lookup, hash
     val keptDocs = docs.join(kept, Seq("doc_id"), "left_semi")
       .localCheckpoint()
     // the contraction reads the pair list once, as its adjacency
@@ -989,8 +988,6 @@ object Pipeline {
     import org.apache.spark.sql.expressions.Window
     val counts = docs.select(explode(expr(Text.toksExpr)).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      // two consumers (scalar total + top-V): pin the vocab-sized frame
-      .localCheckpoint()
     val totals = counts.agg(sum(col("cnt")).as("total_tokens"))
     // global window — BOUNDED by the literal [[VocabTopV]]: it runs
     // ABOVE the orderBy(...).limit(VocabTopV) below (a distributed
@@ -1067,7 +1064,7 @@ object Pipeline {
       .distinct()
     val ev = grams(evalDocs)
       .select(col("doc_id").as("eval_id"), col("g"))
-      .localCheckpoint() // two consumers: sizes + the probe join
+      .localCheckpoint() // kept: 2 readers; 4% slower at sf0.1 without it
     val evSizes = ev.groupBy(col("eval_id"))
       .agg(count(lit(1)).as("n_eval_grams"))
     grams(corpus)
@@ -1132,7 +1129,6 @@ object Pipeline {
     val obs = docs
       .select(col("source"), explode(expr(Text.toksExpr)).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("obs"))
-      .localCheckpoint() // feeds the grid and both marginals
     val bySource = obs.groupBy(col("source"))
       .agg(sum(col("obs")).as("n_source"))
     val byToken = obs.groupBy(col("token"))
@@ -1221,7 +1217,7 @@ object Pipeline {
         "doc_id")
       .select(col("source"),
         floor(col("quality") * 1e4 + 0.5).cast("long").as("qk"))
-      .localCheckpoint() // feeds the boundary agg + the profile pass
+      .localCheckpoint() // kept: 2 readers; 30% slower at sf0.1 without it
     val b = t.agg(
       expr("percentile(qk, 0.25D)").as("b1"),
       expr("percentile(qk, 0.5D)").as("b2"),

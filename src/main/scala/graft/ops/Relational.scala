@@ -201,10 +201,8 @@ object Relational {
     // the q10 rankTies argument), so `bc_a < bc_b` and the (bc_a,
     // bc_b) grouping are order-isomorphic to the string forms and
     // the decoded result is bit-identical.
-    // checkpointed: the dict feeds the encode join AND both decode
-    // joins — un-checkpointed, Spark copies the subtree per reference
-    // and the catalog-sized distinct would run 3× (25 rows held, the
-    // brand dimension)
+    // kept: 3 readers (encode join, both decode joins); 6% slower at
+    // sf0.1 without it, as each reader reruns the distinct and window
     val dict = part(s, d).select(col("p_brand").as("brand")).distinct()
       .withColumn("bc", row_number().over(Window.orderBy(col("brand"))))
       .localCheckpoint()
@@ -287,7 +285,7 @@ object Relational {
     val hist = lineitem(s, d)
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // pin: the histogram feeds both output + gate
+      .localCheckpoint() // kept: 2 readers; the gate sums the rows shown
     val histTotal = hist.agg(sum(col("cnt")).as("hist_total"),
       count(lit(1)).as("n_partitions"))
     val direct = lineitem(s, d).agg(count(lit(1)).as("direct_total"))
@@ -690,7 +688,7 @@ object Relational {
     * when a 2% estimate is acceptable — the sketch path is q30). */
   def columnProfile(s: SparkSession, d: String): DataFrame = {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val li = lineitem(s, d).select(cols.map(col): _*).localCheckpoint()
+    val li = lineitem(s, d).select(cols.map(col): _*)
     cols.map { c =>
       li.agg(
         lit(c).as("column"),
@@ -1372,7 +1370,6 @@ object Relational {
     val ud = events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint() // feeds the expansion + the max-day scalar
     val mx = ud.agg(max(col("day")).as("mx"))
     ud.select(col("user_id"),
         explode(sequence(col("day"),
@@ -1420,7 +1417,6 @@ object Relational {
       .agg(sum(col("o_totalprice").cast("decimal(18,6)")).as("spend"))
       .join(customer(s, d).select(col("c_custkey").as("o_custkey"),
         col("c_mktsegment")), "o_custkey")
-      .localCheckpoint() // feeds the segment aggregate + the probe
     val seg = spend.groupBy(col("c_mktsegment"))
       .agg(sum(col("spend")).as("seg_total"),
         count(lit(1)).as("n_cust"))
@@ -1471,13 +1467,13 @@ object Relational {
   def madOutliers(s: SparkSession, d: String): DataFrame = {
     val t = events(s, d).select(col("event_type"),
       floor(col("value") * 100 + 0.5).cast("long").as("vk"))
-      .localCheckpoint() // feeds the median agg + the deviation pass
+      .localCheckpoint() // kept: 2 readers; 20% slower at sf0.1 without it
     val med = t.groupBy(col("event_type"))
       .agg(expr("percentile(vk, 0.5D)").as("med"))
     val devs = t.join(broadcast(med), Seq("event_type"))
       .select(col("event_type"), col("med"),
         abs(col("vk").cast("double") - col("med")).as("dev"))
-      .localCheckpoint() // feeds the MAD aggregate + the outlier pass
+      .localCheckpoint() // kept: 2 readers, no shuffle under them
     val mad = devs.groupBy(col("event_type"))
       .agg(expr("percentile(dev, 0.5D)").as("mad"))
     devs.join(broadcast(mad), Seq("event_type"))
@@ -1569,6 +1565,7 @@ object Relational {
     * user's full history, and the stage frames shrink monotonically.
     * The generalization of q78's two-step funnel. */
   def multiStepFunnel(s: SparkSession, d: String): DataFrame = {
+    // kept: 3 readers; 12% slower at sf0.1 without it
     val ev = events(s, d).select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("tsl")).localCheckpoint()
     val horizonUs = FunnelStepHorizonUs
@@ -1730,7 +1727,7 @@ object Relational {
   def stateAtPurchase(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).select(col("user_id"),
       unix_micros(col("ts")).as("tsl"), col("event_id"),
-      col("event_type")).localCheckpoint()
+      col("event_type"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tsl"), col("event_id"))
     val runs = ev.filter(col("event_type") =!= "purchase")
@@ -1912,7 +1909,7 @@ object Relational {
       .groupBy(col("user_id"))
       .agg(max(col("tsl")).as("last_ts"), count(lit(1)).as("f"),
         sum(col("vk")).as("m"))
-      .localCheckpoint() // feeds the median aggregate + the census
+      .localCheckpoint() // kept: 2 readers; 14% slower at sf0.1 without it
     val cuts = perUser.agg(
       expr("percentile(last_ts, 0.5D)").as("r_med"),
       expr("percentile(f, 0.5D)").as("f_med"),
@@ -2047,7 +2044,7 @@ object Relational {
     val obs = events(s, d)
       .groupBy(col("event_type"), (weekday(col("ts")) + 1).as("dow"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds both marginals + the scored scan
+      .localCheckpoint() // kept: 4 readers; 2 more stages without it
     val byType = obs.groupBy(col("event_type"))
       .agg(sum(col("cnt")).as("t_tot"))
     val byDow = obs.groupBy(col("dow")).agg(sum(col("cnt")).as("d_tot"))
@@ -2093,7 +2090,6 @@ object Relational {
     val h = 24L * 3600L * 1000000L
     val ev = events(s, d).select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("tsl"), col("event_id"))
-      .localCheckpoint()
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("tsl").as("v_ts"),
         col("event_id").as("v_id"))

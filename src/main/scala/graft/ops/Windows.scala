@@ -250,7 +250,9 @@ object Windows {
       .select(col("user_id"), col("session_start").as("sess"),
         explode(array_distinct(split(col("path"), ">")))
           .as("event_type"))
-      .localCheckpoint() // feeds N, marginals, and both join sides
+      // kept: 4 readers; without it each reruns the per-session path
+      // aggregate above the shared shuffle (42% slower at sf0.1)
+      .localCheckpoint()
     val n = st.select(col("user_id"), col("sess")).distinct()
       .agg(count(lit(1)).as("n_sessions"))
     val marg = st.groupBy(col("event_type"))

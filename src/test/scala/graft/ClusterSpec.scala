@@ -185,11 +185,11 @@ class ClusterSpec extends AnyFunSuite {
     pts.count()
     val init = pts.take(Bfr.K).map { case (id, p, _) => (id.toInt, p) }.toSeq
     val ds = twoSummaries(pts)
-    val (_, lloydJobs, lloydSql) = TestUtil.countRuns(spark)(
+    val (_, lloydJobs, lloydSql, _) = TestUtil.countRuns(spark)(
       KMeans.lloydCentroids(pts, Bfr.K, 1, Some(init)))
     assert(lloydJobs.size == 1, lloydJobs.mkString("\n"))
     assert(lloydSql.isEmpty, lloydSql.mkString("\n"))
-    val (_, roundJobs, roundSql) = TestUtil.countRuns(spark)(
+    val (_, roundJobs, roundSql, _) = TestUtil.countRuns(spark)(
       Bfr.chunkRound(pts, 100L, 200L, ds, Array.empty, Bfr.RsCap, thresh64))
     assert(roundJobs.size == 1, roundJobs.mkString("\n"))
     assert(roundSql.isEmpty, roundSql.mkString("\n"))

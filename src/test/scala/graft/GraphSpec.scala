@@ -447,18 +447,18 @@ class GraphSpec extends AnyFunSuite {
       assert(jobs.size == n, s"$name:\n" + jobs.mkString("\n"))
       assert(sqls.isEmpty, s"$name:\n" + sqls.mkString("\n"))
     }
-    val (_, lpaJobs, lpaSql) = runs(Graphs.lpaLabels(adj))
+    val (_, lpaJobs, lpaSql, _) = runs(Graphs.lpaLabels(adj))
     pin("lpa", lpaJobs, lpaSql, Graphs.LpaIters)
-    val ((_, rounds), ccJobs, ccSql) = runs(Graphs.ccLabels(adj))
+    val ((_, rounds), ccJobs, ccSql, _) = runs(Graphs.ccLabels(adj))
     pin("cc", ccJobs, ccSql, rounds)
     // + the node count / the seed takeOrdered
-    val (_, prJobs, prSql) = runs(Graphs.ranks(adj, None))
+    val (_, prJobs, prSql, _) = runs(Graphs.ranks(adj, None))
     pin("pagerank", prJobs, prSql, Graphs.PrIters + 1)
-    val (_, pprJobs, pprSql) = runs(Graphs.ranks(adj, Some(Graphs.PprSeedK)))
+    val (_, pprJobs, pprSql, _) = runs(Graphs.ranks(adj, Some(Graphs.PprSeedK)))
     pin("ppr", pprJobs, pprSql, Graphs.PrIters + 1)
-    val ((_, kRounds), kJobs, kSql) = runs(Graphs.kcorePeel(adj, 3))
+    val ((_, kRounds), kJobs, kSql, _) = runs(Graphs.kcorePeel(adj, 3))
     pin("kcore", kJobs, kSql, kRounds)
-    val ((_, sRounds), sJobs, sSql) = runs(Graphs.starLabels(adj))
+    val ((_, sRounds), sJobs, sSql, _) = runs(Graphs.starLabels(adj))
     pin("star", sJobs, sSql, sRounds)
     Sessions.dropCheckpoints(spark)
   }

@@ -190,8 +190,26 @@ class MemoSpec extends AnyFunSuite {
       release.countDown()
       t.join(60000)
     }
-    // after the build completes, the same ids are owned the normal way
-    assert(buildIds.subsetOf(Memo.liveIds(spark)))
+    // after the build completes the entry owns its own checkpoint and
+    // releases the builder's to the next sweep
+    val live = Memo.liveIds(spark)
+    assert(live.nonEmpty && (buildIds & live).isEmpty, s"$buildIds $live")
+    Memo.clear(spark)
+  }
+
+  test("q87 and q89 leave only the memo entries' own frames persisted: " +
+      "one checkpoint each, no build intermediates") {
+    Memo.clear(spark)
+    Sessions.dropCheckpoints(spark)
+    Seq("q87_item_cf", "q89_content_rec")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir).count())
+    Sessions.dropCheckpoints(spark)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val live = Memo.liveIds(spark)
+    // rec_ui, rec_cf, rec_cn: no second copy of the ui matrix, no sims
+    // table, no class, feature or df table
+    assert(live.size == 3 && persisted == live,
+      s"persisted $persisted, memo-owned $live")
     Memo.clear(spark)
   }
 

@@ -950,4 +950,33 @@ class RelationalSpec extends AnyFunSuite {
         (r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4))).toMap
     assert(got == want)
   }
+
+  /** Build jobs (`fn(spark, dir)`, memo cold) at sf0.001, as
+    * graft.JobListProbe counts them, of every query that lost a
+    * checkpoint: a deleted one, or rec_ui's second copy (q87, q89,
+    * q92). Each is below the parent's count. */
+  private val buildJobPins = Seq(
+    "q75_column_profile" -> 0, "q81_curriculum" -> 0,
+    "q83_mixture_weights" -> 0, "q87_item_cf" -> 21,
+    "q88_lm_quality" -> 1, "q89_content_rec" -> 24,
+    "q92_hybrid_rec" -> 40, "q110_approx_quantiles" -> 0,
+    "q111_vocab_encode" -> 0, "q114_source_drift" -> 0,
+    "q119_rolling_active" -> 0, "q124_segment_whales" -> 0,
+    "q128_state_at_purchase" -> 0, "q137_attribution_models" -> 0)
+
+  test("job pins: queries that dropped a checkpoint build in the " +
+      "probe's job count") {
+    val out = java.nio.file.Files.createTempDirectory("build-jobs").toString
+    val got = buildJobPins.map { case (q, _) =>
+      val fn = SparkEntry.queries(q)
+      fn(spark, sfDir).write.mode("overwrite").parquet(out) // warm
+      Memo.clear(spark)
+      Sessions.dropCheckpoints(spark)
+      val (_, build) = TestUtil.countJobs(spark)(fn(spark, sfDir))
+      Memo.clear(spark)
+      Sessions.dropCheckpoints(spark)
+      q -> build.size
+    }
+    assert(got == buildJobPins)
+  }
 }

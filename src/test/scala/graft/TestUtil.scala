@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
@@ -15,22 +15,29 @@ object TestUtil {
     * (the callsite-bearing stage names say WHAT ran; the optional
     * description is usually absent for library-triggered jobs). */
   def countJobs[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
-    val (out, jobs, _) = countRuns(spark)(body)
+    val (out, jobs, _, _) = countRuns(spark)(body)
     (out, jobs)
   }
 
   /** [[countJobs]] plus one line per SQL execution (a Dataset action
-    * planned through Catalyst) that `body` started: "sql <id>: <desc>".
-    * Every job and execution was SUBMITTED synchronously inside `body`,
-    * so its event is already queued: the bus is drained before the
-    * lists are read. */
+    * planned through Catalyst) that `body` started: "sql <id>: <desc>",
+    * and one line per stage that ran: "stage <id>: <name> (<n> tasks)".
+    * A stage a job skipped (its shuffle output already exists) never
+    * completes, so it is not listed. Every job and execution was
+    * SUBMITTED synchronously inside `body`, and `body` returns only
+    * after its jobs finished, so every event is already queued: the bus
+    * is drained before the lists are read. This is the one test-side
+    * listener; job pins and [[JobListProbe]] read it. */
   def countRuns[A](spark: SparkSession)(body: => A)
-  : (A, Seq[String], Seq[String]) = {
-    val jobs, sqls = new ConcurrentLinkedQueue[String]()
+  : (A, Seq[String], Seq[String], Seq[String]) = {
+    val jobs, sqls, stages = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.add(s"job ${j.jobId}: " +
           j.stageInfos.map(_.name).mkString(" ~ "))
+      override def onStageCompleted(st: SparkListenerStageCompleted): Unit =
+        stages.add(s"stage ${st.stageInfo.stageId}: ${st.stageInfo.name} " +
+          s"(${st.stageInfo.numTasks} tasks)")
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart =>
           sqls.add(s"sql ${x.executionId}: ${x.description}")
@@ -42,7 +49,7 @@ object TestUtil {
       val out = body
       org.apache.spark.GraftSparkInternals
         .waitUntilListenerBusEmpty(spark.sparkContext)
-      (out, jobs.asScala.toSeq, sqls.asScala.toSeq)
+      (out, jobs.asScala.toSeq, sqls.asScala.toSeq, stages.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

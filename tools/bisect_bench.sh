@@ -16,6 +16,10 @@
 # Reads: ~20-40 min for 2 passes at sf0.1. Each binary runs from its
 # own scratch cwd so neither touches the repo's bench_queries.json
 # baseline.
+# Builds <prev-commit> in a git worktree, or uses the tree named by
+# AB_BASE_TREE, which must hold that commit's files. The current side
+# is the working tree: with uncommitted changes HEAD is not what runs,
+# so the summary labels it "worktree" and names HEAD only as its base.
 set -euo pipefail
 PREV=${1:?usage: tools/bisect_bench.sh <prev-commit> [sf_dir] [passes]}
 SF=${2:-/root/testdata/sf0.1}
@@ -27,12 +31,18 @@ cd "$(git rev-parse --show-toplevel)"
 # assume one format)
 PREVSHA=$(git rev-parse --short=12 "$PREV")
 CURSHA=$(git rev-parse --short=12 HEAD)
-WT="target/bisect_wt_$PREVSHA"
-
-if [ ! -d "$WT" ]; then
-  git worktree add "$WT" "$PREV"
+if [ -n "$(git status --porcelain --untracked-files=no -- src build.sbt project)" ]; then
+  CURLABEL="worktree"
+  echo "[bisect] current side: uncommitted changes over HEAD $CURSHA" >&2
+else
+  CURLABEL="$CURSHA"
 fi
-echo "[bisect] compiling HEAD ($CURSHA) and $PREVSHA ..."
+WT=${AB_BASE_TREE:-target/bisect_wt_$PREVSHA}
+if [ ! -d "$WT" ]; then
+  git worktree add --detach "$WT" "$PREV"
+fi
+WT=$(cd "$WT" && pwd)
+echo "[bisect] compiling the current tree ($CURLABEL) and $PREVSHA ..."
 sbt -batch compile
 (cd "$WT" && sbt -batch compile)
 
@@ -71,12 +81,12 @@ run_one() { # $1 = classes dir (absolute), $2 = label, $3 = scratch cwd,
 ROOT=$(pwd)
 declare -a CUR_TOTALS PREV_TOTALS
 run_prev() {
-  PREV_TOTALS+=("$(run_one "$ROOT/$WT/target/scala-2.13/classes" \
+  PREV_TOTALS+=("$(run_one "$WT/target/scala-2.13/classes" \
     "prev $PREVSHA p$pass" "target/bisect_run_prev" "$PREVSHA")")
 }
 run_cur() {
   CUR_TOTALS+=("$(run_one "$ROOT/target/scala-2.13/classes" \
-    "cur  $CURSHA p$pass" "target/bisect_run_cur" "$CURSHA")")
+    "cur  $CURLABEL p$pass" "target/bisect_run_cur" "$CURLABEL")")
 }
 # the side that runs first swaps every pass, so a drift inside a pass
 # does not always favour the same side
@@ -85,7 +95,7 @@ for pass in $(seq 1 "$PASSES"); do
   if [ $((pass % 2)) -eq 1 ]; then run_prev; run_cur; else run_cur; run_prev; fi
 done
 
-python3 - "$PREVSHA" "$CURSHA" "${PREV_TOTALS[@]}" -- "${CUR_TOTALS[@]}" <<'EOF'
+python3 - "$PREVSHA" "$CURLABEL" "${PREV_TOTALS[@]}" -- "${CUR_TOTALS[@]}" <<'EOF'
 import statistics, sys
 a = sys.argv[1:]
 prevsha, cursha = a[0], a[1]
